@@ -45,24 +45,21 @@ final class EngineSession(
   def executeStatement(
       statement: String,
       mode: ResultMode = ResultMode.Full,
-      timeoutMs: Long = 0)(implicit ec: ExecutionContext): ExecuteStatement = {
-    touch()
-    val op = new ExecuteStatement(this, statement, mode)
-    ops.put(op.handle, op)
-    if (timeoutMs > 0) op.armTimeout(timeoutMs, Operation.timeoutScheduler)
-    op.run()
-    op
-  }
+      timeoutMs: Long = 0)(implicit ec: ExecutionContext): ExecuteStatement =
+    start(new ExecuteStatement(this, statement, mode), timeoutMs)
 
   /** Run a metadata-style DataFrame builder under the operation
     * lifecycle (registered like any statement, so engine-wide lookup,
     * cancel, and rowset paging all apply).
     */
-  def executeMetadata(build: org.apache.spark.sql.SparkSession => DataFrame)(
-      implicit ec: ExecutionContext): DataFrameOperation = {
+  def executeMetadata(build: SparkSession => DataFrame)(
+      implicit ec: ExecutionContext): DataFrameOperation =
+    start(new DataFrameOperation(this, build), 0)
+
+  private def start[O <: Operation](op: O, timeoutMs: Long)(implicit ec: ExecutionContext): O = {
     touch()
-    val op = new DataFrameOperation(this, build)
     ops.put(op.handle, op)
+    if (timeoutMs > 0) op.armTimeout(timeoutMs, Operation.timeoutScheduler)
     op.run()
     op
   }

@@ -7,7 +7,8 @@ package graft.core
   *  - `fetchNext()` advances the window to start at the current
   *    position;
   *  - `fetchAbsolute(pos)` / `fetchPrior(n)` reposition (clamped);
-  *  - `getFetchStart` / `getPosition` expose the window bounds.
+  *  - `getFetchStart` / `getPosition` expose the window bounds;
+  *  - `fetch(orientation, max)` is the one paging step every wire runs.
   *
   * Two implementations: over a fully-materialized array (collect /
   * bounded collect results) and over a one-shot iterator (incremental
@@ -30,6 +31,28 @@ trait FetchIterator[A] extends Iterator[A] {
 
   /** Current cursor offset (rows consumed so far). */
   def getPosition: Long
+
+  /** Reposition for `orientation`, then take up to `max` rows. */
+  def fetch(orientation: FetchOrientation, max: Int): Seq[A] = {
+    orientation match {
+      case FetchOrientation.Next => fetchNext()
+      case FetchOrientation.Prior => fetchPrior(max)
+      case FetchOrientation.First => fetchAbsolute(0)
+      case FetchOrientation.Absolute(pos) => fetchAbsolute(pos)
+    }
+    take(max).toVector
+  }
+}
+
+/** Where a fetch block starts: the reference's FETCH_NEXT / FETCH_PRIOR /
+  * FETCH_FIRST orientations plus an absolute row offset.
+  */
+sealed trait FetchOrientation
+object FetchOrientation {
+  case object Next extends FetchOrientation
+  case object Prior extends FetchOrientation
+  case object First extends FetchOrientation
+  final case class Absolute(offset: Long) extends FetchOrientation
 }
 
 class ArrayFetchIterator[A](src: Array[A]) extends FetchIterator[A] {

@@ -3,10 +3,13 @@ package graft.core
 import java.util.UUID
 import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
 
+import scala.collection.View
 import scala.concurrent.{ExecutionContext, Future, Promise}
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Async operation with lifecycle state, cancellation via Spark job
   * groups, and a query-timeout monitor — the gateway behavior of the
@@ -324,6 +327,19 @@ object ResultMode {
   final case class Arrow(maxRecordsPerBatch: Int = 10000) extends ResultMode
 }
 
+/** An operation with a result: once it finishes, every wire reads the
+  * schema and pages the rows through this one surface.
+  */
+trait ResultOperation extends Operation {
+  @volatile protected var resultDF: DataFrame = _
+  @volatile protected var iter: FetchIterator[Row] = _
+
+  def result: DataFrame = resultDF
+  /** Empty until the result compiles (and for a failed operation). */
+  def resultSchema: StructType = if (resultDF == null) new StructType() else resultDF.schema
+  def fetchIterator: FetchIterator[Row] = iter
+}
+
 /** SQL execution operation: `spark.sql(statement)` + the four
   * result-materialization strategies, exposing a FetchIterator over
   * rows.
@@ -332,39 +348,27 @@ class ExecuteStatement(
     session: EngineSession,
     val statement: String,
     mode: ResultMode = ResultMode.Full)
-  extends Operation(session) {
+  extends Operation(session) with ResultOperation {
 
-  @volatile private var resultDF: DataFrame = _
-  @volatile private var iter: FetchIterator[Row] = _
   @volatile private var arrowIter: FetchIterator[Array[Byte]] = _
   @volatile private var spillPath: Option[String] = None
 
-  def result: DataFrame = resultDF
-  def fetchIterator: FetchIterator[Row] = iter
   /** Pages of IPC-serialized Arrow record batches (ResultMode.Arrow). */
   def arrowIterator: FetchIterator[Array[Byte]] = arrowIter
 
   override protected def runInternal(): Unit = {
     resultDF = session.spark.sql(statement)
     setState(OperationState.Compiled)
-    mode match {
-      case ResultMode.Arrow(maxPerBatch) =>
-        arrowIter = new ArrayFetchIterator(
-          org.apache.spark.sql.graft.ArrowHelper
-            .collectAsArrowBatches(resultDF, maxPerBatch).toArray)
-        iter = new ArrayFetchIterator(Array.empty[Row])
-        return
-      case _ =>
-    }
+    // a re-creatable view over toLocalIterator: partition-at-a-time paging
+    def streamed(df: DataFrame) =
+      new IterableFetchIterator(View.fromIteratorProvider(() => df.toLocalIterator().asScala))
     iter = mode match {
       case ResultMode.Full =>
         new ArrayFetchIterator(resultDF.collect())
       case ResultMode.Bounded(n) =>
         new ArrayFetchIterator(resultDF.take(n))
       case ResultMode.Incremental =>
-        new IterableFetchIterator(new Iterable[Row] {
-          override def iterator: Iterator[Row] = resultDF.toLocalIterator().asScala
-        })
+        streamed(resultDF)
       case ResultMode.SaveToFile(dir, minRows) =>
         // Spill only when the result is KNOWN (stats) or OBSERVED
         // (bounded probe) to be big: without CBO, rowCount is None, and
@@ -380,17 +384,17 @@ class ExecuteStatement(
             .format("orc")
             .save(path)
           spillPath = Some(path)
-          val back = session.spark.read
+          streamed(session.spark.read
             .schema(resultDF.schema)
-            .format("orc").load(path)
-          new IterableFetchIterator(new Iterable[Row] {
-            override def iterator: Iterator[Row] = back.toLocalIterator().asScala
-          })
+            .format("orc").load(path))
         } else {
           new ArrayFetchIterator(probe)
         }
-      case ResultMode.Arrow(_) =>
-        throw new IllegalStateException("Arrow handled above")
+      case ResultMode.Arrow(maxPerBatch) =>
+        arrowIter = new ArrayFetchIterator(
+          org.apache.spark.sql.graft.ArrowHelper
+            .collectAsArrowBatches(resultDF, maxPerBatch).toArray)
+        new ArrayFetchIterator(Array.empty[Row])
     }
   }
 
@@ -409,31 +413,17 @@ class ExecuteStatement(
       } catch { case _: Throwable => }
     }
   }
-
-  implicit private class RichJIterator[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      override def hasNext: Boolean = it.hasNext
-      override def next(): A = it.next()
-    }
-  }
 }
 
 /** A DataFrame-producing operation (the metadata-operation family:
   * catalogs/schemas/tables/columns/functions/typeInfo…): the builder
-  * runs under the operation lifecycle and the result pages through
-  * the same FetchIterator surface ExecuteStatement exposes, so REST
-  * rowset / resultsetmetadata fetches serve both uniformly (reference
+  * runs under the operation lifecycle and the result is collected, so
+  * every wire pages it exactly as it pages a statement's (reference
   * SessionsResource metadata operations → OperationsResource rowset).
   */
 class DataFrameOperation(session: EngineSession,
-    build: org.apache.spark.sql.SparkSession => DataFrame)
-  extends Operation(session) {
-
-  @volatile private var resultDF: DataFrame = _
-  @volatile private var iter: FetchIterator[Row] = _
-
-  def result: DataFrame = resultDF
-  def fetchIterator: FetchIterator[Row] = iter
+    build: SparkSession => DataFrame)
+  extends Operation(session) with ResultOperation {
 
   override protected def runInternal(): Unit = {
     resultDF = build(session.spark)

@@ -2,14 +2,17 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, TimeUnit}
 
 import scala.concurrent.ExecutionContext
 import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import graft.core.{Engine, EngineSession, Events, ExecuteStatement, Metrics, Operation, OperationState, ResultMode}
+import org.apache.spark.sql.graft.ResultEncoders
+
+import graft.core.{Engine, EngineSession, Events, ExecuteStatement, FetchOrientation, Metrics,
+  Operation, OperationState, ResultMode, ResultOperation}
 
 /** Minimal HTTP/JSON frontend over the engine — the gateway's network
   * entry point (the reference exposes REST alongside Thrift:
@@ -98,8 +101,11 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     "adminUsers requires a configured restAuth provider: admin verbs " +
       "must authenticate the asserted identity, not trust it")
 
-  private implicit val ec: ExecutionContext =
-    ExecutionContext.fromExecutor(Executors.newFixedThreadPool(8))
+  // The statement pool and the HTTP worker pool belong to this frontend:
+  // named threads, shut down by stop().
+  private val execPool = RestFrontend.namedPool("graft-rest-exec")
+  private val httpPool = RestFrontend.namedPool("graft-rest-http")
+  private implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(execPool)
 
   // keyed by batch id (== the submitting operation's handle, except for
   // recovered batches, which keep their original id over a new op)
@@ -283,11 +289,11 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     * never a NumberFormatException-turned-500 (the GET /events limit
     * contract, r10 ADVICE, applied to every client-parsed number).
     */
-  private def intParam(ex: HttpExchange, name: String,
-      default: Int): Either[String, Int] =
+  private def numParam[A](ex: HttpExchange, name: String,
+      default: A)(parse: String => A): Either[String, A] =
     queryParam(ex, name) match {
       case None => Right(default)
-      case Some(raw) => scala.util.Try(raw.trim.toInt).toOption.toRight(raw)
+      case Some(raw) => scala.util.Try(parse(raw.trim)).toOption.toRight(raw)
     }
 
   private def badParam(ex: HttpExchange, name: String, raw: String): Unit =
@@ -347,7 +353,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         java.net.http.HttpResponse.BodyHandlers.ofString())
       Some((r.statusCode(), r.body()))
     } catch { case _: Throwable => None }
-  server.setExecutor(Executors.newFixedThreadPool(8))
+  server.setExecutor(httpPool)
   server.createContext("/api/v1/", handle _)
   server.createContext("/v1/statement", handleTrino _)
   server.createContext("/ui", handleUi _)
@@ -363,20 +369,16 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
   private def handleUi(ex: HttpExchange): Unit = {
     def esc(s: String): String = s.replace("&", "&amp;").replace("<", "&lt;")
       .replace(">", "&gt;").replace("\"", "&quot;")
-    def page(status: Int, title: String, bodyHtml: String): Unit = {
-      val html = s"""<!DOCTYPE html><html lang="en"><head><meta charset="utf-8">
+    def html(status: Int, doc: String): Unit = reply(ex, status, doc, "text/html; charset=utf-8")
+    def page(status: Int, title: String, bodyHtml: String): Unit =
+      html(status, s"""<!DOCTYPE html><html lang="en"><head><meta charset="utf-8">
         |<title>${esc(title)}</title><style>
         |body { font-family: system-ui, sans-serif; margin: 1.5rem; color: #1a1a1a; }
         |h1 { font-size: 1.2rem; } table { border-collapse: collapse; min-width: 30rem; }
         |th, td { border: 1px solid #ccc; padding: .3rem .6rem; font-size: .85rem; text-align: left; }
         |th { background: #f2f2f2; } pre { background: #f7f7f7; padding: .6rem; font-size: .8rem; }
         |</style></head><body><p><a href="/ui">&larr; overview</a></p>
-        |<h1>${esc(title)}</h1>$bodyHtml</body></html>""".stripMargin
-      val bytes = html.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-      ex.sendResponseHeaders(status, bytes.length)
-      ex.getResponseBody.write(bytes)
-    }
+        |<h1>${esc(title)}</h1>$bodyHtml</body></html>""".stripMargin)
     def stmtOf(op: Operation): String = op match {
       case e: ExecuteStatement => e.statement
       case other => other.getClass.getSimpleName
@@ -392,16 +394,8 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       val segs = ex.getRequestURI.getPath.stripPrefix("/ui").split("/")
         .toList.filter(_.nonEmpty)
       segs match {
-        case Nil =>
-          val bytes = RestFrontend.UiPage.getBytes(StandardCharsets.UTF_8)
-          ex.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
-        case "sql" :: Nil =>
-          val bytes = RestFrontend.SqlLabPage.getBytes(StandardCharsets.UTF_8)
-          ex.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-          ex.sendResponseHeaders(200, bytes.length)
-          ex.getResponseBody.write(bytes)
+        case Nil => html(200, RestFrontend.UiPage)
+        case "sql" :: Nil => html(200, RestFrontend.SqlLabPage)
         // All live sessions across every share scope (reference
         // web-ui Session Management page)
         case "sessions" :: Nil =>
@@ -848,6 +842,9 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     metadataCleaner.foreach(_.shutdownNow())
     submitterThreads.foreach(_.interrupt())
     server.stop(0)
+    // shut both pools, then give in-flight work a bounded time to drain
+    Seq(httpPool, execPool).foreach(_.shutdown())
+    Seq(httpPool, execPool).foreach(_.awaitTermination(10, TimeUnit.SECONDS))
     Events.unregister(metrics)
     Events.unregister(eventLog)
     Events.unregister(sessionCloseListener)
@@ -897,33 +894,15 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
 
       case ("GET", "sessions" :: sid :: "statements" :: opId :: "result" :: Nil) =>
         withOp(ex, sid, opId) { op =>
-          if (!op.currentState.terminal) reply(ex, 409, s"""{"state": ${q(op.currentState.toString)}}""")
-          else if (op.currentState != OperationState.Finished)
-            reply(ex, 400, s"""{"state": ${q(op.currentState.toString)}}""")
-          else {
-            // serve from the operation's materialized fetch iterator —
-            // never re-execute the statement for a result page
-            val query = Option(ex.getRequestURI.getQuery).getOrElse("")
-            def param(name: String): Option[String] =
-              query.split("&").find(_.startsWith(s"$name=")).map(_.stripPrefix(s"$name="))
-            val maxRowsE = param("maxRows")
-              .map(r => scala.util.Try(r.trim.toInt).toOption.toRight(r))
-              .getOrElse(Right(1000))
-            val offsetE = param("offset")
-              .map(r => scala.util.Try(r.trim.toLong).toOption.toRight(r))
-              .getOrElse(Right(-1L))
-            (maxRowsE, offsetE) match {
+          whenFinished(ex, op) {
+            (numParam(ex, "maxRows", 1000)(_.toInt), numParam(ex, "offset", -1L)(_.toLong)) match {
               case (Left(raw), _) => badParam(ex, "maxRows", raw)
               case (_, Left(raw)) => badParam(ex, "offset", raw)
               case (Right(maxRows), Right(offset)) =>
-                val it = op.fetchIterator
-                if (offset >= 0) it.fetchAbsolute(offset) else it.fetchNext()
-                val page = it.take(maxRows).toArray
-                val json = op.result.sparkSession
-                  .createDataFrame(java.util.Arrays.asList(page: _*), op.result.schema)
-                  .toJSON.collect()
-                reply(ex, 200,
-                  s"""{"offset": ${it.getFetchStart}, "rows": [${json.mkString(",")}]}""")
+                val (start, json) = jsonPage(op,
+                  if (offset >= 0) FetchOrientation.Absolute(offset) else FetchOrientation.Next,
+                  maxRows)
+                reply(ex, 200, s"""{"offset": $start, "rows": [${json.mkString(",")}]}""")
             }
           }
         }
@@ -1035,10 +1014,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // Prometheus scrape target (reference kyuubi-metrics
       // PrometheusReporter surface).
       case ("GET", "metrics" :: "prometheus" :: Nil) =>
-        val bytes = metrics.asPrometheus.getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4; charset=utf-8")
-        ex.sendResponseHeaders(200, bytes.length)
-        ex.getResponseBody.write(bytes)
+        reply(ex, 200, metrics.asPrometheus, "text/plain; version=0.0.4; charset=utf-8")
 
       // ---- admin surface (reference kyuubi-server api/v1
       // {Sessions,Operations,Admin,Batches}Resource listing/cancel
@@ -1105,10 +1081,8 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // schema as (columnName, dataType, nullable) rows.
       case ("GET", "operations" :: opId :: "resultsetmetadata" :: Nil) =>
         findOp(opId) match {
-          case Some(op) if op.currentState == OperationState.Finished &&
-              rowSetResult(op).isDefined =>
-            val (df, _) = rowSetResult(op).get
-            val cols = df.schema.fields.map(f =>
+          case Some(op: ResultOperation) if op.currentState == OperationState.Finished =>
+            val cols = op.resultSchema.fields.map(f =>
               s"""{"columnName": ${q(f.name)}, "dataType": ${q(
                 f.dataType.simpleString)}, "nullable": ${f.nullable}}""")
             reply(ex, 200, s"""{"columns": [${cols.mkString(",")}]}""")
@@ -1121,7 +1095,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // operation log lines (available WHILE the op runs).
       case ("GET", "operations" :: opId :: "log" :: Nil) =>
         findOp(opId) match {
-          case Some(op) => intParam(ex, "maxrows", 100) match {
+          case Some(op) => numParam(ex, "maxrows", 100)(_.toInt) match {
             case Left(raw) => badParam(ex, "maxrows", raw)
             case Right(max) =>
               val lines = op.fetchLog(math.max(1, math.min(max, 10000)))
@@ -1136,26 +1110,18 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // the REST twin of Thrift FetchResults.
       case ("GET", "operations" :: opId :: "rowset" :: Nil) =>
         findOp(opId) match {
-          case Some(op) if rowSetResult(op).isDefined =>
-            if (!op.currentState.terminal)
-              reply(ex, 409, s"""{"state": ${q(op.currentState.toString)}}""")
-            else if (op.currentState != OperationState.Finished)
-              reply(ex, 400, s"""{"state": ${q(op.currentState.toString)}, "error": ${q(
-                op.exception.map(t => String.valueOf(t.getMessage)).getOrElse("operation did not finish"))}}""")
-            else intParam(ex, "maxrows", 100) match {
-              case Left(raw) => badParam(ex, "maxrows", raw)
-              case Right(rawMax) =>
-              val (df, it) = rowSetResult(op).get
-              val max = math.max(1, math.min(rawMax, 100000))
-              queryParam(ex, "fetchorientation").getOrElse("FETCH_NEXT") match {
-                case "FETCH_PRIOR" => it.fetchPrior(max.toLong)
-                case _ => it.fetchNext()
+          case Some(op: ResultOperation) =>
+            whenFinished(ex, op) {
+              numParam(ex, "maxrows", 100)(_.toInt) match {
+                case Left(raw) => badParam(ex, "maxrows", raw)
+                case Right(rawMax) =>
+                  val orientation = queryParam(ex, "fetchorientation") match {
+                    case Some("FETCH_PRIOR") => FetchOrientation.Prior
+                    case _ => FetchOrientation.Next
+                  }
+                  val (start, json) = jsonPage(op, orientation, math.max(1, math.min(rawMax, 100000)))
+                  reply(ex, 200, s"""{"offset": $start, "rowCount": ${json.length}, "rows": [${json.mkString(",")}]}""")
               }
-              val page = it.take(max).toArray
-              val json = df.sparkSession
-                .createDataFrame(java.util.Arrays.asList(page: _*), df.schema)
-                .toJSON.collect()
-              reply(ex, 200, s"""{"offset": ${it.getFetchStart}, "rowCount": ${json.length}, "rows": [${json.mkString(",")}]}""")
             }
           case Some(_) =>
             reply(ex, 400, """{"error": "operation has no rowset"}""")
@@ -1536,6 +1502,15 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
           val sql = body(ex).trim
           if (sql.isEmpty) { reply(ex, 400, """{"error": "empty statement"}"""); return }
           val user = Option(ex.getRequestHeaders.getFirst("X-Trino-User")).getOrElse("trino")
+          // each query runs in an engine session of its own, closed once
+          // the client has its final data document
+          def startQuery(query: String): Unit = {
+            val sess = engine.openSession(user)
+            applyTrinoSession(ex, sess)
+            val op = sess.executeStatement(query, ResultMode.Full)
+            opSessions.put(op.handle, sess)
+            reply(ex, 200, trinoDoc(op, op.currentState, firstPoll = true))
+          }
           sql match {
             // PREPARE name FROM sql — bookkeeping lives on the CLIENT
             // in the Trino protocol: the server echoes the prepared
@@ -1594,24 +1569,24 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
                   val args = Option(params).map(splitTopLevelCommas).getOrElse(Nil)
                   bindTrinoParams(origin, args) match {
                     case Left(err) => reply(ex, 400, s"""{"error": ${q(err)}}""")
-                    case Right(bound) =>
-                      val sess = engine.openSession(user)
-                      applyTrinoSession(ex, sess)
-                      val op = sess.executeStatement(bound, ResultMode.Full)
-                      opSessions.put(op.handle, sess)
-                      reply(ex, 200, trinoDoc(op, firstPoll = true))
+                    case Right(bound) => startQuery(bound)
                   }
               }
-            case _ =>
-              val sess = engine.openSession(user)
-              applyTrinoSession(ex, sess)
-              val op = sess.executeStatement(sql, ResultMode.Full)
-              opSessions.put(op.handle, sess)
-              reply(ex, 200, trinoDoc(op, firstPoll = true))
+            case _ => startQuery(sql)
           }
         case ("GET", opId :: _ :: Nil) =>
           Option(opSessions.get(opId)).flatMap(_.operation(opId)) match {
-            case Some(op: ExecuteStatement) => reply(ex, 200, trinoDoc(op, firstPoll = false))
+            case Some(op: ExecuteStatement) =>
+              val state = op.currentState
+              val doc = trinoDoc(op, state, firstPoll = false)
+              try reply(ex, 200, doc)
+              finally if (state == OperationState.Finished) {
+                // the data document is the query's last: release the
+                // client, then close the query's engine session
+                ex.close()
+                opSessions.remove(opId)
+                engine.closeSession(op.session.id)
+              }
             case _ => reply(ex, 404, """{"error": "no such query"}""")
           }
         // Trino clients cancel by DELETEing the statement URI (either
@@ -1807,9 +1782,11 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       s""" "failureInfo": {"type": ${q(name)}, "message": ${q(msg)}}}"""
   }
 
-  private def trinoDoc(op: ExecuteStatement, firstPoll: Boolean): String = {
+  /** The Trino document for `op` in operation state `st`. */
+  private def trinoDoc(op: ExecuteStatement, st: OperationState, firstPoll: Boolean): String = {
+    import org.apache.spark.sql.types._
     val id = op.handle
-    val state = op.currentState match {
+    val state = st match {
       case OperationState.Initialized | OperationState.Pending => "QUEUED"
       case OperationState.Running | OperationState.Compiled => "RUNNING"
       case OperationState.Finished => "FINISHED"
@@ -1819,29 +1796,26 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     val base = s""""id": ${q(id)}, "stats": {"state": ${q(state)}}"""
     state match {
       case "FINISHED" if !firstPoll =>
-        val schema = op.result.schema
+        val schema = op.resultSchema
         val cols = schema.fields.map(trinoColumn).mkString("[", ",", "]")
-        val it = op.fetchIterator
-        it.fetchAbsolute(0)
-        val data = it.map(row =>
-          (0 until row.length).map(i => cell(row, i, schema.fields(i).dataType))
+        val text = new ResultEncoders.Text(op.session.spark)
+        // numbers and booleans are JSON literals; DECIMAL is a plain
+        // (never exponent) number; everything else a text-rule string
+        def cell(v: Any, dt: DataType): String = dt match {
+          case _ if v == null => "null"
+          case BooleanType | ByteType | ShortType | IntegerType | LongType |
+               FloatType | DoubleType => String.valueOf(v)
+          case _: DecimalType => text(v, dt)
+          case _ => q(text(v, dt))
+        }
+        val data = op.fetchIterator.fetch(FetchOrientation.First, Int.MaxValue)
+          .map(row => schema.fields.indices.map(i => cell(row.get(i), schema.fields(i).dataType))
             .mkString("[", ",", "]")).mkString("[", ",", "]")
         s"""{$base, "columns": $cols, "data": $data}"""
       case "FAILED" | "CANCELED" =>
         s"""{$base, "error": ${trinoError(op)}}"""
       case _ =>
         s"""{$base, "nextUri": ${q(s"/v1/statement/$id/1")}}"""
-    }
-  }
-
-  private def cell(row: org.apache.spark.sql.Row, i: Int, dt: org.apache.spark.sql.types.DataType): String = {
-    import org.apache.spark.sql.types._
-    if (row.isNullAt(i)) "null"
-    else dt match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-           _: DecimalType => String.valueOf(row.get(i))
-      case BooleanType => String.valueOf(row.getBoolean(i))
-      case _ => q(String.valueOf(row.get(i)))
     }
   }
 
@@ -1860,21 +1834,32 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       s""" "state": ${q(op.currentState.toString)}, "createdMs": ${op.createdMs}$stmt$err}"""
   }
 
+  /** Run `page` once `op` has finished: 409 while it runs, 400 with the
+    * failure when it did not finish.
+    */
+  private def whenFinished(ex: HttpExchange, op: Operation)(page: => Unit): Unit =
+    if (!op.currentState.terminal)
+      reply(ex, 409, s"""{"state": ${q(op.currentState.toString)}}""")
+    else if (op.currentState != OperationState.Finished)
+      reply(ex, 400, s"""{"state": ${q(op.currentState.toString)}, "error": ${q(
+        op.exception.map(t => String.valueOf(t.getMessage)).getOrElse("operation did not finish"))}}""")
+    else page
+
+  /** A page off the operation's materialized result (never re-executing
+    * the statement): its start offset and its rows as JSON.
+    */
+  private def jsonPage(op: ResultOperation, orientation: FetchOrientation,
+      max: Int): (Long, Seq[String]) = {
+    val it = op.fetchIterator
+    val page = it.fetch(orientation, max)
+    (it.getFetchStart, ResultEncoders.json(page, op.resultSchema, op.session.spark))
+  }
+
   /** Engine-wide operation lookup: REST-submitted ops resolve via the
     * opSessions route even after their session closes; anything else
     * (e.g. a Thrift-submitted op on the same engine) via the live
     * session walk.
     */
-  /** The (result, iterator) pair for rowset-capable operations —
-    * statements and the metadata DataFrame family serve uniformly.
-    */
-  private def rowSetResult(op: Operation): Option[(org.apache.spark.sql.DataFrame,
-      graft.core.FetchIterator[org.apache.spark.sql.Row])] = op match {
-    case e: ExecuteStatement => Some((e.result, e.fetchIterator))
-    case d: graft.core.DataFrameOperation => Some((d.result, d.fetchIterator))
-    case _ => None
-  }
-
   private def findOp(opId: String): Option[Operation] =
     Option(opSessions.get(opId)).flatMap(_.operation(opId))
       .orElse(engine.openSessions.iterator.map(_.operation(opId)).collectFirst { case Some(op) => op })
@@ -2005,15 +1990,23 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       case c => c.toString
     } + "\""
 
-  private def reply(ex: HttpExchange, code: Int, json: String): Unit = {
-    val bytes = json.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
+  private def reply(ex: HttpExchange, code: Int, text: String,
+      contentType: String = "application/json"): Unit = {
+    val bytes = text.getBytes(StandardCharsets.UTF_8)
+    ex.getResponseHeaders.set("Content-Type", contentType)
     ex.sendResponseHeaders(code, bytes.length)
     ex.getResponseBody.write(bytes)
   }
 }
 
 object RestFrontend {
+
+  private val poolThreads = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** An 8-thread pool whose threads are named `<prefix>-<n>`. */
+  private def namedPool(prefix: String): ExecutorService =
+    Executors.newFixedThreadPool(8, (r: Runnable) =>
+      new Thread(r, s"$prefix-${poolThreads.incrementAndGet()}"))
 
   /** Every route the dispatcher serves, as (method, path, tag,
     * summary) — the single source the OpenAPI document renders from,

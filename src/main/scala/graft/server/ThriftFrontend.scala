@@ -12,6 +12,7 @@ import org.apache.thrift.protocol.TBinaryProtocol
 import org.apache.thrift.server.TThreadPoolServer
 import org.apache.thrift.transport.TServerSocket
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.ResultEncoders
 import org.apache.spark.sql.types._
 
 import graft.core._
@@ -59,25 +60,10 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
 
   private implicit val ec: ExecutionContext = ExecutionContext.global
 
-  /** One server-side operation: either a SQL statement or a prebuilt
-    * metadata DataFrame, with a uniform schema/iterator view.
-    */
-  private final class DfOperation(session: EngineSession, build: SparkSession => DataFrame)
-    extends Operation(session) {
-    @volatile var resultSchema: StructType = new StructType()
-    @volatile var iter: FetchIterator[Row] = _
-    override protected def runInternal(): Unit = {
-      val df = build(session.spark)
-      resultSchema = df.schema
-      iter = new ArrayFetchIterator(df.collect())
-    }
-  }
-
-  private case class OpBox(session: EngineSession, schema: () => StructType,
-      rows: () => FetchIterator[Row], op: Operation)
-
   private val sessions = new ConcurrentHashMap[String, EngineSession]()
-  private val ops = new ConcurrentHashMap[String, OpBox]()
+  // SQL statements and metadata operations alike: each pages its result
+  // through the core ResultOperation surface
+  private val ops = new ConcurrentHashMap[String, ResultOperation]()
   // Sessions that requested arrow result pages (operation.result.format=arrow).
   private val arrowSessions = ConcurrentHashMap.newKeySet[String]()
   // Per-session bounded-collect cap (operation.result.max.rows).
@@ -108,6 +94,26 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
 
   private def releaseConnection(sid: String): Unit =
     Option(admissionBySession.remove(sid)).foreach(limiter.release)
+
+  /** Drop a closed session's state here, operations included: clients
+    * that drop without CloseOperation would otherwise leak collected
+    * result arrays for the life of the server.
+    */
+  private def forgetSession(sid: String): Unit = {
+    sessions.remove(sid)
+    arrowSessions.remove(sid)
+    maxRowsBySession.remove(sid)
+    timeoutCapBySession.remove(sid)
+    releaseConnection(sid)
+    protoBySession.remove(sid)
+    ops.forEach { (opId, op) =>
+      if (op.session.id == sid) {
+        try op.close() catch { case _: Throwable => }
+        ops.remove(opId)
+      }
+    }
+  }
+
   // Negotiated protocol per session: clients below V6 (old Hive JDBC
   // drivers) must get row-based TRowSets, not TColumn pages
   // (reference TRowSetGenerator.toRowBasedSet).
@@ -115,24 +121,12 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
 
   // Purge this frontend's per-session state when the ENGINE closes a
   // session (the idle reaper, or any other engine-side close): without
-  // this, OpBoxes keep collected result arrays alive for abandoned
+  // this, operations keep collected result arrays alive for abandoned
   // clients forever, and a reaped session's stale map entry would keep
   // serving statements as if nothing happened.
   private val sessionCloseListener: Events.Handler = new Events.Handler {
     override def onEvent(e: Events.Event): Unit = e match {
-      case Events.SessionEvent(sid, _, "CLOSED", _) =>
-        sessions.remove(sid)
-        arrowSessions.remove(sid)
-        maxRowsBySession.remove(sid)
-        timeoutCapBySession.remove(sid)
-        releaseConnection(sid)
-        protoBySession.remove(sid)
-        ops.forEach { (opId, box) =>
-          if (box.session.id == sid) {
-            try box.op.close() catch { case _: Throwable => }
-            ops.remove(opId)
-          }
-        }
+      case Events.SessionEvent(sid, _, "CLOSED", _) => forgetSession(sid)
       case _ => ()
     }
   }
@@ -200,20 +194,8 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     df.filter(coalesce(col(colName), lit("")).rlike(regex))
   }
 
-  private def opHandle(id: String, hasResult: Boolean): TOperationHandle = {
-    val h = new TOperationHandle(handleId(id), TOperationType.EXECUTE_STATEMENT, hasResult)
-    h
-  }
-
-  private def startDfOp(session: EngineSession, sync: Boolean = true)(
-      build: SparkSession => DataFrame): TOperationHandle = {
-    session.touch() // metadata traffic is session activity for the idle reaper
-    val op = new DfOperation(session, build)
-    ops.put(op.handle, OpBox(session, () => op.resultSchema, () => op.iter, op))
-    op.run()
-    if (sync) op.awaitTermination()
-    opHandle(op.handle, hasResult = true)
-  }
+  private def opHandle(id: String, hasResult: Boolean): TOperationHandle =
+    new TOperationHandle(handleId(id), TOperationType.EXECUTE_STATEMENT, hasResult)
 
   // --- type mapping ---------------------------------------------------------
   private def typeId(dt: DataType): TTypeId = dt match {
@@ -270,65 +252,40 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     ByteBuffer.wrap(bytes)
   }
 
-  private def stringify(v: Any): String = v match {
-    case null => ""
-    case s: String => s
-    case d: java.math.BigDecimal => d.toPlainString
-    case d: BigDecimal => d.bigDecimal.toPlainString
-    case t: java.sql.Timestamp => t.toString
-    case d: java.sql.Date => d.toString
-    case t: java.time.Instant => java.sql.Timestamp.from(t).toString
-    case d: java.time.LocalDate => d.toString
-    case t: java.time.LocalDateTime => java.sql.Timestamp.valueOf(t).toString
-    case other => String.valueOf(other)
-  }
-
-  private def column(dt: DataType, vals: Array[Any]): TColumn = {
-    val nulls = vals.map(_ == null)
-    val mask = nullMask(nulls)
+  private def column(dt: DataType, vals: Seq[Any], text: ResultEncoders.Text): TColumn = {
+    val mask = nullMask(vals.map(_ == null).toArray)
     dt match {
       case BooleanType => TColumn.boolVal(new TBoolColumn(
-        vals.map(v => java.lang.Boolean.valueOf(v != null && v.asInstanceOf[Boolean])).toSeq.asJava, mask))
+        vals.map(v => java.lang.Boolean.valueOf(v != null && v.asInstanceOf[Boolean])).asJava, mask))
       case ByteType => TColumn.byteVal(new TByteColumn(
-        vals.map(v => java.lang.Byte.valueOf(if (v == null) 0.toByte else v.asInstanceOf[Byte])).toSeq.asJava, mask))
+        vals.map(v => java.lang.Byte.valueOf(if (v == null) 0.toByte else v.asInstanceOf[Byte])).asJava, mask))
       case ShortType => TColumn.i16Val(new TI16Column(
-        vals.map(v => java.lang.Short.valueOf(if (v == null) 0.toShort else v.asInstanceOf[Short])).toSeq.asJava, mask))
-      case IntegerType | DateType => TColumn.i32Val(new TI32Column(
-        vals.map {
-          case null => java.lang.Integer.valueOf(0)
-          case d: java.sql.Date => java.lang.Integer.valueOf(d.toLocalDate.toEpochDay.toInt)
-          case d: java.time.LocalDate => java.lang.Integer.valueOf(d.toEpochDay.toInt)
-          case v => java.lang.Integer.valueOf(v.asInstanceOf[Int])
-        }.toSeq.asJava, mask))
+        vals.map(v => java.lang.Short.valueOf(if (v == null) 0.toShort else v.asInstanceOf[Short])).asJava, mask))
+      case IntegerType => TColumn.i32Val(new TI32Column(
+        vals.map(v => java.lang.Integer.valueOf(if (v == null) 0 else v.asInstanceOf[Int])).asJava, mask))
       case LongType => TColumn.i64Val(new TI64Column(
-        vals.map(v => java.lang.Long.valueOf(if (v == null) 0L else v.asInstanceOf[Long])).toSeq.asJava, mask))
+        vals.map(v => java.lang.Long.valueOf(if (v == null) 0L else v.asInstanceOf[Long])).asJava, mask))
       case FloatType => TColumn.doubleVal(new TDoubleColumn(
-        vals.map(v => java.lang.Double.valueOf(if (v == null) 0.0 else v.asInstanceOf[Float].toDouble)).toSeq.asJava, mask))
+        vals.map(v => java.lang.Double.valueOf(if (v == null) 0.0 else v.asInstanceOf[Float].toDouble)).asJava, mask))
       case DoubleType => TColumn.doubleVal(new TDoubleColumn(
-        vals.map(v => java.lang.Double.valueOf(if (v == null) 0.0 else v.asInstanceOf[Double])).toSeq.asJava, mask))
+        vals.map(v => java.lang.Double.valueOf(if (v == null) 0.0 else v.asInstanceOf[Double])).asJava, mask))
       case BinaryType => TColumn.binaryVal(new TBinaryColumn(
         vals.map(v => ByteBuffer.wrap(if (v == null) Array.empty[Byte]
-          else v.asInstanceOf[Array[Byte]])).toSeq.asJava, mask))
+          else v.asInstanceOf[Array[Byte]])).asJava, mask))
       case _ =>
-        // DECIMAL / DATE-as-string fallback / TIMESTAMP / STRING /
-        // complex types: HiveServer2 string convention
-        TColumn.stringVal(new TStringColumn(vals.map(stringify).toSeq.asJava, mask))
+        // DECIMAL / DATE / TIMESTAMP / STRING / complex types:
+        // HiveServer2 string convention (the JDBC client parses DATE
+        // from "yyyy-MM-dd", not from an epoch int)
+        TColumn.stringVal(new TStringColumn(
+          vals.map(v => if (v == null) "" else text(v, dt)).asJava, mask))
     }
-  }
-
-  // DATE over the wire: HiveServer2 sends DATE as STRING columns, not
-  // epoch ints — the JDBC client parses "yyyy-MM-dd".
-  private def wireColumn(dt: DataType, vals: Array[Any]): TColumn = dt match {
-    case DateType => TColumn.stringVal(new TStringColumn(
-      vals.map(stringify).toSeq.asJava, nullMask(vals.map(_ == null))))
-    case _ => column(dt, vals)
   }
 
   // Row-based wire value (protocol < V6). Row mode has no binary value
   // type, so BINARY — like DECIMAL/DATE/TIMESTAMP/complex — travels as
   // a string, matching old-driver HiveServer2 behavior. Nulls are
   // values with the optional field unset.
-  private def columnValue(dt: DataType, v: Any): TColumnValue = dt match {
+  private def columnValue(dt: DataType, v: Any, text: ResultEncoders.Text): TColumnValue = dt match {
     case BooleanType =>
       val x = new TBoolValue(); if (v != null) x.setValue(v.asInstanceOf[Boolean])
       TColumnValue.boolVal(x)
@@ -351,30 +308,31 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
       val x = new TDoubleValue(); if (v != null) x.setValue(v.asInstanceOf[Double])
       TColumnValue.doubleVal(x)
     case _ =>
-      val x = new TStringValue(); if (v != null) x.setValue(stringify(v))
+      val x = new TStringValue(); if (v != null) x.setValue(text(v, dt))
       TColumnValue.stringVal(x)
   }
 
-  private def toRowBasedSet(schema: StructType, rows: Array[Row]): TRowSet = {
-    val trows = new java.util.ArrayList[TRow](rows.length)
-    rows.foreach { r =>
-      val tr = new TRow()
-      schema.fields.zipWithIndex.foreach { case (f, i) =>
-        tr.addToColVals(columnValue(f.dataType, r.get(i)))
-      }
-      trows.add(tr)
-    }
-    new TRowSet(0, trows)
-  }
-
-  private def rowSet(schema: StructType, rows: Array[Row],
-      proto: TProtocolVersion): TRowSet = {
+  /** One result page: column-based (V6+) or, for older clients,
+    * row-based (reference TRowSetGenerator.toRowBasedSet).
+    */
+  private def rowSet(schema: StructType, rows: Seq[Row], session: EngineSession): TRowSet = {
+    val text = new ResultEncoders.Text(session.spark)
+    val proto = protoBySession.get(session.id)
     if (proto != null &&
-        proto.getValue < TProtocolVersion.HIVE_CLI_SERVICE_PROTOCOL_V6.getValue)
-      return toRowBasedSet(schema, rows)
+        proto.getValue < TProtocolVersion.HIVE_CLI_SERVICE_PROTOCOL_V6.getValue) {
+      val trows = new java.util.ArrayList[TRow](rows.length)
+      rows.foreach { r =>
+        val tr = new TRow()
+        schema.fields.zipWithIndex.foreach { case (f, i) =>
+          tr.addToColVals(columnValue(f.dataType, r.get(i), text))
+        }
+        trows.add(tr)
+      }
+      return new TRowSet(0, trows)
+    }
     val rs = new TRowSet(0, new java.util.ArrayList[TRow]())
     schema.fields.zipWithIndex.foreach { case (f, i) =>
-      rs.addToColumns(wireColumn(f.dataType, rows.map(r => r.get(i))))
+      rs.addToColumns(column(f.dataType, rows.map(r => r.get(i)), text))
     }
     rs
   }
@@ -525,21 +483,7 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     override def CloseSession(req: TCloseSessionReq): TCloseSessionResp = {
       try {
         val id = idOf(req.getSessionHandle.getSessionId)
-        sessions.remove(id)
-        arrowSessions.remove(id)
-        maxRowsBySession.remove(id)
-        timeoutCapBySession.remove(id)
-        releaseConnection(id)
-        protoBySession.remove(id)
-        // Reap this session's operations: clients that drop without
-        // CloseOperation would otherwise leak collected result arrays
-        // for the life of the server.
-        ops.forEach { (opId, box) =>
-          if (box.session.id == id) {
-            try box.op.close() catch { case _: Throwable => }
-            ops.remove(opId)
-          }
-        }
+        forgetSession(id)
         engine.closeSession(id)
         new TCloseSessionResp(ok)
       } catch { case e: Throwable =>
@@ -576,14 +520,11 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
           case Some(cap) => cap.longValue
           case None => clientTimeoutMs
         }
-        val op =
-          if (arrowSessions.contains(sess.id)) {
-            sess.executeStatement(req.getStatement, ResultMode.Arrow(), timeoutMs)
-          } else Option(maxRowsBySession.get(sess.id)) match {
-            case Some(n) => sess.executeStatement(req.getStatement, ResultMode.Bounded(n), timeoutMs)
-            case None => sess.executeStatement(req.getStatement, timeoutMs = timeoutMs)
-          }
-        ops.put(op.handle, OpBox(sess, () => op.result.schema, () => op.fetchIterator, op))
+        val mode =
+          if (arrowSessions.contains(sess.id)) ResultMode.Arrow()
+          else Option(maxRowsBySession.get(sess.id)).fold[ResultMode](ResultMode.Full)(ResultMode.Bounded(_))
+        val op = sess.executeStatement(req.getStatement, mode, timeoutMs)
+        ops.put(op.handle, op)
         // Async clients get the handle immediately and discover
         // completion/errors via GetOperationStatus polling; only the
         // sync path blocks the worker thread (matches the reference's
@@ -596,7 +537,7 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
         // unknown — advertise a result set and let GetResultSetMetadata /
         // FetchResults (which both await termination) sort it out.
         resp.setOperationHandle(opHandle(op.handle,
-          hasResult = req.isRunAsync || op.result.schema.nonEmpty))
+          hasResult = req.isRunAsync || op.resultSchema.nonEmpty))
         resp.setStatus(ok)
       } catch { case e: Throwable => resp.setStatus(err(e)) }
       resp
@@ -604,14 +545,14 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
 
     override def GetOperationStatus(req: TGetOperationStatusReq): TGetOperationStatusResp = {
       val resp = new TGetOperationStatusResp()
-      val box = ops.get(idOf(req.getOperationHandle.getOperationId))
-      if (box == null) { resp.setStatus(err(new NoSuchElementException("no such operation"))); return resp }
+      val op = ops.get(idOf(req.getOperationHandle.getOperationId))
+      if (op == null) { resp.setStatus(err(new NoSuchElementException("no such operation"))); return resp }
       // Status polling is client activity: without this, a statement
       // running longer than the idle timeout finishes and is then
       // reaped before its first FetchResults (reference touches the
       // session on every access).
-      box.session.touch()
-      val st = box.op.currentState match {
+      op.session.touch()
+      val st = op.currentState match {
         case OperationState.Initialized => TOperationState.INITIALIZED_STATE
         case OperationState.Pending => TOperationState.PENDING_STATE
         case OperationState.Running | OperationState.Compiled => TOperationState.RUNNING_STATE
@@ -623,14 +564,14 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
           // Clients below HIVE-4924 (protocol <= V8, Hive < 2.1) have no
           // TIMEDOUT status and would poll forever — report CANCELED to
           // them (reference AbstractOperation.addTimeoutMonitor).
-          val proto = protoBySession.get(box.session.id)
+          val proto = protoBySession.get(op.session.id)
           if (proto != null &&
             proto.getValue <= TProtocolVersion.HIVE_CLI_SERVICE_PROTOCOL_V8.getValue)
             TOperationState.CANCELED_STATE
           else TOperationState.TIMEDOUT_STATE
       }
       resp.setOperationState(st)
-      box.op.exception.foreach { e =>
+      op.exception.foreach { e =>
         resp.setErrorMessage(String.valueOf(e.getMessage))
         resp.setSqlState("42000")
       }
@@ -639,8 +580,8 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
       // Best-effort: a tracker failure (e.g. context stopping) must
       // degrade to a response without progress, not kill the connection.
       if (req.isGetProgressUpdate) try {
-        val tracker = box.session.spark.sparkContext.statusTracker
-        val stages = tracker.getJobIdsForGroup(box.op.jobGroup).toSeq
+        val tracker = op.session.spark.sparkContext.statusTracker
+        val stages = tracker.getJobIdsForGroup(op.jobGroup).toSeq
           .flatMap(id => tracker.getJobInfo(id).toSeq.flatMap(_.stageIds().toSeq))
           .distinct.flatMap(sid => tracker.getStageInfo(sid).toSeq)
         val total = stages.map(_.numTasks).sum
@@ -650,10 +591,10 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
         prog.setRows(stages.map(s => Seq(s.stageId.toString, s.numTasks.toString,
           s.numCompletedTasks.toString, s.numActiveTasks.toString).asJava).asJava)
         prog.setProgressedPercentage(
-          if (box.op.currentState.terminal) 1.0
+          if (op.currentState.terminal) 1.0
           else if (total > 0) done.toDouble / total else 0.0)
         prog.setStatus(
-          if (box.op.currentState.terminal) TJobExecutionStatus.COMPLETE
+          if (op.currentState.terminal) TJobExecutionStatus.COMPLETE
           else TJobExecutionStatus.IN_PROGRESS)
         prog.setFooterSummary("")
         prog.setStartTime(0L)
@@ -664,25 +605,25 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     }
 
     override def CancelOperation(req: TCancelOperationReq): TCancelOperationResp = {
-      Option(ops.get(idOf(req.getOperationHandle.getOperationId))).foreach { box =>
-        box.session.touch() // cancel is session activity for the idle reaper
-        box.op.cancel()
+      Option(ops.get(idOf(req.getOperationHandle.getOperationId))).foreach { op =>
+        op.session.touch() // cancel is session activity for the idle reaper
+        op.cancel()
       }
       new TCancelOperationResp(ok)
     }
 
     override def CloseOperation(req: TCloseOperationReq): TCloseOperationResp = {
-      Option(ops.remove(idOf(req.getOperationHandle.getOperationId))).foreach(_.op.close())
+      Option(ops.remove(idOf(req.getOperationHandle.getOperationId))).foreach(_.close())
       new TCloseOperationResp(ok)
     }
 
     override def GetResultSetMetadata(req: TGetResultSetMetadataReq): TGetResultSetMetadataResp = {
       val resp = new TGetResultSetMetadataResp()
       try {
-        val box = ops.get(idOf(req.getOperationHandle.getOperationId))
-        require(box != null, "no such operation")
-        box.op.awaitTermination()
-        resp.setSchema(tableSchema(box.schema()))
+        val op = ops.get(idOf(req.getOperationHandle.getOperationId))
+        require(op != null, "no such operation")
+        op.awaitTermination()
+        resp.setSchema(tableSchema(op.resultSchema))
         resp.setStatus(ok)
       } catch { case e: Throwable => resp.setStatus(err(e)) }
       resp
@@ -691,59 +632,48 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     override def FetchResults(req: TFetchResultsReq): TFetchResultsResp = {
       val resp = new TFetchResultsResp()
       try {
-        val box = ops.get(idOf(req.getOperationHandle.getOperationId))
-        require(box != null, "no such operation")
-        box.session.touch() // paging is session activity for the idle reaper
+        val op = ops.get(idOf(req.getOperationHandle.getOperationId))
+        require(op != null, "no such operation")
+        op.session.touch() // paging is session activity for the idle reaper
         // fetchType 1 = operation LOG (HiveServer2 convention): a
         // single-string-column page of pending log lines, available
         // WHILE the op runs — no awaitTermination.
         if (req.getFetchType == 1) {
           val max = math.max(1L, math.min(req.getMaxRows, 10000L)).toInt
-          val lines = box.op.fetchLog(max)
+          val lines = op.fetchLog(max)
           val logSchema = StructType(Seq(StructField("operation_log", StringType)))
-          resp.setResults(rowSet(logSchema, lines.map(Row(_)).toArray,
-            protoBySession.get(box.session.id)))
+          resp.setResults(rowSet(logSchema, lines.map(Row(_)), op.session))
           resp.setHasMoreRows(false)
           resp.setStatus(ok)
           return resp
         }
-        box.op.awaitTermination()
-        box.op.exception.foreach(throw _)
+        op.awaitTermination()
+        op.exception.foreach(throw _)
         // Clamp before narrowing: Long.MaxValue ("all rows") must not
         // overflow toInt into a 1-row-per-round-trip fetch.
         val max = math.max(1L, math.min(req.getMaxRows, Int.MaxValue.toLong)).toInt
-        // Arrow result pages: one binary column whose values are
-        // IPC-serialized record batches (maxRows counts batches); the
-        // schema stays available via GetResultSetMetadata for decoding.
-        box.op match {
+        val orientation = req.getOrientation match {
+          case TFetchOrientation.FETCH_FIRST => FetchOrientation.First
+          case TFetchOrientation.FETCH_PRIOR => FetchOrientation.Prior
+          case _ => FetchOrientation.Next
+        }
+        op match {
+          // Arrow result pages: one binary column whose values are
+          // IPC-serialized record batches (maxRows counts batches); the
+          // schema stays available via GetResultSetMetadata for decoding.
           case es: ExecuteStatement if es.arrowIterator != null =>
-            val ait = es.arrowIterator
-            req.getOrientation match {
-              case TFetchOrientation.FETCH_FIRST => ait.fetchAbsolute(0)
-              case TFetchOrientation.FETCH_PRIOR => ait.fetchPrior(max)
-              case _ => ait.fetchNext()
-            }
-            val page = ait.take(max).toArray
+            val page = es.arrowIterator.fetch(orientation, max)
             val rs = new TRowSet(0, new java.util.ArrayList[TRow]())
             rs.addToColumns(TColumn.binaryVal(new TBinaryColumn(
-              page.map(ByteBuffer.wrap(_): ByteBuffer).toSeq.asJava,
+              page.map(ByteBuffer.wrap(_)).asJava,
               ByteBuffer.wrap(Array.fill((page.length + 7) / 8)(0.toByte)))))
             resp.setResults(rs)
-            resp.setHasMoreRows(ait.hasNext)
-            resp.setStatus(ok)
-            return resp
+            resp.setHasMoreRows(es.arrowIterator.hasNext)
           case _ =>
+            val page = op.fetchIterator.fetch(orientation, max)
+            resp.setResults(rowSet(op.resultSchema, page, op.session))
+            resp.setHasMoreRows(op.fetchIterator.hasNext)
         }
-        val it = box.rows()
-        req.getOrientation match {
-          case TFetchOrientation.FETCH_FIRST => it.fetchAbsolute(0)
-          case TFetchOrientation.FETCH_PRIOR => it.fetchPrior(max)
-          case _ => it.fetchNext()
-        }
-        val page = it.take(max).toArray
-        val rs = rowSet(box.schema(), page, protoBySession.get(box.session.id))
-        resp.setResults(rs)
-        resp.setHasMoreRows(it.hasNext)
         resp.setStatus(ok)
       } catch { case e: Throwable => resp.setStatus(err(e)) }
       resp
@@ -756,124 +686,114 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
       s
     }
 
+    /** Answer a metadata request: `build` runs as a core
+      * DataFrameOperation on the session, and the reply carries its
+      * handle, or the failure.
+      */
+    private def metadataOp(setStatus: TStatus => Any, setHandle: TOperationHandle => Any,
+        h: TSessionHandle)(build: => SparkSession => DataFrame): Unit =
+      try {
+        val op = sessionOf(h).executeMetadata(build)
+        ops.put(op.handle, op)
+        op.awaitTermination()
+        setHandle(opHandle(op.handle, hasResult = true))
+        setStatus(ok)
+      } catch { case e: Throwable => setStatus(err(e)) }
+
     override def GetCatalogs(req: TGetCatalogsReq): TGetCatalogsResp = {
       val resp = new TGetCatalogsResp()
-      try {
-        resp.setOperationHandle(startDfOp(sessionOf(req.getSessionHandle))(MetadataOps.getCatalogs))
-        resp.setStatus(ok)
-      } catch { case e: Throwable => resp.setStatus(err(e)) }
+      metadataOp(resp.setStatus, resp.setOperationHandle, req.getSessionHandle)(MetadataOps.getCatalogs)
       resp
     }
 
     override def GetSchemas(req: TGetSchemasReq): TGetSchemasResp = {
       val resp = new TGetSchemasResp()
-      try {
+      metadataOp(resp.setStatus, resp.setOperationHandle, req.getSessionHandle) {
         val (glob, regex) = hivePattern(
           Option(req.getSchemaName).filter(_.nonEmpty).getOrElse("%"))
-        resp.setOperationHandle(startDfOp(sessionOf(req.getSessionHandle))(
-          s => rlikeFilter(MetadataOps.getSchemas(s, glob), "TABLE_SCHEM", regex)))
-        resp.setStatus(ok)
-      } catch { case e: Throwable => resp.setStatus(err(e)) }
+        s => rlikeFilter(MetadataOps.getSchemas(s, glob), "TABLE_SCHEM", regex)
+      }
       resp
     }
 
     override def GetTables(req: TGetTablesReq): TGetTablesResp = {
       val resp = new TGetTablesResp()
-      try {
+      metadataOp(resp.setStatus, resp.setOperationHandle, req.getSessionHandle) {
         val (dbGlob, dbRegex) = hivePattern(
           Option(req.getSchemaName).filter(_.nonEmpty).getOrElse("%"))
         val (tblGlob, tblRegex) = hivePattern(
           Option(req.getTableName).filter(_.nonEmpty).getOrElse("%"))
-        resp.setOperationHandle(startDfOp(sessionOf(req.getSessionHandle))(
-          s => rlikeFilter(rlikeFilter(MetadataOps.getTables(s, dbGlob, tblGlob),
-            "TABLE_SCHEM", dbRegex), "TABLE_NAME", tblRegex)))
-        resp.setStatus(ok)
-      } catch { case e: Throwable => resp.setStatus(err(e)) }
+        s => rlikeFilter(rlikeFilter(MetadataOps.getTables(s, dbGlob, tblGlob),
+          "TABLE_SCHEM", dbRegex), "TABLE_NAME", tblRegex)
+      }
       resp
     }
 
     override def GetTableTypes(req: TGetTableTypesReq): TGetTableTypesResp = {
       val resp = new TGetTableTypesResp()
-      try {
-        resp.setOperationHandle(startDfOp(sessionOf(req.getSessionHandle))(MetadataOps.getTableTypes))
-        resp.setStatus(ok)
-      } catch { case e: Throwable => resp.setStatus(err(e)) }
+      metadataOp(resp.setStatus, resp.setOperationHandle, req.getSessionHandle)(MetadataOps.getTableTypes)
       resp
     }
 
     override def GetColumns(req: TGetColumnsReq): TGetColumnsResp = {
       val resp = new TGetColumnsResp()
-      try {
+      metadataOp(resp.setStatus, resp.setOperationHandle, req.getSessionHandle) {
         // getColumns resolves an exact table; JDBC clients send the name
         // they got from GetTables. A wildcard pattern walks the matching
         // tables of the current database and unions their columns.
         val tblArg = Option(req.getTableName).filter(_.nonEmpty).getOrElse("%")
         val (glob, regex) = hivePattern(tblArg)
-        val build: SparkSession => DataFrame =
-          if (!tblArg.exists(c => c == '%' || c == '_' || c == '*')) {
-            MetadataOps.getColumns(_, tblArg.replace("\\", ""))
-          } else { s =>
-            val names = rlikeFilter(
-              MetadataOps.getTables(s, "*", glob), "TABLE_NAME", regex)
-              .select("TABLE_SCHEM", "TABLE_NAME").collect()
-            names.map { r =>
-              // temp views have no schema: resolve by bare name
-              val qualified = Option(r.getString(0)).filter(_.nonEmpty)
-                .map(db => s"$db.${r.getString(1)}").getOrElse(r.getString(1))
-              MetadataOps.getColumns(s, qualified)
-            }
-              .reduceOption(_ unionAll _)
-              .getOrElse(MetadataOps.noColumns(s))
+        if (!tblArg.exists(c => c == '%' || c == '_' || c == '*')) {
+          MetadataOps.getColumns(_, tblArg.replace("\\", ""))
+        } else { s =>
+          val names = rlikeFilter(
+            MetadataOps.getTables(s, "*", glob), "TABLE_NAME", regex)
+            .select("TABLE_SCHEM", "TABLE_NAME").collect()
+          names.map { r =>
+            // temp views have no schema: resolve by bare name
+            val qualified = Option(r.getString(0)).filter(_.nonEmpty)
+              .map(db => s"$db.${r.getString(1)}").getOrElse(r.getString(1))
+            MetadataOps.getColumns(s, qualified)
           }
-        resp.setOperationHandle(startDfOp(sessionOf(req.getSessionHandle))(build))
-        resp.setStatus(ok)
-      } catch { case e: Throwable => resp.setStatus(err(e)) }
+            .reduceOption(_ unionAll _)
+            .getOrElse(MetadataOps.noColumns(s))
+        }
+      }
       resp
     }
 
     override def GetFunctions(req: TGetFunctionsReq): TGetFunctionsResp = {
       val resp = new TGetFunctionsResp()
-      try {
+      metadataOp(resp.setStatus, resp.setOperationHandle, req.getSessionHandle) {
         val (glob, regex) = hivePattern(
           Option(req.getFunctionName).filter(_.nonEmpty).getOrElse("%"))
-        resp.setOperationHandle(startDfOp(sessionOf(req.getSessionHandle))(
-          s => rlikeFilter(MetadataOps.getFunctions(s, glob), "FUNCTION_NAME", regex)))
-        resp.setStatus(ok)
-      } catch { case e: Throwable => resp.setStatus(err(e)) }
+        s => rlikeFilter(MetadataOps.getFunctions(s, glob), "FUNCTION_NAME", regex)
+      }
       resp
     }
 
     override def GetTypeInfo(req: TGetTypeInfoReq): TGetTypeInfoResp = {
       val resp = new TGetTypeInfoResp()
-      try {
-        resp.setOperationHandle(startDfOp(sessionOf(req.getSessionHandle))(MetadataOps.getTypeInfo))
-        resp.setStatus(ok)
-      } catch { case e: Throwable => resp.setStatus(err(e)) }
+      metadataOp(resp.setStatus, resp.setOperationHandle, req.getSessionHandle)(MetadataOps.getTypeInfo)
       resp
     }
 
     override def GetPrimaryKeys(req: TGetPrimaryKeysReq): TGetPrimaryKeysResp = {
       val resp = new TGetPrimaryKeysResp()
-      try {
-        def s(v: String) = Option(v).getOrElse("")
-        resp.setOperationHandle(startDfOp(sessionOf(req.getSessionHandle))(
-          MetadataOps.getPrimaryKeys(_, s(req.getCatalogName), s(req.getSchemaName),
-            s(req.getTableName))))
-        resp.setStatus(ok)
-      } catch { case e: Throwable => resp.setStatus(err(e)) }
+      def s(v: String) = Option(v).getOrElse("")
+      metadataOp(resp.setStatus, resp.setOperationHandle, req.getSessionHandle)(
+        MetadataOps.getPrimaryKeys(_, s(req.getCatalogName), s(req.getSchemaName),
+          s(req.getTableName)))
       resp
     }
 
     override def GetCrossReference(req: TGetCrossReferenceReq): TGetCrossReferenceResp = {
       val resp = new TGetCrossReferenceResp()
-      try {
-        def s(v: String) = Option(v).getOrElse("")
-        resp.setOperationHandle(startDfOp(sessionOf(req.getSessionHandle))(
-          MetadataOps.getCrossReference(_,
-            s(req.getParentCatalogName), s(req.getParentSchemaName), s(req.getParentTableName),
-            s(req.getForeignCatalogName), s(req.getForeignSchemaName), s(req.getForeignTableName))))
-        resp.setStatus(ok)
-      } catch { case e: Throwable => resp.setStatus(err(e)) }
+      def s(v: String) = Option(v).getOrElse("")
+      metadataOp(resp.setStatus, resp.setOperationHandle, req.getSessionHandle)(
+        MetadataOps.getCrossReference(_,
+          s(req.getParentCatalogName), s(req.getParentSchemaName), s(req.getParentTableName),
+          s(req.getForeignCatalogName), s(req.getForeignSchemaName), s(req.getForeignTableName)))
       resp
     }
 

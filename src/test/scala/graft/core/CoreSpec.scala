@@ -51,6 +51,20 @@ class FetchIteratorSpec extends AnyFunSuite {
     assert(it.next() == 10)
   }
 
+  test("fetch repositions for each orientation, then takes up to max") {
+    import FetchOrientation._
+    for (it <- Seq(new ArrayFetchIterator((0 until 10).toArray),
+        new IterableFetchIterator(0 until 10))) {
+      assert(it.fetch(Next, 4) == Seq(0, 1, 2, 3))
+      assert(it.fetch(Next, 4) == Seq(4, 5, 6, 7))
+      assert(it.getFetchStart == 4)
+      assert(it.fetch(Prior, 3) == Seq(1, 2, 3)) // the 3 rows before the last block
+      assert(it.fetch(First, 2) == Seq(0, 1))
+      assert(it.fetch(Absolute(8), 5) == Seq(8, 9))
+      assert(it.fetch(Next, 5).isEmpty && !it.hasNext)
+    }
+  }
+
   test("iterable iterator supports backward reposition by replay") {
     val it = new IterableFetchIterator(Seq(1, 2, 3, 4, 5))
     assert(it.take(3).toList == List(1, 2, 3))

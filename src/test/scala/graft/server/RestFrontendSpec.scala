@@ -95,25 +95,34 @@ class RestFrontendSpec extends AnyFunSuite {
       val (c2, b2) = post(c, s"$base/batches", slow)
       assert(c2 == 429 && b2.contains("Batch limit per user"), s"$c2 $b2")
       // a different user is unaffected
-      val (c3, _) = post(c, s"$base/batches",
+      val (c3, b3) = post(c, s"$base/batches",
         """{"sql": "SELECT 1", "user": "carol"}""")
       assert(c3 == 200)
       // cancel the live batch → the slot frees
       val (dc, _) = delete(c, s"$base/batches/$id1")
       assert(dc == 200)
       val deadline = System.nanoTime() + 30e9.toLong
-      var freed = false
-      while (!freed && System.nanoTime() < deadline) {
+      var freed: Option[String] = None
+      while (freed.isEmpty && System.nanoTime() < deadline) {
         val (cc, bb) = post(c, s"$base/batches", """{"sql": "SELECT 2", "user": "bob"}""")
-        if (cc == 200) freed = true
+        if (cc == 200) freed = Some(extract(bb, "id"))
         else { assert(cc == 429, bb); Thread.sleep(100) }
       }
-      assert(freed, "slot never freed after cancel")
+      assert(freed.isDefined, "slot never freed after cancel")
       // hand the shared local[32] cluster back QUIET: wait until the
       // cancelled batch's tasks have actually exited, or the burn
-      // starves the polling deadlines of whatever test runs next
+      // starves the polling deadlines of whatever test runs next.
+      // carol's and bob's short batches start jobs of their own, so they
+      // must be terminal first: a drain that sees an empty job list
+      // before one of them starts its job would exit too early.
       val tracker = spark.sparkContext.statusTracker
       val drain = System.nanoTime() + 60e9.toLong
+      def terminal(id: String) = {
+        val st = extract(get(c, s"$base/batches/$id")._2, "state")
+        graft.core.OperationState.all.exists(s => s.name == st && s.terminal)
+      }
+      for (id <- Seq(extract(b3, "id"), freed.get))
+        while (!terminal(id) && System.nanoTime() < drain) Thread.sleep(100)
       while (tracker.getActiveJobIds().nonEmpty && System.nanoTime() < drain)
         Thread.sleep(100)
       val leftover = tracker.getActiveJobIds()
@@ -1508,6 +1517,62 @@ class RestFrontendSpec extends AnyFunSuite {
       val (_, gbody) = get(c, s"$root/v1/statement/$id/1")
       assert(gbody.contains("\"errorName\": \"USER_CANCELED\""), gbody)
     }
+  }
+
+  test("Trino statements close their engine sessions after the final document") {
+    val engine = new Engine(spark)
+    val front = new RestFrontend(engine, port = 0)
+    val root = s"http://localhost:${front.start()}"
+    try {
+      val c = HttpClient.newHttpClient()
+      val baseline = engine.openSessionCount
+      for (n <- 1 to 3) {
+        var doc = post(c, s"$root/v1/statement", s"SELECT id + $n AS v FROM range(3)")._2
+        var hops = 0
+        while (doc.contains("nextUri") && hops < 100) {
+          val m = java.util.regex.Pattern.compile("\"nextUri\"\\s*:\\s*\"([^\"]*)\"").matcher(doc)
+          assert(m.find()); Thread.sleep(50)
+          doc = get(c, root + m.group(1))._2
+          hops += 1
+        }
+        assert(doc.contains("\"state\": \"FINISHED\"") && doc.contains(s"[${n + 2}]"), doc)
+      }
+      // the close runs just after the final document is sent
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (engine.openSessionCount != baseline && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(engine.openSessionCount == baseline,
+        s"${engine.openSessionCount - baseline} Trino engine sessions left open")
+    } finally front.stop()
+  }
+
+  test("stop() ends the frontend's named REST threads") {
+    import scala.jdk.CollectionConverters._
+    def restThreads: Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-rest-")).toSet
+    val before = restThreads
+    val front = new RestFrontend(new Engine(spark), port = 0)
+    val base = s"http://localhost:${front.start()}/api/v1"
+    try {
+      val c = HttpClient.newHttpClient()
+      val sid = extract(post(c, s"$base/sessions", """{"user": "threads"}""")._2, "sessionId")
+      val opId = extract(post(c, s"$base/sessions/$sid/statements",
+        """{"sql": "SELECT id FROM range(3)"}""")._2, "operationId")
+      var state = ""
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (state != "FINISHED" && System.nanoTime() < deadline) {
+        state = extract(get(c, s"$base/sessions/$sid/statements/$opId")._2, "state")
+        if (state != "FINISHED") Thread.sleep(50)
+      }
+      val (rc, rbody) = get(c, s"$base/sessions/$sid/statements/$opId/result")
+      assert(rc == 200 && rbody.contains("""{"id":2}"""), rbody)
+      val started = (restThreads -- before).map(_.getName)
+      assert(started.exists(_.startsWith("graft-rest-exec-")) &&
+        started.exists(_.startsWith("graft-rest-http-")), started)
+    } finally front.stop()
+    val left = restThreads -- before
+    left.foreach(_.join(5000)) // a pool thread may still be unwinding
+    assert(left.forall(!_.isAlive), left.filter(_.isAlive).map(_.getName))
   }
 
   test("errors surface as JSON with useful statuses") {
