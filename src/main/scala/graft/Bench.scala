@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.EngineConfs
 import graft.queries.{TpcdsCorpusSql, TpchCatalogQueries, TpchCorpusSql}
 
 /** Driver-run benchmark: every SparkEntry query on the driver-provided
@@ -44,6 +45,55 @@ import graft.queries.{TpcdsCorpusSql, TpchCatalogQueries, TpchCorpusSql}
   * goes to target/bench_full.json.
   */
 object Bench {
+
+  /** Bench's session, which Probe opens too: the engine session with
+    * Bench's warehouse and the dev-only [[EngineConfs.profileOverlay]].
+    * With `hive` the session catalog is backed by an embedded Derby
+    * metastore under target/, so the materialized bench databases AND
+    * their ANALYZE stats persist across bench runs — repeat rounds skip
+    * both the parquet regeneration and the stats scan (r12's mat_sec
+    * hit 563 s re-running sf10 fact generation + ANALYZE ALL COLUMNS
+    * every round against byte-identical data).
+    */
+  def session(hive: Boolean): SparkSession = EngineConfs.session("graft-bench",
+    Seq("spark.sql.warehouse.dir" -> "target/bench_warehouse") ++
+      (if (hive) Seq("javax.jdo.option.ConnectionURL" ->
+        "jdbc:derby:;databaseName=target/bench_metastore;create=true") else Nil) ++
+      EngineConfs.profileOverlay, hive)
+
+  /** The winnow comparable's df caps: w01 prunes the boilerplate
+    * posting lists, w02 pays the uncapped join.
+    */
+  val winnowCaps: Map[String, Int] = Map("w01" -> 100, "w02" -> Int.MaxValue)
+
+  /** The winnow comparable's adversarial corpus, written to
+    * target/bench_winnow: every doc shares a boilerplate run (so its
+    * winnowed fps have df = N) plus a unique tail. 16000 docs: the
+    * uncapped join's pair space is ~N²/2 per shared fp (128M pairs × ~6
+    * boilerplate fps), the capped join's is zero for those fps. r10
+    * shipped 8000 docs and measured only 3.85× min (the claim said
+    * ≥5×); the gap grows quadratically with N, so doubling the corpus
+    * puts the margin unambiguously past 5× at local[32] (r11, VERDICT #4).
+    */
+  def winnowCorpus(spark: SparkSession): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val boiler = "the quick brown fox jumps over the lazy dog again and again today"
+    val wdir = "target/bench_winnow"
+    def tail(salt: String) = substring(md5(concat(lit(salt), col("id").cast("string"))), 1, 8)
+    spark.range(16000).select(col("id").as("doc_id"),
+        concat(lit("d"), col("id").cast("string"), lit(" " + boiler + " "),
+          concat_ws(" ", tail("a"), tail("b"), tail("c"), tail("d"))).as("text"))
+      .write.mode("overwrite").parquet(wdir)
+    spark.read.parquet(wdir)
+  }
+
+  /** One winnow comparable run at df cap `cap`, caches released. */
+  def winnowRun(adv: DataFrame, cap: Int): Unit = {
+    graft.operators.Dedup.winnowCandidatePairs(
+      adv, "doc_id", "text", minShared = 1, maxFpDf = cap).foreach(_ => ())
+    graft.operators.SketchRegistry.releaseAll()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default to the machine's cores: the r14 spot-set investigation
@@ -51,48 +101,15 @@ object Bench {
     // defaulting to 4 when SPARK_GRAFT_CPUS is unset — local runs were
     // benching local[4] while the driver (and every plan-shape claim)
     // assumes local[32].
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = EngineConfs.cpus
     val tpchNs = sys.env.getOrElse("SPARK_GRAFT_TPCH_SF", "sf1")
-    // The session catalog is backed by an embedded Derby metastore
-    // under target/, so the materialized bench databases AND their
-    // ANALYZE stats persist across bench runs — repeat rounds skip
-    // both the parquet regeneration and the stats scan (r12's mat_sec
-    // hit 563 s re-running sf10 fact generation + ANALYZE ALL COLUMNS
-    // every round against byte-identical data). A corrupt or locked
-    // metastore degrades to the in-memory catalog (one full
-    // re-materialization) rather than failing the bench.
-    def buildSession(hive: Boolean): SparkSession = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.extensions", classOf[graft.plans.GraftSparkExtension].getName)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.warehouse.dir", "target/bench_warehouse")
-        .config("spark.ui.enabled", "false")
-      // The engine's tuned confs (shared with the server and every
-      // tool — rationale and A/B evidence live in EngineConfs and
-      // OPTIMIZATION_r18.md). The bench measures the SAME session
-      // configuration the gateway serves.
-      graft.core.EngineConfs(b)
-      // Dev-only conf override for section A/B runs (same contract as
-      // CorpusProbe's SPARK_GRAFT_PROFILE_CONF; the driver never sets it).
-      sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(";").foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      })
-      if (hive)
-        b.config("javax.jdo.option.ConnectionURL",
-            "jdbc:derby:;databaseName=target/bench_metastore;create=true")
-          .enableHiveSupport().getOrCreate()
-      else b.getOrCreate()
-    }
+    // A corrupt or locked metastore degrades to the in-memory catalog
+    // (one full re-materialization) rather than failing the bench.
     // SPARK_GRAFT_BENCH_HIVE=0: dev-only A/B lever to isolate catalog
     // effects on suite timings (the driver never sets it).
     val useHive = !sys.env.get("SPARK_GRAFT_BENCH_HIVE").contains("0")
     val spark = try {
-      val s = buildSession(hive = useHive)
+      val s = session(hive = useHive)
       if (useHive) s.sql("SHOW DATABASES").collect() // metastore boot probe
       s
     } catch { case _: Throwable =>
@@ -101,7 +118,7 @@ object Bench {
       }
       SparkSession.clearDefaultSession()
       SparkSession.clearActiveSession()
-      buildSession(hive = false)
+      session(hive = false)
     }
     // ERROR, not WARN: the TPC-DS spec's own unpartitioned-window queries
     // (q44/q49/q51) emit a WindowExec WARN per execution; the driver keeps
@@ -472,45 +489,21 @@ object Bench {
         timedN("z02_scan_zordered", iters, careful = true)(scan("zordered")))
     }
 
-    // Winnow pair-join cap comparable: an adversarial corpus where
-    // every doc shares a boilerplate run (so its winnowed fps have
-    // df = N) plus a unique tail. The df-capped join prunes the
-    // boilerplate posting lists BEFORE the self-join; the uncapped
-    // join pays the O(N²) pair blowup those lists imply — the
-    // before/after pair for the r9 16-bit-key scale defect, same
-    // role as the z-order skipping comparable. Corpus generation is
-    // untimed setup.
+    // Winnow pair-join cap comparable (see [[winnowCorpus]]): the
+    // before/after pair for the r9 16-bit-key scale defect, same role
+    // as the z-order skipping comparable. Corpus generation is untimed
+    // setup.
     val winnowCap = if (suiteOnly) Seq.empty[Timing] else {
-      import org.apache.spark.sql.functions._
-      val boiler = "the quick brown fox jumps over the lazy dog again and again today"
-      val wdir = "target/bench_winnow"
-      // 16000 docs sharing the run: the uncapped join's pair space is
-      // ~N²/2 per shared fp (128M pairs × ~6 boilerplate fps), the
-      // capped join's is zero for those fps. r10 shipped 8000 docs and
-      // measured only 3.85× min (the claim said ≥5×); the gap grows
-      // quadratically with N, so doubling the corpus puts the margin
-      // unambiguously past 5× at local[32] (r11, VERDICT #4)
-      spark.range(16000).select(col("id").as("doc_id"),
-          concat(lit("d"), col("id").cast("string"), lit(" " + boiler + " "),
-            concat_ws(" ",
-              substring(md5(concat(lit("a"), col("id").cast("string"))), 1, 8),
-              substring(md5(concat(lit("b"), col("id").cast("string"))), 1, 8),
-              substring(md5(concat(lit("c"), col("id").cast("string"))), 1, 8),
-              substring(md5(concat(lit("d"), col("id").cast("string"))), 1, 8))).as("text"))
-        .write.mode("overwrite").parquet(wdir)
-      val adv = spark.read.parquet(wdir)
-      def run(cap: Int): Unit = {
-        graft.operators.Dedup.winnowCandidatePairs(
-          adv, "doc_id", "text", minShared = 1, maxFpDf = cap).foreach(_ => ())
-        graft.operators.SketchRegistry.releaseAll()
-      }
+      val adv = winnowCorpus(spark)
       // At 16k docs the uncapped side leaves the in-memory regime
       // (~768M pair rows → shuffle spill): ~179 s vs ~1.6 s capped,
       // >100× — so ONE careful (GC+quiesced) run suffices for the
       // slow side; min-of-fewer only biases the uncapped time HIGH,
       // i.e. against the number we claim, and saves ~6 min of bench
-      Seq(timedN("w01_winnow_pairs_capped", iters, careful = true)(run(100)),
-        timedN("w02_winnow_pairs_uncapped", 1, careful = true)(run(Int.MaxValue)))
+      Seq(timedN("w01_winnow_pairs_capped", iters, careful = true)(
+          winnowRun(adv, winnowCaps("w01"))),
+        timedN("w02_winnow_pairs_uncapped", 1, careful = true)(
+          winnowRun(adv, winnowCaps("w02"))))
     }
 
     def r3(v: Double): String = f"$v%.3f"
@@ -524,8 +517,7 @@ object Bench {
     val mins = results.map(t => t.name -> t.min)
     val total = mins.map(_._2).sum
     val loadEnd = loadAvg()
-    val errJson = errors.reverse.map(e =>
-      "\"" + e.replace("\\", "\\\\").replace("\"", "\\\"") + "\"").mkString("[", ",", "]")
+    val errJson = errors.reverse.map(graft.core.Json.quote).mkString("[", ",", "]")
 
     // Full per-query min/avg/runs → file (unbounded size is fine there),
     // with per-query load + contended so warm/cold claims are auditable

@@ -31,9 +31,9 @@ final case class Tables(spark: SparkSession, dir: String) {
     * truncation DuckDB applies.
     */
   def events: DataFrame = {
-    // builders (Verify/Bench/Engine fixtures) set this at session
-    // construction; the guarded set here covers externally-built
-    // sessions without re-writing shared conf on every call
+    // the one place this is set: events is the only nanosecond parquet,
+    // so the session factory leaves it off (guarded, so shared conf is
+    // not re-written on every call)
     if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The NTZ→LTZ branch below is identity ONLY in a UTC session; an

@@ -3,6 +3,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.{EngineConfs, Json}
 import graft.queries.TpchCatalogQueries
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -20,15 +21,7 @@ object Verify {
     // optional dev filter: comma-separated query names (driver passes 2 args)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.EngineConfs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", classOf[graft.plans.GraftSparkExtension].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = EngineConfs.session("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A query that throws must NOT silently vanish from the gate (round 7
@@ -174,20 +167,11 @@ object Verify {
     } catch { case e: Throwable =>
       System.err.println(s"[verify] text_aux dump failed: ${e.getMessage}")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Json.quote escapes every control char: a tab or CR in an oracle
+    // query would otherwise make the compare's json.load fail and
+    // silently zero the correctness gate
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("__AUX__", auxDir.toString)
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v.replace("__AUX__", auxDir.toString)
         .replace("__VAUX__", vecAuxDir.toString)
         .replace("__TAUX__", textAuxDir.toString))}" }
       .mkString("{", ",", "}")

@@ -21,30 +21,20 @@ object Events {
     def asJson: String
   }
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   final case class SessionEvent(
       sessionId: String, user: String, action: String, ts: Long) extends Event {
     override def asJson: String =
-      s"""{"event":"session","sessionId":"${esc(sessionId)}","user":"${esc(user)}",""" +
-        s""""action":"${esc(action)}","ts":$ts}"""
+      s"""{"event":"session","sessionId":${Json.quote(sessionId)},"user":${Json.quote(user)},""" +
+        s""""action":${Json.quote(action)},"ts":$ts}"""
   }
 
   final case class OperationEvent(
       opId: String, sessionId: String, state: String,
       error: Option[String], ts: Long) extends Event {
     override def asJson: String =
-      s"""{"event":"operation","opId":"${esc(opId)}","sessionId":"${esc(sessionId)}",""" +
-        s""""state":"${esc(state)}"""" +
-        error.map(e => s""","error":"${esc(e)}"""").getOrElse("") +
+      s"""{"event":"operation","opId":${Json.quote(opId)},"sessionId":${Json.quote(sessionId)},""" +
+        s""""state":${Json.quote(state)}""" +
+        error.map(e => s""","error":${Json.quote(e)}""").getOrElse("") +
         s""","ts":$ts}"""
   }
 
@@ -60,10 +50,10 @@ object Events {
       ts: Long) extends Event {
     override def asJson: String = {
       val cols = columns.toSeq.sortBy(_._1).map { case (out, srcs) =>
-        s""""${esc(out)}":[${srcs.toSeq.sorted.map(s => s""""${esc(s)}"""").mkString(",")}]"""
+        s"""${Json.quote(out)}:[${srcs.toSeq.sorted.map(Json.quote).mkString(",")}]"""
       }.mkString("{", ",", "}")
       s"""{"event":"lineage","execId":$execId,"columns":$cols""" +
-        error.map(e => s""","error":"${esc(e)}"""").getOrElse("") +
+        error.map(e => s""","error":${Json.quote(e)}""").getOrElse("") +
         s""","ts":$ts}"""
     }
   }
@@ -76,8 +66,8 @@ object Events {
   final case class AuthzAuditEvent(
       user: String, verb: String, resource: String, ts: Long) extends Event {
     override def asJson: String =
-      s"""{"event":"authz","user":"${esc(user)}","verb":"${esc(verb)}",""" +
-        s""""resource":"${esc(resource)}","allowed":false,"ts":$ts}"""
+      s"""{"event":"authz","user":${Json.quote(user)},"verb":${Json.quote(verb)},""" +
+        s""""resource":${Json.quote(resource)},"allowed":false,"ts":$ts}"""
   }
 
   /** A recall audit of a maintained ANN index (the operational loop
@@ -92,8 +82,8 @@ object Events {
       recall: Double, baseline: Double, k: Int, nProbe: Int,
       alarm: Boolean, ts: Long) extends Event {
     override def asJson: String =
-      s"""{"event":"index_audit","indexPath":"${esc(indexPath)}",""" +
-        s""""streamId":"${esc(streamId)}","batchId":$batchId,""" +
+      s"""{"event":"index_audit","indexPath":${Json.quote(indexPath)},""" +
+        s""""streamId":${Json.quote(streamId)},"batchId":$batchId,""" +
         s""""recall":$recall,"baseline":$baseline,"k":$k,"nProbe":$nProbe,""" +
         s""""alarm":$alarm,"ts":$ts}"""
   }

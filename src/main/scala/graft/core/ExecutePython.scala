@@ -190,7 +190,7 @@ class PythonWorker(session: EngineSession) {
   def run(code: String): String = synchronized {
     nextId += 1
     val id = nextId
-    toWorker.println(jsonObj(Seq("id" -> id.toString, "code" -> quote(code))))
+    toWorker.println(jsonObj(Seq("id" -> id.toString, "code" -> Json.quote(code))))
     var line = fromWorker.readLine()
     while (line != null) {
       if (line.contains("\"type\": \"sql\"") || line.contains("\"type\":\"sql\"")) {
@@ -199,7 +199,7 @@ class PythonWorker(session: EngineSession) {
           val rows = session.spark.sql(sqlText).toJSON.collect()
           s"""{"rows": [${rows.mkString(",")}]}"""
         } catch {
-          case e: Throwable => jsonObj(Seq("error" -> quote(String.valueOf(e.getMessage))))
+          case e: Throwable => jsonObj(Seq("error" -> Json.quote(String.valueOf(e.getMessage))))
         }
         toWorker.println(reply)
       } else if (line.contains("\"type\": \"df\"") || line.contains("\"type\":\"df\"")) {
@@ -209,10 +209,10 @@ class PythonWorker(session: EngineSession) {
           msg.get("action").asText match {
             case "count" => s"""{"value": ${df.count()}}"""
             case "collect" => s"""{"rows": [${df.toJSON.collect().mkString(",")}]}"""
-            case other => jsonObj(Seq("error" -> quote(s"unknown df action: $other")))
+            case other => jsonObj(Seq("error" -> Json.quote(s"unknown df action: $other")))
           }
         } catch {
-          case e: Throwable => jsonObj(Seq("error" -> quote(String.valueOf(e.getMessage))))
+          case e: Throwable => jsonObj(Seq("error" -> Json.quote(String.valueOf(e.getMessage))))
         }
         toWorker.println(reply)
       } else {
@@ -233,16 +233,6 @@ class PythonWorker(session: EngineSession) {
   }
 
   // -- minimal JSON helpers (protocol is flat string fields) --
-  private def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
   private def jsonObj(fields: Seq[(String, String)]): String =
     fields.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
   private def extractString(json: String, key: String): String = {

@@ -81,14 +81,15 @@ final class EngineProcBuilder(discoveryDir: Path, launchTimeoutMs: Long = 180000
   }
 
   /** Bare-java fallback: Spark's module-opens spelled out, classpath
-    * inherited from this JVM.
+    * inherited from this JVM, and the master as a system property — the
+    * engine's session keeps the master its `SparkConf` holds.
     */
   def bareJavaCommand(space: String): Seq[String] = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val moduleOpts = org.apache.spark.launcher.JavaModuleOptions
       .defaultModuleOptions().split("\\s+").toSeq.filter(_.nonEmpty)
     Seq(javaBin) ++ moduleOpts ++ Seq(
-      "-Xmx1g", "-Dspark.ui.enabled=false",
+      "-Xmx1g", "-Dspark.ui.enabled=false", s"-Dspark.master=$master",
       "-cp", System.getProperty("java.class.path"),
       mainClass, discoveryRef, space)
   }

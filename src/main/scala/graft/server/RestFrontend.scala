@@ -13,6 +13,7 @@ import org.apache.spark.sql.graft.ResultEncoders
 
 import graft.core.{Engine, EngineSession, Events, ExecuteStatement, FetchOrientation, Metrics,
   Operation, OperationState, ResultMode, ResultOperation}
+import graft.core.Json.{quote => q}
 
 /** Minimal HTTP/JSON frontend over the engine — the gateway's network
   * entry point (the reference exposes REST alongside Thrift:
@@ -1979,17 +1980,6 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     }
   }
 
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   private def reply(ex: HttpExchange, code: Int, text: String,
       contentType: String = "application/json"): Unit = {
     val bytes = text.getBytes(StandardCharsets.UTF_8)
@@ -2064,7 +2054,6 @@ object RestFrontend {
     * the same path).
     */
   private[server] lazy val openApiJson: String = {
-    def q(s: String) = "\"" + s.replace("\"", "\\\"") + "\""
     val byPath = routes.groupBy(_._2)
     val paths = byPath.toSeq.sortBy(_._1).map { case (path, ops) =>
       val params = "\\{(\\w+)\\}".r.findAllMatchIn(path).map(_.group(1)).toSeq

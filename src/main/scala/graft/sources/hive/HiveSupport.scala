@@ -2,6 +2,8 @@ package graft.sources.hive
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.EngineConfs
+
 /** Hive-metastore access for the gateway.
   *
   * The reference ships a DSv2 Hive connector
@@ -15,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   * knobs a deployment needs — rather than re-implementing the scan and
   * write planning the reference duplicates from Spark.
   *
-  * `newHiveSession` builds a SparkSession whose session catalog is
-  * backed by a Hive metastore:
+  * `newHiveSession` builds the engine session ([[EngineConfs.session]])
+  * with its session catalog backed by a Hive metastore:
   *   - `metastoreDir`: the embedded-Derby metastore location (a real
   *     deployment passes `hive.metastore.uris` instead via `extra`).
   *   - `warehouseDir`: where managed-table data lands.
@@ -39,23 +41,15 @@ object HiveSupport {
     * `spark.sql.catalogImplementation=hive` takes effect in a fresh
     * SharedState.
     */
-  def newHiveSession(master: String, metastoreDir: String, warehouseDir: String,
+  def newHiveSession(metastoreDir: String, warehouseDir: String,
       extra: Map[String, String] = Map.empty): SparkSession = {
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.catalogImplementation", "hive")
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$metastoreDir;create=true")
-      .config("spark.sql.warehouse.dir", warehouseDir)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .enableHiveSupport()
-    extra.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+    val s = EngineConfs.session("graft-hive", Seq(
+      "javax.jdo.option.ConnectionURL" -> s"jdbc:derby:;databaseName=$metastoreDir;create=true",
+      "spark.sql.warehouse.dir" -> warehouseDir) ++ extra, hive = true)
     // Restore the previous default AND thread-active session: anything
     // in this JVM resolving SparkSession.active / SQLConf.get (rules,
     // UDF registration) must keep seeing its original session — the

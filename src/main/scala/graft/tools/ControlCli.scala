@@ -4,6 +4,8 @@ import java.io.IOException
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
+import graft.core.Json.{quote => q}
+
 /** `graft-ctl` — the admin command line over the REST admin surface
   * (the reference's kyuubi-ctl, kyuubi-ctl/.../cli/ControlCli.scala:27,
   * whose verbs are list/get/delete over engines, sessions and
@@ -135,21 +137,21 @@ object ControlCli {
           return Result(1, s"""{"error": "duplicate extra resource basenames collide as upload part names: ${dupNames.toSeq.sorted.mkString(", ")} — rename or deduplicate"}""")
         val req = {
           val sb = new StringBuilder("{")
-          sb ++= s""""batchType": ${MiniJson.q(
+          sb ++= s""""batchType": ${q(
             MiniJson.str(spec, "batchType").getOrElse("SPARK"))}"""
-          MiniJson.str(spec, "className").foreach(c => sb ++= s""", "className": ${MiniJson.q(c)}""")
+          MiniJson.str(spec, "className").foreach(c => sb ++= s""", "className": ${q(c)}""")
           MiniJson.str(spec, "user").orElse(asUser.map(_.takeWhile(_ != ':')))
-            .foreach(u => sb ++= s""", "user": ${MiniJson.q(u)}""")
-          MiniJson.str(spec, "name").foreach(n => sb ++= s""", "name": ${MiniJson.q(n)}""")
+            .foreach(u => sb ++= s""", "user": ${q(u)}""")
+          MiniJson.str(spec, "name").foreach(n => sb ++= s""", "name": ${q(n)}""")
           val args0 = MiniJson.strArray(spec, "args")
           if (args0.nonEmpty)
-            sb ++= s""", "args": [${args0.map(MiniJson.q).mkString(", ")}]"""
+            sb ++= s""", "args": [${args0.map(q).mkString(", ")}]"""
           val conf = MiniJson.strMap(spec, "conf")
           if (conf.nonEmpty)
             sb ++= s""", "conf": {${conf.map { case (k, v) =>
-              s"${MiniJson.q(k)}: ${MiniJson.q(v)}" }.mkString(", ")}}"""
+              s"${q(k)}: ${q(v)}" }.mkString(", ")}}"""
           if (extras.nonEmpty)
-            sb ++= s""", "extraResourcesMap": {"files": ${MiniJson.q(
+            sb ++= s""", "extraResourcesMap": {"files": ${q(
               extras.map(_.getFileName.toString).mkString(","))}}"""
           sb ++= "}"
           sb.toString
@@ -226,7 +228,7 @@ object ControlCli {
         if (!terminal(state)) Thread.sleep(300)
       }
       drainLog() // the tail written between the last poll and terminal
-      val line = s"""{"id": ${MiniJson.q(id)}, "state": ${MiniJson.q(
+      val line = s"""{"id": ${q(id)}, "state": ${q(
         if (state.isEmpty) "UNKNOWN" else state)}}"""
       emit(line); collected.append(line)
       // with a live sink every line already went out — don't echo twice
@@ -343,17 +345,6 @@ object ControlCli {
         out.result()
       }
     }
-
-    def q(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
   }
 
   private val usage: String =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.{TpcdsCorpusSql, TpchCorpusSql}
 
 /** Dev helper: regenerate the CorpusGoldenSpec table — runs every
@@ -10,13 +8,7 @@ import graft.queries.{TpcdsCorpusSql, TpchCorpusSql}
   */
 object GoldenDump {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.EngineConfs.session("graft-goldendump")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.catalog.tpch", classOf[graft.sources.tpch.TpchCatalog].getName)
     spark.conf.set("spark.sql.catalog.tpcds", classOf[graft.sources.tpcds.TpcdsCatalog].getName)

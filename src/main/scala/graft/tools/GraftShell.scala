@@ -2,9 +2,7 @@ package graft.tools
 
 import scala.concurrent.ExecutionContext.Implicits.global
 
-import org.apache.spark.sql.SparkSession
-
-import graft.core.{Engine, OperationState, ResultMode}
+import graft.core.{Engine, EngineConfs, OperationState, ResultMode}
 
 /** Minimal interactive/one-shot SQL front-end over the gateway Engine —
   * the stand-in for the reference's beeline-over-Thrift entry point.
@@ -26,15 +24,7 @@ object GraftShell {
       case Array("--mode", "incremental") => ResultMode.Incremental
     }.getOrElse(ResultMode.Full)
 
-    val spark = graft.core.EngineConfs(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-shell")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = EngineConfs.session("graft-shell")
     spark.sparkContext.setLogLevel("WARN")
 
     val engine = new Engine(spark)

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named SparkEntry queries to
   * `<outDir>/<query>_<suffix>.txt` — the optimization round's
   * before/after plan evidence (plans/r17/). Dev-only; the driver never
@@ -21,19 +19,9 @@ object PlanDump {
       if (args(2) == "ALL") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // EngineConfs: dump plans under the SAME tuned session the bench
-    // measures (r17 VERDICT #3 — the r17 after-plans were dumped
-    // without the bench confs)
-    val spark = graft.core.EngineConfs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", classOf[graft.plans.GraftSparkExtension].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // dump plans under the SAME session the bench measures (r17
+    // VERDICT #3 — the r17 after-plans were dumped without the bench confs)
+    val spark = graft.core.EngineConfs.session("graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

@@ -62,9 +62,10 @@ class EngineProcSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-cmd2")
     // SPARK_HOME is set in this environment, but under sbt the engine
     // classes are an unpacked directory — not a legal app resource
-    val builder = new EngineProcBuilder(dir)
+    val builder = new EngineProcBuilder(dir, master = "local[3]")
     val cmd = builder.command("user/bob")
     assert(cmd.head.endsWith("/bin/java"))
+    assert(cmd.contains("-Dspark.master=local[3]"), "the engine must get the launcher's master")
     assert(cmd.containsSlice(Seq("graft.server.EngineMain", dir.toString, "user/bob")))
     assert(cmd.exists(_.startsWith("--add-opens")), "Spark module-opens must be spelled out")
   }

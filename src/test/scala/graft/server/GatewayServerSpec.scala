@@ -16,7 +16,8 @@ class GatewayServerSpec extends AnyFunSuite {
 
   test("gateway routes each user to an isolated engine JVM and forwards the conversation") {
     val dir = Files.createTempDirectory("graft-gateway")
-    val builder = new EngineProcBuilder(dir, engineSecret = Some("gw-secret"))
+    val builder = new EngineProcBuilder(dir, engineSecret = Some("gw-secret"),
+      master = "local[1]")
     val gw = new GatewayServer(builder,
       auth = Some(new StaticAuthenticationProvider(
         Map("alice" -> "pwa", "bob" -> "pwb")))).start()
@@ -33,6 +34,12 @@ class GatewayServerSpec extends AnyFunSuite {
         // through the token-secured hop
         val ru = ca.createStatement().executeQuery("SELECT session_user() AS u")
         assert(ru.next() && ru.getString("u") == "alice")
+        // the engine runs graft's extension (its SQL functions) on the
+        // master the launcher was given
+        val rt = ca.createStatement().executeQuery("SELECT graft_token_count('a b c') AS n")
+        assert(rt.next() && rt.getInt("n") == 3)
+        val rm = ca.createStatement().executeQuery("SET spark.master")
+        assert(rm.next() && rm.getString("value") == "local[1]")
         // metadata ops route through the same engine connection
         val schemas = ca.getMetaData.getSchemas()
         assert(schemas.next(), "engine must report at least one schema")

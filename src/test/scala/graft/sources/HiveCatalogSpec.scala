@@ -22,7 +22,6 @@ class HiveCatalogSpec extends AnyFunSuite {
     graft.SparkFixture.spark
     val base = Files.createTempDirectory("graft-hive").toAbsolutePath
     HiveSupport.newHiveSession(
-      master = "local[4]",
       metastoreDir = s"$base/metastore_db",
       warehouseDir = s"$base/warehouse")
   }
