@@ -292,9 +292,39 @@ abstract class Operation(val session: EngineSession) {
       scala.concurrent.duration.Duration(timeoutMs, TimeUnit.MILLISECONDS))
     state
   }
+
+  /** The long-poll read behind status calls: wait at most `maxMs` for
+    * the operation to become terminal (finish, error, cancel, timeout
+    * and close all complete the promise, so each wakes the waiter at
+    * once), then return the current state. Never throws: a waiter that
+    * runs out its bound, or is interrupted, reads the state as it is.
+    */
+  def awaitTerminal(maxMs: Long = Operation.StatusWaitMs): OperationState = {
+    // terminal already: the common case for clients (hive-jdbc 2.3) that
+    // re-read the status on every row they iterate
+    if (!state.terminal) {
+      try scala.concurrent.Await.ready(completion.future,
+        scala.concurrent.duration.Duration(maxMs, TimeUnit.MILLISECONDS))
+      catch {
+        case _: java.util.concurrent.TimeoutException => ()
+        case _: InterruptedException => Thread.currentThread().interrupt()
+      }
+    }
+    state
+  }
 }
 
 object Operation {
+  /** How long a status read (Thrift GetOperationStatus, Trino nextUri)
+    * holds for the operation to finish before it answers with the
+    * current state: HiveServer2's first long-poll step, and a 2 Hz
+    * refresh for progress-bar clients. Clients such as hive-jdbc poll
+    * with no pause of their own, so without the hold each statement
+    * costs thousands of status round trips that take cores from Spark.
+    * A constant, not a setting.
+    */
+  val StatusWaitMs: Long = 500
+
   /** Shared scheduler for timeout monitors. */
   lazy val timeoutScheduler: ScheduledExecutorService =
     Executors.newScheduledThreadPool(1, r => {

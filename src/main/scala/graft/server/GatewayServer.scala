@@ -63,6 +63,14 @@ final class GatewayServer(
     // launch credentials from.
     credentials: Option[CredentialsManager] = None) {
 
+  // An engine holds GetOperationStatus up to Operation.StatusWaitMs, so
+  // a read timeout at or below it would fail (and evict) healthy
+  // connections whose statements merely run long.
+  require(engineSocketTimeoutMs <= 0 ||
+    engineSocketTimeoutMs > graft.core.Operation.StatusWaitMs,
+    s"engineSocketTimeoutMs ($engineSocketTimeoutMs) must be 0 (none) or above " +
+      s"the engine's status long-poll of ${graft.core.Operation.StatusWaitMs} ms")
+
   private val pool = new EnginePool(builder, poolSize, selectPolicy)
   private val discovery = builder.discoveryClient
 

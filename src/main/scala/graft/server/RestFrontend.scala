@@ -1489,7 +1489,9 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     * server/trino/api/v1/StatementResource.scala): `POST /v1/statement`
     * with the SQL as the request body returns a JSON document with a
     * `nextUri`; the client follows `nextUri` until it disappears, with
-    * `columns` + `data` appearing on the final page. States map to
+    * `columns` + `data` appearing on the final page. Each `nextUri` GET
+    * is held up to `Operation.StatusWaitMs` for the query to finish,
+    * as Trino holds it up to its `maxWait`. States map to
     * Trino's QUEUED/RUNNING/FINISHED/FAILED vocabulary. Columns carry
     * Trino type names plus a `typeSignature` document, failures carry
     * a Trino error document (message/errorCode/errorName/errorType),
@@ -1578,7 +1580,9 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         case ("GET", opId :: _ :: Nil) =>
           Option(opSessions.get(opId)).flatMap(_.operation(opId)) match {
             case Some(op: ExecuteStatement) =>
-              val state = op.currentState
+              // held like Trino's own nextUri maxWait: the client follows
+              // nextUri with no pause of its own
+              val state = op.awaitTerminal()
               val doc = trinoDoc(op, state, firstPoll = false)
               try reply(ex, 200, doc)
               finally if (state == OperationState.Finished) {

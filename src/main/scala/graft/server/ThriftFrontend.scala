@@ -32,8 +32,8 @@ import graft.core._
   * DECIMAL/DATE/TIMESTAMP/complex values travel as strings per the
   * HiveServer2 convention (the JDBC client re-parses them by column
   * type). Operation lifecycle maps 1:1 onto
-  * [[graft.core.Operation]]: async execute + GetOperationStatus
-  * polling, cancel via Spark job groups, fetch paging via
+  * [[graft.core.Operation]]: async execute + long-polled
+  * GetOperationStatus, cancel via Spark job groups, fetch paging via
   * [[FetchIterator]] (NEXT/PRIOR/FIRST orientations).
   */
 final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
@@ -547,12 +547,19 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
       val resp = new TGetOperationStatusResp()
       val op = ops.get(idOf(req.getOperationHandle.getOperationId))
       if (op == null) { resp.setStatus(err(new NoSuchElementException("no such operation"))); return resp }
+      // Long poll (HiveServer2's hive.server2.long.polling.timeout,
+      // Kyuubi's kyuubi.operation.status.polling.timeout): hold the call
+      // until the operation is terminal or Operation.StatusWaitMs
+      // passes. hive-jdbc polls with no pause, trusting the server to
+      // hold; answering at once turns every statement into a spin of
+      // status round trips on both ends of the socket.
+      val state = op.awaitTerminal()
       // Status polling is client activity: without this, a statement
       // running longer than the idle timeout finishes and is then
       // reaped before its first FetchResults (reference touches the
       // session on every access).
       op.session.touch()
-      val st = op.currentState match {
+      val st = state match {
         case OperationState.Initialized => TOperationState.INITIALIZED_STATE
         case OperationState.Pending => TOperationState.PENDING_STATE
         case OperationState.Running | OperationState.Compiled => TOperationState.RUNNING_STATE
@@ -591,10 +598,10 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
         prog.setRows(stages.map(s => Seq(s.stageId.toString, s.numTasks.toString,
           s.numCompletedTasks.toString, s.numActiveTasks.toString).asJava).asJava)
         prog.setProgressedPercentage(
-          if (op.currentState.terminal) 1.0
+          if (state.terminal) 1.0
           else if (total > 0) done.toDouble / total else 0.0)
         prog.setStatus(
-          if (op.currentState.terminal) TJobExecutionStatus.COMPLETE
+          if (state.terminal) TJobExecutionStatus.COMPLETE
           else TJobExecutionStatus.IN_PROGRESS)
         prog.setFooterSummary("")
         prog.setStartTime(0L)

@@ -4,7 +4,7 @@ import java.io.ByteArrayInputStream
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.Base64
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, TimeUnit}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.thrift.protocol.TBinaryProtocol
@@ -143,15 +143,22 @@ final class ThriftHttpFrontend(frontend: ThriftFrontend, requestedPort: Int = 0,
       case _: Exception => try ex.sendResponseHeaders(500, -1) catch { case _: Exception => }
     } finally ex.close()
   })
-  server.setExecutor(Executors.newFixedThreadPool(16, r => {
+  // Owned by this frontend and shut down by stop(): status long-polls
+  // hold these threads for up to Operation.StatusWaitMs each.
+  private val workers = Executors.newFixedThreadPool(16, r => {
     val t = new Thread(r, "graft-thrift-http")
     t.setDaemon(true)
     t
-  }))
+  })
+  server.setExecutor(workers)
 
   def start(): ThriftHttpFrontend = { server.start(); this }
 
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    workers.shutdown()
+    workers.awaitTermination(10, TimeUnit.SECONDS)
+  }
 }
 
 object ThriftHttpFrontend {

@@ -447,4 +447,31 @@ class GatewayServerSpec extends AnyFunSuite {
         "every engine must be gone after the gateway exits")
     } finally proc.destroyForcibly()
   }
+
+  test("status long-polls forward within the engine read timeout without evicting the connection") {
+    import graft.core.Operation.StatusWaitMs
+    // a read timeout the engine's status hold can reach is refused up front
+    val e = intercept[IllegalArgumentException] {
+      new GatewayServer(new EngineProcBuilder(Files.createTempDirectory("graft-gateway-rt")),
+        engineSocketTimeoutMs = StatusWaitMs.toInt)
+    }
+    assert(e.getMessage.contains("engineSocketTimeoutMs"), e.getMessage)
+
+    val dir = Files.createTempDirectory("graft-gateway-longpoll")
+    val gw = new GatewayServer(new EngineProcBuilder(dir), engineSocketTimeoutMs = 3000).start()
+    try {
+      Class.forName("org.apache.hive.jdbc.HiveDriver")
+      val conn = DriverManager.getConnection(
+        s"jdbc:hive2://localhost:${gw.boundPort}/;auth=noSasl", "fay", "")
+      try {
+        // several held GetOperationStatus calls ride the one engine connection
+        val rs = conn.createStatement().executeQuery(
+          s"SELECT 5 AS v, reflect('java.lang.Thread', 'sleep', CAST(${StatusWaitMs * 4} AS BIGINT)) AS z")
+        assert(rs.next() && rs.getInt("v") == 5)
+        // an evicted connection would answer 'unknown session' here
+        val rs2 = conn.createStatement().executeQuery("SELECT 6 AS v")
+        assert(rs2.next() && rs2.getInt("v") == 6)
+      } finally conn.close()
+    } finally gw.stop()
+  }
 }

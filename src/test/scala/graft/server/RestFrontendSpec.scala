@@ -1090,6 +1090,53 @@ class RestFrontendSpec extends AnyFunSuite {
     }
   }
 
+  test("Trino nextUri GETs long-poll: a no-pause client reaches the final document in a handful") {
+    import graft.core.Operation.StatusWaitMs
+    withServer { (c, base) =>
+      val root = base.stripSuffix("/api/v1")
+      val next = java.util.regex.Pattern.compile("\"nextUri\"\\s*:\\s*\"([^\"]*)\"")
+      val t0 = System.nanoTime()
+      val (pc, pbody) = post(c, s"$root/v1/statement",
+        "SELECT reflect('java.lang.Thread', 'sleep', CAST(2000 AS BIGINT)) AS z")
+      assert(pc == 200, pbody)
+      var doc = pbody
+      var gets = 0
+      val deadline = t0 + 60e9.toLong
+      while (doc.contains("nextUri") && System.nanoTime() < deadline) {
+        val m = next.matcher(doc)
+        assert(m.find())
+        doc = get(c, root + m.group(1))._2
+        gets += 1
+      }
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(doc.contains("\"state\": \"FINISHED\""), doc)
+      val bound = math.ceil(ms / StatusWaitMs).toInt + 2
+      assert(gets <= bound, s"$gets nextUri GETs over ${ms.round} ms (bound $bound)")
+
+      // a DELETE wakes a GET blocked on a long query
+      val (_, lbody) = post(c, s"$root/v1/statement",
+        "SELECT reflect('java.lang.Thread', 'sleep', CAST(60000 AS BIGINT)) AS z")
+      val id = extract(lbody, "id")
+      val m = next.matcher(lbody)
+      assert(m.find())
+      val uri = root + m.group(1)
+      assert(get(c, uri)._2.contains("nextUri"), "the query should still run")
+      val blocked = scala.concurrent.Future {
+        val t = System.nanoTime()
+        val body = get(c, uri)._2
+        (body, (System.nanoTime() - t) / 1e6)
+      }(scala.concurrent.ExecutionContext.global)
+      Thread.sleep(StatusWaitMs / 5) // let the GET reach the server and block
+      val del = c.send(HttpRequest.newBuilder(URI.create(s"$root/v1/statement/$id"))
+        .DELETE().build(), HttpResponse.BodyHandlers.ofString())
+      assert(del.statusCode() == 204)
+      val (cdoc, cms) = scala.concurrent.Await.result(blocked,
+        scala.concurrent.duration.Duration(60, "s"))
+      assert(cdoc.contains("\"state\": \"CANCELED\""), cdoc)
+      assert(cms < StatusWaitMs, s"blocked GET held ${cms.round} ms")
+    }
+  }
+
   test("Trino columns are typed with typeSignature; errors are Trino documents") {
     withServer { (c, base) =>
       val root = base.stripSuffix("/api/v1")

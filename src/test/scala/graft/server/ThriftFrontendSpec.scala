@@ -763,4 +763,105 @@ class ThriftFrontendSpec extends AnyFunSuite with BeforeAndAfterAll {
       DriverManager.getConnection(u, "gwen", "").close()
     } finally fe.stop()
   }
+
+  // ---- long-polled GetOperationStatus, over a raw TCLIService client ----
+
+  import org.apache.hive.service.rpc.thrift.{TCLIService, TCancelOperationReq,
+    TCloseSessionReq, TExecuteStatementReq, TGetOperationStatusReq,
+    TOpenSessionReq, TOperationHandle, TOperationState, TSessionHandle, TStatusCode}
+  import graft.core.Operation.StatusWaitMs
+
+  /** A statement that sleeps `ms` in one place: a known duration that
+    * takes no core from the box, and that cancel interrupts.
+    */
+  private def sleepSql(ms: Long) =
+    s"SELECT reflect('java.lang.Thread', 'sleep', CAST($ms AS BIGINT)) AS z"
+
+  private val terminalStates = Set(TOperationState.FINISHED_STATE,
+    TOperationState.ERROR_STATE, TOperationState.CANCELED_STATE,
+    TOperationState.CLOSED_STATE, TOperationState.TIMEDOUT_STATE)
+
+  private def withRawSession[A](conf: Map[String, String] = Map.empty)(
+      f: (TCLIService.Client, TSessionHandle) => A): A = {
+    val sock = new org.apache.thrift.transport.TSocket("localhost", frontend.boundPort)
+    sock.open()
+    try {
+      val client = new TCLIService.Client(new org.apache.thrift.protocol.TBinaryProtocol(sock))
+      val open = new TOpenSessionReq()
+      open.setConfiguration(conf.asJava)
+      val sess = client.OpenSession(open)
+      assert(sess.getStatus.getStatusCode == TStatusCode.SUCCESS_STATUS)
+      try f(client, sess.getSessionHandle)
+      finally client.CloseSession(new TCloseSessionReq(sess.getSessionHandle))
+    } finally sock.close()
+  }
+
+  private def executeAsync(client: TCLIService.Client, sess: TSessionHandle,
+      sql: String): TOperationHandle = {
+    val req = new TExecuteStatementReq(sess, sql)
+    req.setRunAsync(true)
+    val exec = client.ExecuteStatement(req)
+    assert(exec.getStatus.getStatusCode == TStatusCode.SUCCESS_STATUS)
+    exec.getOperationHandle
+  }
+
+  /** One status call: the state it answered and how long it was held. */
+  private def timedStatus(client: TCLIService.Client,
+      h: TOperationHandle): (TOperationState, Double) = {
+    val t0 = System.nanoTime()
+    val st = client.GetOperationStatus(new TGetOperationStatusReq(h))
+    (st.getOperationState, (System.nanoTime() - t0) / 1e6)
+  }
+
+  test("GetOperationStatus long-polls: a no-pause poll loop makes a handful of calls") {
+    // hive-jdbc polls exactly like this, trusting the server to hold
+    withRawSession() { (client, sess) =>
+      val h = executeAsync(client, sess, sleepSql(2000))
+      val t0 = System.nanoTime()
+      var state = TOperationState.INITIALIZED_STATE
+      var calls = 0
+      val deadline = t0 + 60e9.toLong
+      while (!terminalStates(state) && System.nanoTime() < deadline) {
+        state = timedStatus(client, h)._1
+        calls += 1
+      }
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(state == TOperationState.FINISHED_STATE)
+      // every call but the last was held its full bound
+      val bound = math.ceil(ms / StatusWaitMs).toInt + 2
+      assert(calls <= bound, s"$calls status calls over ${ms.round} ms (bound $bound)")
+    }
+  }
+
+  test("a cancel from another connection wakes a blocked GetOperationStatus") {
+    withRawSession() { (client, sess) =>
+      withRawSession() { (other, _) =>
+        val h = executeAsync(client, sess, sleepSql(60000))
+        assert(!terminalStates(timedStatus(client, h)._1))
+        val blocked = scala.concurrent.Future(timedStatus(client, h))(
+          scala.concurrent.ExecutionContext.global)
+        Thread.sleep(StatusWaitMs / 5) // let the call reach the server and block
+        other.CancelOperation(new TCancelOperationReq(h))
+        val (state, ms) = scala.concurrent.Await.result(blocked,
+          scala.concurrent.duration.Duration(60, "s"))
+        assert(state == TOperationState.CANCELED_STATE)
+        // answered on the cancel, not when its bound ran out
+        assert(ms < StatusWaitMs, s"blocked call held ${ms.round} ms")
+      }
+    }
+  }
+
+  test("a query timeout wakes a blocked GetOperationStatus") {
+    // 1250 ms lands halfway through the third held call
+    withRawSession(Map("graft.operation.query.timeout" -> "1250")) { (client, sess) =>
+      val h = executeAsync(client, sess, sleepSql(60000))
+      var last = (TOperationState.INITIALIZED_STATE, 0.0)
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!terminalStates(last._1) && System.nanoTime() < deadline)
+        last = timedStatus(client, h)
+      val (state, ms) = last
+      assert(state == TOperationState.TIMEDOUT_STATE)
+      assert(ms < StatusWaitMs, s"the call that saw the timeout was held ${ms.round} ms")
+    }
+  }
 }

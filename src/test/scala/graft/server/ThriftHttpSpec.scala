@@ -2,6 +2,8 @@ package graft.server
 
 import java.sql.DriverManager
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -215,5 +217,24 @@ class ThriftHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("only the exact mounted path is served (prefix matches are 404)") {
     assert(rawPost(http.boundPort, "/cliserviceXYZ", Array[Byte](1)) == 404)
     assert(rawPost(http.boundPort, "/cliservice/extra", Array[Byte](1)) == 404)
+  }
+
+  test("stop() ends the frontend's worker threads") {
+    def workers = Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(t => t.isAlive && t.getName.startsWith("graft-thrift-http"))
+    val baseline = workers
+    val fe = new ThriftHttpFrontend(binary).start()
+    try {
+      val conn = DriverManager.getConnection(
+        s"jdbc:hive2://localhost:${fe.boundPort}/;transportMode=http;httpPath=cliservice", "dora", "")
+      try {
+        val rs = conn.createStatement().executeQuery("SELECT 7 AS v")
+        assert(rs.next() && rs.getInt("v") == 7)
+      } finally conn.close()
+      assert((workers -- baseline).nonEmpty, "the statement should have run on the frontend's workers")
+    } finally fe.stop()
+    // stop() awaits the pool; a worker may still be unwinding its run()
+    (workers -- baseline).foreach(_.join(10000))
+    assert(workers.size == baseline.size, s"leaked: ${(workers -- baseline).map(_.getName)}")
   }
 }
