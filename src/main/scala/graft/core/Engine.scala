@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.internal.SQLConf
 
 /** Engine share levels controlling SparkSession reuse across gateway
   * sessions (ref kyuubi-common/.../engine/ShareLevel.scala:23-46):
@@ -183,27 +184,39 @@ final class Engine(
     confAdvisors.foldLeft(sanitized)((acc, a) => acc ++ a.confOverlay(user, acc))
   }
 
+  /** A `newSession()` clone of `parent` as every engine session starts:
+    * artifact isolation off, so all sessions share one executor class
+    * loader and with it Spark's codegen cache, which is keyed by (class
+    * loader, code). With Spark's default each session gets a loader of
+    * its own, and a new connection recompiles every whole-stage stage
+    * and runs it cold. A session reads the setting once, at its first
+    * statement, so it is set before any statement runs; a client's
+    * `spark.sql.artifact.isolation.enabled=true` session conf, applied
+    * before its first statement, still isolates that session. Added
+    * jars are visible to every session, as on Spark 3.
+    */
+  private def newEngineSession(parent: SparkSession): SparkSession = {
+    val s = parent.newSession()
+    s.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, false)
+    // per-query column-lineage dispatch to the Events bus (reference
+    // SparkOperationLineageQueryExecutionListener); no-op per query
+    // until a handler registers. newSession() starts with no listeners.
+    s.listenerManager.register(new graft.plans.LineageQueryExecutionListener)
+    s
+  }
+
   def openSession(user: String, conf: Map[String, String] = Map.empty): EngineSession = {
     val id = UUID.randomUUID().toString
     val key = shareKey(user, id, conf)
     val base = sparkByKey.computeIfAbsent(key, _ => {
       discovery.register(key, engineId)
-      val s = rootSpark.newSession()
-      // per-query column-lineage dispatch to the Events bus (reference
-      // SparkOperationLineageQueryExecutionListener); no-op per query
-      // until a handler registers
-      s.listenerManager.register(new graft.plans.LineageQueryExecutionListener)
+      val s = newEngineSession(rootSpark)
       // run once per share-scope engine session (reference
       // kyuubi.engine.initialize.sql — global temp views, warmups)
       engineInitSql.foreach(s.sql(_).collect())
       s
     })
-    val sessionSpark = if (singleSession) base else {
-      val s = base.newSession()
-      // newSession() starts with fresh listener state
-      s.listenerManager.register(new graft.plans.LineageQueryExecutionListener)
-      s
-    }
+    val sessionSpark = if (singleSession) base else newEngineSession(base)
     // identity for the authz rules (graft.plans.ApplyAuthzPolicies):
     // user plus GroupProvider-resolved membership, so group-subject
     // policy items (Ranger's users/groups lists) can match. MUST be

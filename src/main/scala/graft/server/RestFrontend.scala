@@ -112,6 +112,14 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
   // recovered batches, which keep their original id over a new op)
   private val batches = new ConcurrentHashMap[String, (EngineSession, ExecuteStatement)]()
   private val opSessions = new ConcurrentHashMap[String, EngineSession]()
+  // the last documents of Trino queries that ended other than FINISHED,
+  // served again after their engine session is closed (Trino keeps its
+  // query.max-history of 100 ended queries the same way)
+  private val trinoEnded = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, String]() {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, String]): Boolean =
+        size() > 100
+    })
   // op handle → batch id, for routing operation events to the store
   private val opToBatch = new ConcurrentHashMap[String, String]()
 
@@ -274,7 +282,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
   }
   Events.register(sessionCloseListener)
 
-  private val server: HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server: HttpServer = HttpServers.create(new InetSocketAddress(port))
 
   /** This gateway's address as recorded in batch ownership (the socket
     * binds at construction, so the real port is known even for
@@ -1506,13 +1514,15 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
           if (sql.isEmpty) { reply(ex, 400, """{"error": "empty statement"}"""); return }
           val user = Option(ex.getRequestHeaders.getFirst("X-Trino-User")).getOrElse("trino")
           // each query runs in an engine session of its own, closed once
-          // the client has its final data document
+          // the client has its final document
           def startQuery(query: String): Unit = {
             val sess = engine.openSession(user)
-            applyTrinoSession(ex, sess)
-            val op = sess.executeStatement(query, ResultMode.Full)
+            val op = try {
+              applyTrinoSession(ex, sess)
+              sess.executeStatement(query, ResultMode.Full)
+            } catch { case e: Throwable => engine.closeSession(sess.id); throw e }
             opSessions.put(op.handle, sess)
-            reply(ex, 200, trinoDoc(op, op.currentState, firstPoll = true))
+            trinoReply(ex, op, op.currentState, firstPoll = true)
           }
           sql match {
             // PREPARE name FROM sql — bookkeeping lives on the CLIENT
@@ -1582,25 +1592,24 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
             case Some(op: ExecuteStatement) =>
               // held like Trino's own nextUri maxWait: the client follows
               // nextUri with no pause of its own
-              val state = op.awaitTerminal()
-              val doc = trinoDoc(op, state, firstPoll = false)
-              try reply(ex, 200, doc)
-              finally if (state == OperationState.Finished) {
-                // the data document is the query's last: release the
-                // client, then close the query's engine session
-                ex.close()
-                opSessions.remove(opId)
-                engine.closeSession(op.session.id)
-              }
-            case _ => reply(ex, 404, """{"error": "no such query"}""")
+              trinoReply(ex, op, op.awaitTerminal(), firstPoll = false)
+            case _ => Option(trinoEnded.get(opId)) match {
+              case Some(doc) => reply(ex, 200, doc)
+              case None => reply(ex, 404, """{"error": "no such query"}""")
+            }
           }
         // Trino clients cancel by DELETEing the statement URI (either
         // /v1/statement/{id} or the paged nextUri form) — 204 No Content.
         case ("DELETE", opId :: _) =>
           Option(opSessions.get(opId)).flatMap(_.operation(opId)) match {
-            case Some(op) =>
+            case Some(op: ExecuteStatement) =>
               try op.cancel() catch { case _: Throwable => }
               ex.sendResponseHeaders(204, -1)
+              ex.close()
+              val st = op.currentState
+              endTrinoQuery(op, Option.when(st != OperationState.Finished)(
+                trinoDoc(op, st, firstPoll = false)))
+            case _ if trinoEnded.containsKey(opId) => ex.sendResponseHeaders(204, -1)
             case _ => reply(ex, 404, """{"error": "no such query"}""")
           }
         case _ => reply(ex, 404, """{"error": "not found"}""")
@@ -1775,8 +1784,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
   // Trino error document (QueryError): our engine has one failure
   // class at the wire, so everything maps to GENERIC_INTERNAL_ERROR
   // except user cancels.
-  private def trinoError(op: ExecuteStatement): String = {
-    val canceled = op.currentState == OperationState.Canceled
+  private def trinoError(op: ExecuteStatement, canceled: Boolean): String = {
     val msg = op.exception.map(e => String.valueOf(e.getMessage))
       .getOrElse(if (canceled) "Query was canceled" else "query failed")
     val (code, name, tpe) =
@@ -1787,7 +1795,10 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       s""" "failureInfo": {"type": ${q(name)}, "message": ${q(msg)}}}"""
   }
 
-  /** The Trino document for `op` in operation state `st`. */
+  /** The Trino document for `op` in operation state `st`: a `nextUri`
+    * until the query is terminal, then its last document (the rows on a
+    * GET, or a Trino error). The POST answer never carries rows.
+    */
   private def trinoDoc(op: ExecuteStatement, st: OperationState, firstPoll: Boolean): String = {
     import org.apache.spark.sql.types._
     val id = op.handle
@@ -1795,33 +1806,56 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       case OperationState.Initialized | OperationState.Pending => "QUEUED"
       case OperationState.Running | OperationState.Compiled => "RUNNING"
       case OperationState.Finished => "FINISHED"
-      case OperationState.Canceled => "CANCELED"
+      // closed under the client: a DELETE cancels, then closes
+      case OperationState.Canceled | OperationState.Closed => "CANCELED"
       case _ => "FAILED"
     }
     val base = s""""id": ${q(id)}, "stats": {"state": ${q(state)}}"""
-    state match {
-      case "FINISHED" if !firstPoll =>
-        val schema = op.resultSchema
-        val cols = schema.fields.map(trinoColumn).mkString("[", ",", "]")
-        val text = new ResultEncoders.Text(op.session.spark)
-        // numbers and booleans are JSON literals; DECIMAL is a plain
-        // (never exponent) number; everything else a text-rule string
-        def cell(v: Any, dt: DataType): String = dt match {
-          case _ if v == null => "null"
-          case BooleanType | ByteType | ShortType | IntegerType | LongType |
-               FloatType | DoubleType => String.valueOf(v)
-          case _: DecimalType => text(v, dt)
-          case _ => q(text(v, dt))
-        }
-        val data = op.fetchIterator.fetch(FetchOrientation.First, Int.MaxValue)
-          .map(row => schema.fields.indices.map(i => cell(row.get(i), schema.fields(i).dataType))
-            .mkString("[", ",", "]")).mkString("[", ",", "]")
-        s"""{$base, "columns": $cols, "data": $data}"""
-      case "FAILED" | "CANCELED" =>
-        s"""{$base, "error": ${trinoError(op)}}"""
-      case _ =>
-        s"""{$base, "nextUri": ${q(s"/v1/statement/$id/1")}}"""
+    if (!trinoFinal(st, firstPoll))
+      s"""{$base, "nextUri": ${q(s"/v1/statement/$id/1")}}"""
+    else if (st == OperationState.Finished) {
+      val schema = op.resultSchema
+      val cols = schema.fields.map(trinoColumn).mkString("[", ",", "]")
+      val text = new ResultEncoders.Text(op.session.spark)
+      // numbers and booleans are JSON literals; DECIMAL is a plain
+      // (never exponent) number; everything else a text-rule string
+      def cell(v: Any, dt: DataType): String = dt match {
+        case _ if v == null => "null"
+        case BooleanType | ByteType | ShortType | IntegerType | LongType |
+             FloatType | DoubleType => String.valueOf(v)
+        case _: DecimalType => text(v, dt)
+        case _ => q(text(v, dt))
+      }
+      val data = op.fetchIterator.fetch(FetchOrientation.First, Int.MaxValue)
+        .map(row => schema.fields.indices.map(i => cell(row.get(i), schema.fields(i).dataType))
+          .mkString("[", ",", "]")).mkString("[", ",", "]")
+      s"""{$base, "columns": $cols, "data": $data}"""
+    } else s"""{$base, "error": ${trinoError(op, canceled = state == "CANCELED")}}"""
+  }
+
+  private def trinoFinal(st: OperationState, firstPoll: Boolean): Boolean =
+    st.terminal && !(firstPoll && st == OperationState.Finished)
+
+  /** Send `op`'s Trino document for state `st`. After the query's last
+    * document, release the client and then end the query.
+    */
+  private def trinoReply(ex: HttpExchange, op: ExecuteStatement, st: OperationState,
+      firstPoll: Boolean): Unit = {
+    val doc = trinoDoc(op, st, firstPoll)
+    try reply(ex, 200, doc)
+    finally if (trinoFinal(st, firstPoll)) {
+      ex.close()
+      endTrinoQuery(op, Option.when(st != OperationState.Finished)(doc))
     }
+  }
+
+  /** Close a Trino query's engine session (each query has its own),
+    * keeping its error document, if it ended in one, for repeat GETs.
+    */
+  private def endTrinoQuery(op: Operation, errorDoc: Option[String]): Unit = {
+    errorDoc.foreach(trinoEnded.put(op.handle, _))
+    opSessions.remove(op.handle)
+    engine.closeSession(op.session.id)
   }
 
   private def sessionJson(s: EngineSession): String =

@@ -38,7 +38,7 @@ final class ThriftHttpFrontend(frontend: ThriftFrontend, requestedPort: Int = 0,
   private val processor = frontend.processor
   private val mountedPath = s"/$httpPath"
 
-  private val server: HttpServer = HttpServer.create(new InetSocketAddress(requestedPort), 0)
+  private val server: HttpServer = HttpServers.create(new InetSocketAddress(requestedPort))
   val boundPort: Int = server.getAddress.getPort
 
   private def basicCredentials(ex: HttpExchange): Option[(String, String)] =

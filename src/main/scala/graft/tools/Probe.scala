@@ -2,6 +2,7 @@ package graft.tools
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
   SparkListenerStageCompleted}
 
@@ -13,6 +14,8 @@ import graft.queries.{TpcdsCorpusSql, TpchCorpusSql}
   * stages and tasks, then prints the slowest stages of the last
   * iteration (steady state, codegen warm) — so a claim is decomposed
   * into scheduling overhead vs real work before anything is changed.
+  * Each iteration also counts its Janino compiles (`compiles=`), which
+  * stay at 0 once codegen is warm.
   *
   * Names, comma-separated:
   *   - a SparkEntry query (`d10_jaccard_pairs`) on SPARK_GRAFT_SF_DIR's
@@ -97,14 +100,17 @@ object Probe {
       val run = workload(name)
       val walls = (1 to iters).map { it =>
         listener.reset()
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         run()
         val wall = (System.nanoTime() - t0) / 1e9
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
         val (jobs, stages) = listener.settle()
         graft.operators.SketchRegistry.releaseAll()
         val stageSec = stages.map(_.ms).sum / 1000.0
         println(f"[probe] $name iter=$it wall=$wall%.3fs jobs=$jobs stages=${stages.size} " +
-          f"tasks=${stages.map(_.tasks).sum} sum_stage=$stageSec%.3fs gap=${wall - stageSec}%.3fs")
+          f"tasks=${stages.map(_.tasks).sum} sum_stage=$stageSec%.3fs gap=${wall - stageSec}%.3fs " +
+          s"compiles=$compiles")
         if (it == iters) stages.sortBy(-_.ms).take(20).foreach { s =>
           println(f"[probe]   job=${s.jobId}%3d stage=${s.stageId}%4d ${s.ms}%6dms " +
             f"tasks=${s.tasks}%4d in=${s.input}%9d sr=${s.shufRead}%9d sw=${s.shufWrite}%9d " +

@@ -127,4 +127,59 @@ class EngineSpec extends AnyFunSuite {
     engine.closeSession(a1.id)
     engine.closeSession(a2.id)
   }
+
+  test("engine sessions share generated code: a new session recompiles nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val stmt = "SELECT count(*) AS n FROM range(0, 20000, 1, 4) WHERE id % 97 = 13"
+    def run(sess: EngineSession): Unit = {
+      val op = sess.executeStatement(stmt)
+      assert(op.awaitTermination() == OperationState.Finished)
+      assert(op.fetchIterator.next().getLong(0) == 207L)
+    }
+    // compile the statement's code once
+    val first = engine.openSession("codegen")
+    try run(first) finally engine.closeSession(first.id)
+    // The Janino compile count of the statement in a session opened for
+    // it. The counter is process-wide, so a stray compile from other
+    // work can land in one window: each check takes up to three fresh
+    // sessions and stops at the first with 0 compiles. With a class
+    // loader per session, every fresh session recompiles.
+    def compilesBeforeAZero(e: Engine, user: => String): Seq[Long] =
+      Iterator.fill(3) {
+        val sess = e.openSession(user)
+        try {
+          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          run(sess)
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        } finally e.closeSession(sess.id)
+      }.takeWhile(_ > 0).toSeq
+    def fresh = s"codegen-${java.util.UUID.randomUUID()}"
+    // a connection under a new share key: a new share-scope base
+    // session and its per-connection clone
+    val second = compilesBeforeAZero(engine, fresh)
+    assert(second.size < 3, s"compiles per new session: $second")
+    // Trino-style sessions, opened and closed per query
+    val perQuery = compilesBeforeAZero(engine, "trino")
+    assert(perQuery.size < 3, s"compiles per new session: $perQuery")
+    // statements in the share-scope base session itself
+    val single = compilesBeforeAZero(new Engine(spark, singleSession = true), fresh)
+    assert(single.size < 3, s"compiles per new share-scope session: $single")
+  }
+
+  test("engine sessions run their tasks under one class loader unless a session opts out") {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.internal.SQLConf
+    def taskLoader(sess: EngineSession): String =
+      try sess.spark.range(1).map(_ => String.valueOf(Thread.currentThread.getContextClassLoader))(
+        Encoders.STRING).collect().head
+      finally engine.closeSession(sess.id)
+    val a = taskLoader(engine.openSession("loader-a"))
+    assert(taskLoader(engine.openSession("loader-b")) == a)
+    assert(taskLoader(engine.openSession("loader-a")) == a)
+    // a client's spark.* session conf is applied before its first
+    // statement (ThriftFrontend OpenSession), so it can turn isolation on
+    val isolated = engine.openSession("loader-a")
+    isolated.spark.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, true)
+    assert(taskLoader(isolated) != a)
+  }
 }

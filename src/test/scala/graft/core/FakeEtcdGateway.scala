@@ -93,7 +93,7 @@ final class FakeEtcdGateway extends AutoCloseable {
   }
 
   private val server: HttpServer = {
-    val s = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 16)
+    val s = graft.server.HttpServers.create(new InetSocketAddress("127.0.0.1", 0), 16)
     s.createContext("/v3", (ex: HttpExchange) => {
       val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       val (code, resp) =

@@ -1593,6 +1593,73 @@ class RestFrontendSpec extends AnyFunSuite {
     } finally front.stop()
   }
 
+  test("Trino queries that fail or are deleted close their engine sessions") {
+    val engine = new Engine(spark)
+    val front = new RestFrontend(engine, port = 0)
+    val root = s"http://localhost:${front.start()}"
+    val closed = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val onClose = new graft.core.Events.Handler {
+      override def onEvent(e: graft.core.Events.Event): Unit = e match {
+        case graft.core.Events.SessionEvent(sid, _, "CLOSED", _) => closed.put(sid)
+        case _ => ()
+      }
+    }
+    graft.core.Events.register(onClose)
+    // every open session of this engine is closed: wait on CLOSED events
+    def awaitSessions(baseline: Int): Unit =
+      while (engine.openSessionCount != baseline)
+        if (closed.poll(30, java.util.concurrent.TimeUnit.SECONDS) == null)
+          fail(s"${engine.openSessionCount - baseline} Trino engine sessions left open")
+    try {
+      val c = HttpClient.newHttpClient()
+      val next = java.util.regex.Pattern.compile("\"nextUri\"\\s*:\\s*\"([^\"]*)\"")
+      val baseline = engine.openSessionCount
+      var doc = post(c, s"$root/v1/statement", "SELECT no_such_col")._2
+      var uri = ""
+      while (doc.contains("nextUri")) {
+        val m = next.matcher(doc)
+        assert(m.find())
+        uri = root + m.group(1)
+        doc = get(c, uri)._2
+      }
+      assert(doc.contains("\"state\": \"FAILED\""), doc)
+      awaitSessions(baseline)
+      // the error document outlives the session
+      if (uri.nonEmpty) assert(get(c, uri) == (200, doc))
+      // a query refused before it starts, here for a missing schema
+      val refused = c.send(HttpRequest.newBuilder(URI.create(s"$root/v1/statement"))
+        .header("X-Trino-Schema", "no_such_schema")
+        .POST(HttpRequest.BodyPublishers.ofString("SELECT 1")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(refused.statusCode() == 500, refused.body())
+      awaitSessions(baseline)
+      val (_, lbody) = post(c, s"$root/v1/statement",
+        "SELECT reflect('java.lang.Thread', 'sleep', CAST(60000 AS BIGINT)) AS z")
+      assert(engine.openSessionCount == baseline + 1)
+      val del = c.send(HttpRequest.newBuilder(URI.create(s"$root/v1/statement/${extract(lbody, "id")}"))
+        .DELETE().build(), HttpResponse.BodyHandlers.ofString())
+      assert(del.statusCode() == 204)
+      awaitSessions(baseline)
+    } finally {
+      graft.core.Events.unregister(onClose)
+      front.stop()
+    }
+  }
+
+  test("small REST replies are not held for the client's delayed ACK") {
+    withServer { (_, base) =>
+      // one keep-alive HTTP/1.1 connection
+      val c = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+      val ms = (1 to 21).map { _ =>
+        val t0 = System.nanoTime()
+        assert(get(c, s"$base/ping")._1 == 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      // Nagle plus a delayed ACK holds each small reply about 40 ms
+      assert(ms(10) < 20, s"ping ms, sorted: ${ms.map(_.round)}")
+    }
+  }
+
   test("stop() ends the frontend's named REST threads") {
     import scala.jdk.CollectionConverters._
     def restThreads: Set[Thread] = Thread.getAllStackTraces.keySet.asScala

@@ -237,4 +237,39 @@ class ThriftHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     (workers -- baseline).foreach(_.join(10000))
     assert(workers.size == baseline.size, s"leaked: ${(workers -- baseline).map(_.getName)}")
   }
+
+  test("small Thrift-HTTP replies are not held for the client's delayed ACK") {
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    import org.apache.hive.service.rpc.thrift._
+    import org.apache.thrift.protocol.TBinaryProtocol
+    import org.apache.thrift.transport.TIOStreamTransport
+    // one keep-alive connection, each RPC one POST of a Thrift frame
+    val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    def call[T](send: TCLIService.Client => Unit, recv: TCLIService.Client => T): T = {
+      val out = new java.io.ByteArrayOutputStream()
+      send(new TCLIService.Client(new TBinaryProtocol(new TIOStreamTransport(out))))
+      val r = client.send(HttpRequest.newBuilder(
+        java.net.URI.create(s"http://localhost:${http.boundPort}/cliservice"))
+        .POST(HttpRequest.BodyPublishers.ofByteArray(out.toByteArray)).build(),
+        HttpResponse.BodyHandlers.ofByteArray())
+      assert(r.statusCode() == 200)
+      val c = new TCLIService.Client(new TBinaryProtocol(new TIOStreamTransport(
+        new java.io.ByteArrayInputStream(r.body()), new java.io.ByteArrayOutputStream())))
+      send(c) // pair the reply's seqid with this client's request
+      recv(c)
+    }
+    val open = call(_.send_OpenSession(new TOpenSessionReq()), _.recv_OpenSession())
+    try {
+      val ms = (1 to 21).map { _ =>
+        val t0 = System.nanoTime()
+        val info = call(_.send_GetInfo(new TGetInfoReq(open.getSessionHandle,
+          TGetInfoType.CLI_SERVER_NAME)), _.recv_GetInfo())
+        assert(info.getStatus.getStatusCode == TStatusCode.SUCCESS_STATUS, info)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      // Nagle plus a delayed ACK holds each small reply about 40 ms
+      assert(ms(10) < 20, s"GetInfo ms, sorted: ${ms.map(_.round)}")
+    } finally call(_.send_CloseSession(new TCloseSessionReq(open.getSessionHandle)),
+      _.recv_CloseSession())
+  }
 }
