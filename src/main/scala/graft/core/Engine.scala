@@ -26,15 +26,20 @@ object ShareLevel {
 /** One gateway session: an isolated `SparkSession` clone (separate
   * SQLConf / temp views / UDFs over a shared SparkContext — ref
   * SparkSQLSessionManager.scala:108-120), plus its live operations.
+  * Only [[Engine.openSession]] makes one: `registry` is the engine's
+  * handle index, which an operation enters in `start` and leaves in
+  * [[Operation.close]].
   */
-final class EngineSession(
+final class EngineSession private[core] (
     val id: String,
     val user: String,
-    val spark: SparkSession) {
+    val spark: SparkSession,
+    registry: ConcurrentHashMap[String, Operation]) {
 
   val createdMs: Long = System.currentTimeMillis()
 
   private val ops = new ConcurrentHashMap[String, Operation]()
+  @volatile private var closed = false
 
   /** Last activity (open/statement) — drives the engine's idle reaper
     * (ref kyuubi.session.engine.idle.timeout).
@@ -60,18 +65,29 @@ final class EngineSession(
   private def start[O <: Operation](op: O, timeoutMs: Long)(implicit ec: ExecutionContext): O = {
     touch()
     ops.put(op.handle, op)
+    registry.put(op.handle, op)
+    // a close() that raced the registration has already walked `ops`
+    if (closed) {
+      forget(op)
+      throw new IllegalStateException(s"session $id is closed")
+    }
     if (timeoutMs > 0) op.armTimeout(timeoutMs, Operation.timeoutScheduler)
     op.run()
     op
   }
 
-  def operation(handle: String): Option[Operation] = Option(ops.get(handle))
+  /** Drop a closing operation from the session and the engine index. */
+  private[core] def forget(op: Operation): Unit = {
+    ops.remove(op.handle, op)
+    registry.remove(op.handle, op)
+  }
 
+  /** The session's live operations: a closed one is gone. */
   def openOperations: Seq[Operation] = ops.values.asScala.toSeq
 
   def close(): Unit = {
-    ops.values.asScala.foreach(_.close())
-    ops.clear()
+    closed = true
+    ops.values.asScala.foreach(op => try op.close() catch { case _: Throwable => })
   }
 }
 
@@ -155,6 +171,9 @@ final class Engine(
   Kdf.registerCredentialLookup(rootSpark, credentialsStore)
 
   private val sessions = new ConcurrentHashMap[String, EngineSession]()
+  // every live operation of every session, by handle: sessions add and
+  // Operation.close removes, so no frontend keeps a copy
+  private val operations = new ConcurrentHashMap[String, Operation]()
   // share-level cache: key → that scope's engine SparkSession
   private val sparkByKey = new ConcurrentHashMap[String, SparkSession]()
 
@@ -234,7 +253,7 @@ final class Engine(
     val connInit = conf.get("graft.session.initialize.sql")
       .map(_.split(";").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
     (sessionInitSql ++ connInit).foreach(sessionSpark.sql(_).collect())
-    val sess = new EngineSession(id, user, sessionSpark)
+    val sess = new EngineSession(id, user, sessionSpark, operations)
     Kdf.registerAll(sess.spark, engineId, sessionUser = Some(user))
     Kdf.registerCredentialLookup(sess.spark, credentialsStore)
     sessions.put(id, sess)
@@ -243,6 +262,12 @@ final class Engine(
   }
 
   def session(id: String): Option[EngineSession] = Option(sessions.get(id))
+
+  /** A live operation of any of this engine's sessions, by handle: the
+    * one lookup every frontend resolves a handle through. A closed
+    * operation is unknown.
+    */
+  def operation(handle: String): Option[Operation] = Option(operations.get(handle))
 
   /** All live gateway sessions (admin surface — reference
     * SessionsResource GET /sessions walks the SessionManager the same

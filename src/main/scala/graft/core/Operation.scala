@@ -1,7 +1,8 @@
 package graft.core
 
 import java.util.UUID
-import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
+import java.util.concurrent.{ScheduledExecutorService, ScheduledFuture, ScheduledThreadPoolExecutor,
+  TimeUnit}
 
 import scala.collection.View
 import scala.concurrent.{ExecutionContext, Future, Promise}
@@ -114,6 +115,7 @@ abstract class Operation(val session: EngineSession) {
       }
     }
     if (won) {
+      disarmTimeout()
       // event BEFORE releasing awaitTermination waiters — see setState
       try {
         Events.post(Events.OperationEvent(handle, session.id, to.toString,
@@ -240,7 +242,13 @@ abstract class Operation(val session: EngineSession) {
     }
   }
 
+  /** Close the operation and drop it from its session and the engine's
+    * index: from here on no frontend resolves its handle, and a fetch
+    * that raced the close finishes on the reference it already holds.
+    */
   def close(): Unit = {
+    session.forget(this)
+    disarmTimeout()
     val transitioned = synchronized {
       if (state != OperationState.Closed) {
         if (!state.terminal) {
@@ -270,11 +278,21 @@ abstract class Operation(val session: EngineSession) {
     }
   }
 
+  // The armed timeout task: it holds this operation until it runs, so it
+  // is cancelled (and, with the scheduler's remove-on-cancel, dropped
+  // from its queue) once the operation is terminal or closed.
+  @volatile private var timeoutTask: ScheduledFuture[_] = _
+
+  private def disarmTimeout(): Unit = {
+    val t = timeoutTask
+    if (t != null) t.cancel(false)
+  }
+
   /** Arm a timeout: if the op is not terminal after `ms`, cancel jobs
     * and mark TIMEOUT (ref ExecuteStatement timeout monitor :107-133).
     */
   def armTimeout(ms: Long, scheduler: ScheduledExecutorService): Unit = {
-    scheduler.schedule(new Runnable {
+    timeoutTask = scheduler.schedule(new Runnable {
       override def run(): Unit = {
         if (markTerminal(OperationState.Timeout)) {
           session.spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
@@ -282,6 +300,8 @@ abstract class Operation(val session: EngineSession) {
         }
       }
     }, ms, TimeUnit.MILLISECONDS)
+    // terminal before the task was stored: nothing else will cancel it
+    if (state.terminal) disarmTimeout()
   }
 
   def exception: Option[Throwable] = operationException
@@ -325,13 +345,19 @@ object Operation {
     */
   val StatusWaitMs: Long = 500
 
-  /** Shared scheduler for timeout monitors. */
-  lazy val timeoutScheduler: ScheduledExecutorService =
-    Executors.newScheduledThreadPool(1, r => {
+  /** Shared scheduler for timeout monitors. A cancelled monitor leaves
+    * the queue at once, so it does not keep its operation reachable
+    * until its delay runs out.
+    */
+  lazy val timeoutScheduler: ScheduledThreadPoolExecutor = {
+    val s = new ScheduledThreadPoolExecutor(1, (r: Runnable) => {
       val t = new Thread(r, "graft-op-timeout")
       t.setDaemon(true)
       t
     })
+    s.setRemoveOnCancelPolicy(true)
+    s
+  }
 }
 
 /** How ExecuteStatement materializes its result

@@ -172,8 +172,9 @@ final class GatewayServer(
         mkErr(errStatus(s"engine forward failed (${conn.space}): ${e.getMessage}"))
     }
 
-  /** Drop a desynced engine connection: close its transport and remove
-    * every session/operation route pointing at it.
+  /** Drop an engine connection (desynced, or its session closed): close
+    * its transport and remove every session/operation route pointing at
+    * it.
     */
   private def evictConn(conn: EngineConn): Unit = {
     try conn.transport.close() catch { case _: Throwable => }
@@ -274,10 +275,11 @@ final class GatewayServer(
           val resp = forward(conn, (st: TStatus) => {
             val r = new TCloseSessionResp(); r.setStatus(st); r
           })(_.CloseSession(req))
-          sessionConns.remove(key(req.getSessionHandle.getSessionId))
+          // the conn is this session's alone: drop it with every route
+          // to it, the unclosed operations' included
+          evictConn(conn)
           credentials.foreach(_.removeSessionCredentialsEpoch(
             GatewayServer.sessionKey(req.getSessionHandle)))
-          try conn.transport.close() catch { case _: Throwable => }
           // an unshared (CONNECTION-level) engine dies with its session
           if (shareLevel == ShareLevel.Connection) pool.stop(conn.space)
           resp

@@ -11,8 +11,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.graft.ResultEncoders
 
-import graft.core.{Engine, EngineSession, Events, ExecuteStatement, FetchOrientation, Metrics,
-  Operation, OperationState, ResultMode, ResultOperation}
+import graft.core.{Engine, EngineSession, Events, ExecuteStatement, FetchOrientation, Json,
+  Metrics, Operation, OperationState, ResultMode, ResultOperation}
 import graft.core.Json.{quote => q}
 
 /** Minimal HTTP/JSON frontend over the engine — the gateway's network
@@ -110,8 +110,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
 
   // keyed by batch id (== the submitting operation's handle, except for
   // recovered batches, which keep their original id over a new op)
-  private val batches = new ConcurrentHashMap[String, (EngineSession, ExecuteStatement)]()
-  private val opSessions = new ConcurrentHashMap[String, EngineSession]()
+  private val batches = new ConcurrentHashMap[String, ExecuteStatement]()
   // the last documents of Trino queries that ended other than FINISHED,
   // served again after their engine session is closed (Trino keeps its
   // query.max-history of 100 ended queries the same way)
@@ -267,16 +266,15 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
   private val sessionCloseListener: Events.Handler = new Events.Handler {
     override def onEvent(e: Events.Event): Unit = e match {
       case Events.SessionEvent(sid, _, "CLOSED", _) =>
-        batches.forEach { (id, pair) =>
-          if (pair._1.id == sid) {
-            if (!pair._2.currentState.terminal)
+        batches.forEach { (id, op) =>
+          if (op.session.id == sid) {
+            if (!op.currentState.terminal)
               store.foreach(_.updateState(id, "CANCELED", None))
-            try pair._2.close() catch { case _: Throwable => }
+            try op.close() catch { case _: Throwable => }
             batches.remove(id)
-            opToBatch.remove(pair._2.handle)
+            opToBatch.remove(op.handle)
           }
         }
-        opSessions.forEach { (opId, s) => if (s.id == sid) opSessions.remove(opId) }
       case _ => ()
     }
   }
@@ -468,7 +466,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
                 sessRows + "</table>")
           }
         case "session" :: sid :: Nil =>
-          engine.openSessions.find(_.id == sid) match {
+          engine.session(sid) match {
             case Some(s) =>
               page(200, s"session $sid",
                 s"<p>user: ${esc(s.user)} &middot; created: ${s.createdMs}</p>" +
@@ -476,7 +474,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
             case None => page(404, "no such session", "")
           }
         case "operation" :: opId :: Nil =>
-          findOp(opId) match {
+          engine.operation(opId) match {
             case Some(op) =>
               // state-transition timeline recovered from the bounded
               // event ring (newest first — same source as the /events
@@ -497,9 +495,9 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
           }
         case "batch" :: id :: Nil =>
           Option(batches.get(id)) match {
-            case Some((sess, op)) =>
+            case Some(op) =>
               page(200, s"batch $id",
-                s"""<p>user: ${esc(sess.user)} &middot; state: ${esc(op.currentState.toString)}
+                s"""<p>user: ${esc(op.session.user)} &middot; state: ${esc(op.currentState.toString)}
                    | &middot; appState: ${esc(
                   ApplicationState.fromOperationStateName(op.currentState.toString).toString)}</p>
                    |<h2>statement</h2><pre>${esc(stmtOf(op))}</pre>
@@ -580,8 +578,8 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         return
       }
     val parts = BatchUpload.parseMultipart(raw, boundary)
-    val reqJson = parts.find(_.name == "batchRequest").map(p =>
-      new String(p.data, StandardCharsets.UTF_8)).getOrElse {
+    val request = parts.find(_.name == "batchRequest").map(p =>
+      Json.fields(new String(p.data, StandardCharsets.UTF_8))).getOrElse {
         reply(ex, 400, """{"error": "batchRequest is required and please check the content type of batchRequest is application/json"}""")
         return
       }
@@ -590,7 +588,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         reply(ex, 400, """{"error": "resource is a required parameter"}""")
         return
       }
-    val batchType = field(reqJson, "batchType").getOrElse("SPARK").toUpperCase
+    val batchType = request.str("batchType").getOrElse("SPARK").toUpperCase
     if (batchType != "SPARK" && batchType != "PYSPARK") {
       reply(ex, 400, s"""{"error": ${q(
         s"$batchType is not in the supported list: SPARK, PYSPARK")}}""")
@@ -598,7 +596,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     }
     // className is required for SPARK only (the reference contract);
     // a PYSPARK batch's entry point IS the uploaded script
-    val mainClass = field(reqJson, "className")
+    val mainClass = request.str("className")
     if (batchType == "SPARK" && mainClass.isEmpty) {
       reply(ex, 400, """{"error": "classname is a required parameter for SPARK"}""")
       return
@@ -619,7 +617,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     // its own multipart file part, each under the extra-resource size
     // cap. Validation happens BEFORE anything is staged, so an over-
     // cap or missing sidecar leaves no partial batch dir behind.
-    val extraNames = jsonStringMap(reqJson, "extraResourcesMap").values
+    val extraNames = request.strMap("extraResourcesMap").values
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSeq.distinct
     def extraPart(n: String): Option[BatchUpload.Part] =
       parts.find(p => (p.name == n || p.filename.contains(n)) &&
@@ -641,12 +639,12 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         return
       case None => ()
     }
-    val user = field(reqJson, "user").getOrElse("batch")
-    val args = jsonStringArray(reqJson, "args")
+    val user = request.str("user").getOrElse("batch")
+    val args = request.strs("args")
     // the request's conf map reaches the child as --conf pairs
     // (reference: BatchRequest.conf → spark-submit); the server keeps
     // the sanitization (no master/tag override) in the builder
-    val reqConf = jsonStringMap(reqJson, "conf")
+    val reqConf = request.strMap("conf")
     // Client-provided batch id (the reference's kyuubi.batch.id conf,
     // BatchesResource.scala:252-266): lets a client RETRY a submit
     // idempotently — a resubmit of an id the store already knows
@@ -736,7 +734,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     // event, then sync the current state (events that fired between
     // executeStatement and here would otherwise be lost)
     opToBatch.put(op.handle, id)
-    batches.put(id, (sess, op))
+    batches.put(id, op)
     batchSlotUsers.put(id, user)
     try store.foreach { s =>
       if (fixedId.isEmpty) s.insert(id, user, sql, op.currentState.toString, Some(selfUrl))
@@ -769,27 +767,28 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     claimBatchSlot(rec.user, enforce = false) // recovered batches occupy slots
     try {
       if (rec.sql.contains("\"resourceBatch\": true")) {
+        val descriptor = Json.fields(rec.sql)
         RestFrontend.findBatchProcessByTag(rec.id) match {
           case Some(handle) =>
             batchSlotUsers.put(rec.id, rec.user)
             store.foreach(_.updateOwner(rec.id, selfUrl)) // adoption re-owns
             procBatches.put(rec.id, BatchJob.attach(rec.id, rec.user,
-              field(rec.sql, "batchType").getOrElse("SPARK"), handle, terminal => {
+              descriptor.str("batchType").getOrElse("SPARK"), handle, terminal => {
                 store.foreach(_.updateState(rec.id, terminal, None))
                 releaseBatchSlot(rec.id)
               }, exitFile = Some(batchExitFile(rec.id))))
           case None =>
-            val resource = field(rec.sql, "resource").map(java.nio.file.Paths.get(_))
+            val resource = descriptor.str("resource").map(java.nio.file.Paths.get(_))
               .filter(java.nio.file.Files.exists(_))
               .getOrElse(throw new IllegalStateException(
                 "staged resource file is gone; cannot recover the batch"))
             startResourceBatch(rec.id, rec.user, resource,
-              field(rec.sql, "mainClass"), jsonStringArray(rec.sql, "args"),
+              descriptor.str("mainClass"), descriptor.strs("args"),
               insertRecord = false,
-              extraResources = jsonStringArray(rec.sql, "extraResources")
+              extraResources = descriptor.strs("extraResources")
                 .map(java.nio.file.Paths.get(_))
                 .filter(java.nio.file.Files.exists(_)),
-              requestConf = jsonStringMap(rec.sql, "conf"))
+              requestConf = descriptor.strMap("conf"))
         }
       } else submitBatch(rec.user, rec.sql, Some(rec.id))
     } catch { case e: Throwable =>
@@ -879,7 +878,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         reply(ex, 200, s"""{"status": "ok", "instance": ${q(selfUrl)}}""")
 
       case ("POST", "sessions" :: Nil) =>
-        val user = field(body(ex), "user").getOrElse("anonymous")
+        val user = Json.fields(body(ex)).str("user").getOrElse("anonymous")
         val sess = engine.openSession(user)
         reply(ex, 200, s"""{"sessionId": ${q(sess.id)}}""")
 
@@ -889,9 +888,9 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
 
       case ("POST", "sessions" :: sid :: "statements" :: Nil) =>
         withSession(ex, sid) { sess =>
-          val sql = field(body(ex), "sql").getOrElse(throw new IllegalArgumentException("missing sql"))
+          val sql = Json.fields(body(ex)).str("sql")
+            .getOrElse(throw new IllegalArgumentException("missing sql"))
           val op = sess.executeStatement(sql, ResultMode.Full)
-          opSessions.put(op.handle, sess)
           reply(ex, 200, s"""{"operationId": ${q(op.handle)}}""")
         }
 
@@ -925,9 +924,9 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       case ("POST", "batches" :: Nil) =>
         // read the request body ONCE — the stream is consumed on first
         // read, so a second body(ex) would see "" and default the user
-        val payload = body(ex)
-        val sql = field(payload, "sql").getOrElse(throw new IllegalArgumentException("missing sql"))
-        val user = field(payload, "user").getOrElse("batch")
+        val payload = Json.fields(body(ex))
+        val sql = payload.str("sql").getOrElse(throw new IllegalArgumentException("missing sql"))
+        val user = payload.str("user").getOrElse("batch")
         // Per-user live-batch limit (reference
         // kyuubi.server.limit.batch.connections.per.user via the batch
         // SessionLimiter): atomic increment-then-check — terminal
@@ -944,7 +943,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
               Option(liveBatchCounts.get(user)).foreach(_.decrementAndGet())
               throw e
           }
-          val st = Option(batches.get(id)).map(_._2.currentState.toString).getOrElse("PENDING")
+          val st = Option(batches.get(id)).map(_.currentState.toString).getOrElse("PENDING")
           reply(ex, 200, s"""{"id": ${q(id)}, "state": ${q(st)}, "appState": ${q(
             ApplicationState.fromOperationStateName(st).toString)}}""")
         }
@@ -955,7 +954,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         // derives from it (PENDING/RUNNING/FINISHED/KILLED/FAILED —
         // identical wording to a YARN report / K8s pod-phase mapping).
         Option(batches.get(id)) match {
-          case Some((_, op)) =>
+          case Some(op) =>
             val st = op.currentState.toString
             reply(ex, 200, s"""{"id": ${q(id)}, "state": ${q(st)}, "appState": ${q(
               ApplicationState.fromOperationStateName(st).toString)}}""")
@@ -998,7 +997,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // incremental — each line is delivered once.
       case ("GET", "batches" :: id :: "localLog" :: Nil) =>
         Option(batches.get(id)) match {
-          case Some((_, op)) =>
+          case Some(op) =>
             val lines = op.fetchLog(1000)
             reply(ex, 200, s"""{"logRowSet": [${lines.map(q).mkString(",")}], "rowCount": ${lines.size}}""")
           case None if procBatches.containsKey(id) =>
@@ -1053,7 +1052,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         }
 
       case ("GET", "operations" :: opId :: Nil) =>
-        findOp(opId) match {
+        engine.operation(opId) match {
           case Some(op) => reply(ex, 200, opJson(op))
           case None => reply(ex, 404, """{"error": "no such operation"}""")
         }
@@ -1062,8 +1061,8 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // action document: cancel interrupts the running job group,
       // close also frees the result.
       case ("PUT", "operations" :: opId :: Nil) =>
-        val action = field(body(ex), "action").getOrElse("")
-        findOp(opId) match {
+        val action = Json.fields(body(ex)).str("action").getOrElse("")
+        engine.operation(opId) match {
           case None => reply(ex, 404, """{"error": "no such operation"}""")
           case Some(op) => action match {
             case "cancel" =>
@@ -1081,7 +1080,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // operation's lifecycle document (our opJson carries the same
       // fields the KyuubiOperationEvent DTO does).
       case ("GET", "operations" :: opId :: "event" :: Nil) =>
-        findOp(opId) match {
+        engine.operation(opId) match {
           case Some(op) => reply(ex, 200, opJson(op))
           case None => reply(ex, 404, """{"error": "no such operation"}""")
         }
@@ -1089,7 +1088,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // Reference GET /operations/{id}/resultsetmetadata — the result
       // schema as (columnName, dataType, nullable) rows.
       case ("GET", "operations" :: opId :: "resultsetmetadata" :: Nil) =>
-        findOp(opId) match {
+        engine.operation(opId) match {
           case Some(op: ResultOperation) if op.currentState == OperationState.Finished =>
             val cols = op.resultSchema.fields.map(f =>
               s"""{"columnName": ${q(f.name)}, "dataType": ${q(
@@ -1103,7 +1102,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // Reference GET /operations/{id}/log?maxrows=n — incremental
       // operation log lines (available WHILE the op runs).
       case ("GET", "operations" :: opId :: "log" :: Nil) =>
-        findOp(opId) match {
+        engine.operation(opId) match {
           case Some(op) => numParam(ex, "maxrows", 100)(_.toInt) match {
             case Left(raw) => badParam(ex, "maxrows", raw)
             case Right(max) =>
@@ -1118,7 +1117,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // materialized fetch iterator (never re-executing the statement),
       // the REST twin of Thrift FetchResults.
       case ("GET", "operations" :: opId :: "rowset" :: Nil) =>
-        findOp(opId) match {
+        engine.operation(opId) match {
           case Some(op: ResultOperation) =>
             whenFinished(ex, op) {
               numParam(ex, "maxrows", 100)(_.toInt) match {
@@ -1143,9 +1142,9 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // rowset exactly like a statement's.
       case ("POST", "sessions" :: sid :: "operations" :: mdOp :: Nil) =>
         withSession(ex, sid) { sess =>
-          val payload = body(ex)
+          val payload = Json.fields(body(ex))
           def pat(k: String, dflt: String = "*"): String =
-            field(payload, k).filter(_.nonEmpty).getOrElse(dflt)
+            payload.str(k).filter(_.nonEmpty).getOrElse(dflt)
           val build: Option[org.apache.spark.sql.SparkSession =>
               org.apache.spark.sql.DataFrame] = mdOp match {
             case "catalogs" => Some(graft.core.MetadataOps.getCatalogs)
@@ -1156,7 +1155,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
             case "tables" =>
               Some(s => graft.core.MetadataOps.getTables(s,
                 pat("schemaName"), pat("tableName")))
-            case "columns" => field(payload, "tableName") match {
+            case "columns" => payload.str("tableName") match {
               case Some(t) => Some(s => graft.core.MetadataOps.getColumns(s, t))
               case None => Some(graft.core.MetadataOps.noColumns)
             }
@@ -1164,10 +1163,9 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
               Some(s => graft.core.MetadataOps.getFunctions(s, pat("functionName")))
             case "statement" =>
               // the reference's alias for statement submission
-              val sql = field(payload, "statement").orElse(field(payload, "sql"))
+              val sql = payload.str("statement").orElse(payload.str("sql"))
                 .getOrElse(throw new IllegalArgumentException("missing statement"))
               val op = sess.executeStatement(sql, ResultMode.Full)
-              opSessions.put(op.handle, sess)
               reply(ex, 200, s"""{"operationId": ${q(op.handle)}}""")
               None
             case other =>
@@ -1176,7 +1174,6 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
           }
           build.foreach { b =>
             val op = sess.executeMetadata(b)
-            opSessions.put(op.handle, sess)
             reply(ex, 200, s"""{"operationId": ${q(op.handle)}}""")
           }
         }
@@ -1212,9 +1209,10 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         val live = batches.entrySet.iterator
         val liveRows = scala.collection.mutable.LinkedHashMap.empty[String, (String, String, String)]
         live.forEachRemaining { e =>
-          val (sess, op) = e.getValue
-          liveRows(e.getKey) = (sess.user, op.currentState.toString,
-            s"""{"id": ${q(e.getKey)}, "user": ${q(sess.user)}, "state": ${q(op.currentState.toString)}}""")
+          val op = e.getValue
+          val user = op.session.user
+          liveRows(e.getKey) = (user, op.currentState.toString,
+            s"""{"id": ${q(e.getKey)}, "user": ${q(user)}, "state": ${q(op.currentState.toString)}}""")
         }
         procBatches.forEach { (id, job) =>
           liveRows(id) = (job.user, job.currentState,
@@ -1250,7 +1248,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // batch's operation and record the terminal state.
       case ("DELETE", "batches" :: id :: Nil) =>
         Option(batches.get(id)) match {
-          case Some((_, op)) =>
+          case Some(op) =>
             try op.cancel() catch { case _: Throwable => }
             store.foreach(_.updateState(id, op.currentState.toString, None))
             reply(ex, 200, s"""{"id": ${q(id)}, "state": ${q(op.currentState.toString)}}""")
@@ -1367,7 +1365,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       }
 
       case ("DELETE", "admin" :: "sessions" :: sid :: Nil) => adminGated(ex) {
-        if (engine.openSessions.exists(_.id == sid)) {
+        if (engine.session(sid).isDefined) {
           engine.closeSession(sid)
           reply(ex, 200, s"""{"sessionId": ${q(sid)}, "closed": true}""")
         } else reply(ex, 404, """{"error": "no such session"}""")
@@ -1383,7 +1381,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       }
 
       case ("DELETE", "admin" :: "operations" :: opId :: Nil) => adminGated(ex) {
-        findOp(opId) match {
+        engine.operation(opId) match {
           case Some(op) =>
             try op.cancel() catch { case _: Throwable => }
             reply(ex, 200,
@@ -1404,8 +1402,8 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         val wantUser = queryParam(ex, "batchUser")
         val wantState = queryParam(ex, "batchState").map(_.toUpperCase)
         val live = scala.collection.mutable.LinkedHashMap.empty[String, (String, String)]
-        batches.forEach { (id, v) =>
-          live(id) = (v._1.user, v._2.currentState.toString)
+        batches.forEach { (id, op) =>
+          live(id) = (op.session.user, op.currentState.toString)
         }
         procBatches.forEach { (id, job) => live(id) = (job.user, job.currentState) }
         val stored = store.toSeq.flatMap(_.list())
@@ -1425,7 +1423,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // still-running children by tag, relaunching staged artifacts,
       // re-owning every record moved.
       case ("POST", "admin" :: "batch" :: "reassign" :: Nil) => adminGated(ex) {
-        field(body(ex), "from") match {
+        Json.fields(body(ex)).str("from") match {
           case None =>
             reply(ex, 400, """{"error": "missing from (the dead gateway's address)"}""")
           case Some(f) if f == selfUrl =>
@@ -1521,7 +1519,6 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
               applyTrinoSession(ex, sess)
               sess.executeStatement(query, ResultMode.Full)
             } catch { case e: Throwable => engine.closeSession(sess.id); throw e }
-            opSessions.put(op.handle, sess)
             trinoReply(ex, op, op.currentState, firstPoll = true)
           }
           sql match {
@@ -1588,7 +1585,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
             case _ => startQuery(sql)
           }
         case ("GET", opId :: _ :: Nil) =>
-          Option(opSessions.get(opId)).flatMap(_.operation(opId)) match {
+          engine.operation(opId) match {
             case Some(op: ExecuteStatement) =>
               // held like Trino's own nextUri maxWait: the client follows
               // nextUri with no pause of its own
@@ -1601,7 +1598,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         // Trino clients cancel by DELETEing the statement URI (either
         // /v1/statement/{id} or the paged nextUri form) — 204 No Content.
         case ("DELETE", opId :: _) =>
-          Option(opSessions.get(opId)).flatMap(_.operation(opId)) match {
+          engine.operation(opId) match {
             case Some(op: ExecuteStatement) =>
               try op.cancel() catch { case _: Throwable => }
               ex.sendResponseHeaders(204, -1)
@@ -1817,12 +1814,16 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       val schema = op.resultSchema
       val cols = schema.fields.map(trinoColumn).mkString("[", ",", "]")
       val text = new ResultEncoders.Text(op.session.spark)
-      // numbers and booleans are JSON literals; DECIMAL is a plain
-      // (never exponent) number; everything else a text-rule string
+      // numbers and booleans are JSON literals, but JSON has no NaN or
+      // infinity: those are the strings "NaN", "Infinity" and
+      // "-Infinity", as Trino writes them; DECIMAL is a plain (never
+      // exponent) number; everything else a text-rule string
       def cell(v: Any, dt: DataType): String = dt match {
         case _ if v == null => "null"
-        case BooleanType | ByteType | ShortType | IntegerType | LongType |
-             FloatType | DoubleType => String.valueOf(v)
+        case FloatType | DoubleType =>
+          val d = v.asInstanceOf[Number].doubleValue
+          if (d.isNaN || d.isInfinite) q(String.valueOf(v)) else String.valueOf(v)
+        case BooleanType | ByteType | ShortType | IntegerType | LongType => String.valueOf(v)
         case _: DecimalType => text(v, dt)
         case _ => q(text(v, dt))
       }
@@ -1854,7 +1855,6 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     */
   private def endTrinoQuery(op: Operation, errorDoc: Option[String]): Unit = {
     errorDoc.foreach(trinoEnded.put(op.handle, _))
-    opSessions.remove(op.handle)
     engine.closeSession(op.session.id)
   }
 
@@ -1893,15 +1893,6 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     val page = it.fetch(orientation, max)
     (it.getFetchStart, ResultEncoders.json(page, op.resultSchema, op.session.spark))
   }
-
-  /** Engine-wide operation lookup: REST-submitted ops resolve via the
-    * opSessions route even after their session closes; anything else
-    * (e.g. a Thrift-submitted op on the same engine) via the live
-    * session walk.
-    */
-  private def findOp(opId: String): Option[Operation] =
-    Option(opSessions.get(opId)).flatMap(_.operation(opId))
-      .orElse(engine.openSessions.iterator.map(_.operation(opId)).collectFirst { case Some(op) => op })
 
   /** One-entry-per-line list file (deny users / deny IPs): trimmed,
     * blank lines and `#` comments dropped; unreadable → empty.
@@ -1960,63 +1951,16 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       case None => reply(ex, 404, """{"error": "no such session"}""")
     }
 
+  /** A live statement of session `sid`, or 404. */
   private def withOp(ex: HttpExchange, sid: String, opId: String)(f: ExecuteStatement => Unit): Unit =
-    engine.session(sid).orElse(Option(opSessions.get(opId))) match {
-      case Some(s) => s.operation(opId) match {
-        case Some(op: ExecuteStatement) => f(op)
-        case _ => reply(ex, 404, """{"error": "no such operation"}""")
-      }
-      case None => reply(ex, 404, """{"error": "no such session"}""")
+    engine.operation(opId) match {
+      case Some(op: ExecuteStatement) if op.session.id == sid => f(op)
+      case _ if engine.session(sid).isEmpty => reply(ex, 404, """{"error": "no such session"}""")
+      case _ => reply(ex, 404, """{"error": "no such operation"}""")
     }
 
   private def body(ex: HttpExchange): String =
     new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-
-  private def field(json: String, key: String): Option[String] = {
-    val m = java.util.regex.Pattern
-      .compile("\"" + key + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").matcher(json)
-    if (m.find())
-      Some(m.group(1).replace("\\n", "\n").replace("\\\"", "\"").replace("\\\\", "\\"))
-    else None
-  }
-
-  /** `"key": ["a", "b"]` — string elements only, same escape rules as
-    * [[field]].
-    */
-  private def jsonStringArray(json: String, key: String): Seq[String] = {
-    val arr = java.util.regex.Pattern
-      .compile("\"" + key + "\"\\s*:\\s*\\[((?:[^\\]\"]|\"(?:[^\"\\\\]|\\\\.)*\")*)\\]")
-      .matcher(json)
-    if (!arr.find()) Nil
-    else {
-      val lit = java.util.regex.Pattern.compile("\"((?:[^\"\\\\]|\\\\.)*)\"").matcher(arr.group(1))
-      val out = Seq.newBuilder[String]
-      while (lit.find())
-        out += lit.group(1).replace("\\n", "\n").replace("\\\"", "\"").replace("\\\\", "\\")
-      out.result()
-    }
-  }
-
-  /** `"key": {"a": "x", "b": "y"}` — flat string-to-string object,
-    * same escape rules as [[field]] (the batchRequest
-    * `extraResourcesMap` shape).
-    */
-  private def jsonStringMap(json: String, key: String): Map[String, String] = {
-    val obj = java.util.regex.Pattern
-      .compile("\"" + key + "\"\\s*:\\s*\\{((?:[^}\"]|\"(?:[^\"\\\\]|\\\\.)*\")*)\\}")
-      .matcher(json)
-    if (!obj.find()) Map.empty
-    else {
-      val pair = java.util.regex.Pattern
-        .compile("\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"")
-        .matcher(obj.group(1))
-      val out = Map.newBuilder[String, String]
-      def unesc(s: String) =
-        s.replace("\\n", "\n").replace("\\\"", "\"").replace("\\\\", "\\")
-      while (pair.find()) out += unesc(pair.group(1)) -> unesc(pair.group(2))
-      out.result()
-    }
-  }
 
   private def reply(ex: HttpExchange, code: Int, text: String,
       contentType: String = "application/json"): Unit = {

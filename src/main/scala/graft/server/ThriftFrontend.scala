@@ -60,28 +60,27 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
 
   private implicit val ec: ExecutionContext = ExecutionContext.global
 
-  private val sessions = new ConcurrentHashMap[String, EngineSession]()
-  // SQL statements and metadata operations alike: each pages its result
-  // through the core ResultOperation surface
-  private val ops = new ConcurrentHashMap[String, ResultOperation]()
-  // Sessions that requested arrow result pages (operation.result.format=arrow).
-  private val arrowSessions = ConcurrentHashMap.newKeySet[String]()
-  // Per-session bounded-collect cap (operation.result.max.rows).
-  private val maxRowsBySession = new ConcurrentHashMap[String, Integer]()
-  // Per-session server-side query-timeout cap in ms (reference
-  // kyuubi.operation.query.timeout): when set, the client's
-  // Statement.setQueryTimeout is capped at this value; when the client
-  // sends none, the cap alone arms the timeout.
-  private val timeoutCapBySession = new ConcurrentHashMap[String, java.lang.Long]()
-  // The limiter admission each session's open took (the keys ACTUALLY
-  // incremented), released exactly on close/reap. The limiter counts
-  // the identity the transport PROVED, not the impersonated session
-  // user — otherwise a proxy-privileged account could dodge its own
-  // quota by spreading sessions across impersonation targets. Storing
-  // the admission (not the user/ip pair) keeps release correct across
-  // unlimited-list hot swaps mid-connection.
-  private val admissionBySession =
-    new ConcurrentHashMap[String, SessionLimiter.Admission]()
+  /** What one Thrift session settled at OpenSession. `admission` is the
+    * limiter admission the open took (the keys ACTUALLY incremented),
+    * released exactly once when the record goes. The limiter counts the
+    * identity the transport PROVED, not the impersonated session user —
+    * otherwise a proxy-privileged account could dodge its own quota by
+    * spreading sessions across impersonation targets; keeping the
+    * admission (not the user/ip pair) keeps release correct across
+    * unlimited-list hot swaps mid-connection. `protocol` is the
+    * negotiated version: clients below V6 (old Hive JDBC drivers) get
+    * row-based TRowSets, not TColumn pages (reference
+    * TRowSetGenerator.toRowBasedSet). `mode` comes from
+    * operation.result.format / operation.result.max.rows, and
+    * `timeoutCapMs` (0 = none) from operation.query.timeout.
+    */
+  private final class ThriftSession(val session: EngineSession,
+      val admission: SessionLimiter.Admission, val protocol: TProtocolVersion,
+      val mode: ResultMode, val timeoutCapMs: Long)
+
+  // The sessions this frontend opened. Operations live in the engine's
+  // registry; a handle resolves here only if its session has a record.
+  private val sessions = new ConcurrentHashMap[String, ThriftSession]()
 
   /** The connection limiter — exposed so the admin surface can
     * hot-refresh its deny/unlimited lists without a restart.
@@ -92,38 +91,15 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     initialUnlimitedUsers = unlimitedUsers, initialDenyUsers = denyUsers,
     initialDenyIps = denyIps)
 
-  private def releaseConnection(sid: String): Unit =
-    Option(admissionBySession.remove(sid)).foreach(limiter.release)
-
-  /** Drop a closed session's state here, operations included: clients
-    * that drop without CloseOperation would otherwise leak collected
-    * result arrays for the life of the server.
+  /** Drop a session's record and give back its limiter slot (once: only
+    * the caller that removes the record releases).
     */
-  private def forgetSession(sid: String): Unit = {
-    sessions.remove(sid)
-    arrowSessions.remove(sid)
-    maxRowsBySession.remove(sid)
-    timeoutCapBySession.remove(sid)
-    releaseConnection(sid)
-    protoBySession.remove(sid)
-    ops.forEach { (opId, op) =>
-      if (op.session.id == sid) {
-        try op.close() catch { case _: Throwable => }
-        ops.remove(opId)
-      }
-    }
-  }
+  private def forgetSession(sid: String): Unit =
+    Option(sessions.remove(sid)).foreach(r => limiter.release(r.admission))
 
-  // Negotiated protocol per session: clients below V6 (old Hive JDBC
-  // drivers) must get row-based TRowSets, not TColumn pages
-  // (reference TRowSetGenerator.toRowBasedSet).
-  private val protoBySession = new ConcurrentHashMap[String, TProtocolVersion]()
-
-  // Purge this frontend's per-session state when the ENGINE closes a
-  // session (the idle reaper, or any other engine-side close): without
-  // this, operations keep collected result arrays alive for abandoned
-  // clients forever, and a reaped session's stale map entry would keep
-  // serving statements as if nothing happened.
+  // Forget a session the ENGINE closed (the idle reaper, or any other
+  // engine-side close), so its slot is released and a reaped session
+  // stops serving statements.
   private val sessionCloseListener: Events.Handler = new Events.Handler {
     override def onEvent(e: Events.Event): Unit = e match {
       case Events.SessionEvent(sid, _, "CLOSED", _) => forgetSession(sid)
@@ -131,6 +107,17 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     }
   }
   Events.register(sessionCloseListener)
+
+  /** A live operation of one of this frontend's sessions, with the
+    * session's record: REST handles and closed operations are unknown.
+    */
+  private def operation(h: TOperationHandle): Option[(ResultOperation, ThriftSession)] =
+    engine.operation(idOf(h.getOperationId)).flatMap {
+      case op: ResultOperation => Option(sessions.get(op.session.id)).map((op, _))
+      case _ => None
+    }
+
+  private def noSuchOperation = new NoSuchElementException("no such operation")
 
   // --- handle plumbing ------------------------------------------------------
   private def handleId(id: String): THandleIdentifier = {
@@ -315,11 +302,9 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
   /** One result page: column-based (V6+) or, for older clients,
     * row-based (reference TRowSetGenerator.toRowBasedSet).
     */
-  private def rowSet(schema: StructType, rows: Seq[Row], session: EngineSession): TRowSet = {
-    val text = new ResultEncoders.Text(session.spark)
-    val proto = protoBySession.get(session.id)
-    if (proto != null &&
-        proto.getValue < TProtocolVersion.HIVE_CLI_SERVICE_PROTOCOL_V6.getValue) {
+  private def rowSet(schema: StructType, rows: Seq[Row], rec: ThriftSession): TRowSet = {
+    val text = new ResultEncoders.Text(rec.session.spark)
+    if (rec.protocol.getValue < TProtocolVersion.HIVE_CLI_SERVICE_PROTOCOL_V6.getValue) {
       val trows = new java.util.ArrayList[TRow](rows.length)
       rows.foreach { r =>
         val tr = new TRow()
@@ -342,9 +327,11 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
 
     override def OpenSession(req: TOpenSessionReq): TOpenSessionResp = {
       val resp = new TOpenSessionResp()
-      // set once the limiter slot is taken but no session owns it yet —
-      // a failure in between must give the slot back
+      // set once the limiter slot is taken (and once the engine session
+      // opens) until the session's record owns them — a failure in
+      // between must give both back
       var unownedSlot: Option[SessionLimiter.Admission] = None
+      var unownedSession: Option[EngineSession] = None
       try {
         // With SASL, the identity the transport PROVED wins over the
         // request body's username (reference KyuubiTBinaryFrontendService
@@ -398,9 +385,7 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
           if (!clientConf.get(k).contains(v)) clientConf.put(k, v)
         }
         val sess = engine.openSession(user, clientConf.toMap)
-        sessions.put(sess.id, sess)
-        admissionBySession.put(sess.id, admission)
-        unownedSlot = None // the close/reap paths release it from here on
+        unownedSession = Some(sess)
         // Impersonation leaves an audit trail: the session's OPENED
         // event carries the proxy TARGET, this one records WHO invoked
         // the privilege (reference audit logging of real vs session user).
@@ -411,6 +396,9 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
         // /db, ?conf and #var segments arrive here as use:database,
         // set:hiveconf:* and set:hivevar:* — reference
         // SparkSQLSessionManager.openSession conf processing).
+        var arrow = false
+        var maxRows = 0
+        var timeoutCapMs = 0L
         clientConf.foreach { case (k, v) =>
           val key = k.stripPrefix("set:hiveconf:").stripPrefix("set:hivevar:")
           if (k == "use:database") {
@@ -422,8 +410,6 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
               // identifier, not inject past the quoting
               try sess.spark.sql(s"USE `${v.replace("`", "``")}`")
               catch { case e: Throwable =>
-                engine.closeSession(sess.id)
-                sessions.remove(sess.id)
                 throw new IllegalArgumentException(s"database '$v' not found", e)
               }
             }
@@ -432,18 +418,18 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
               if (key.endsWith("operation.result.format")) {
                 // arrow result pages (reference ArrowBasedExecuteStatement,
                 // selected by kyuubi.operation.result.format=arrow)
-                if ("arrow".equalsIgnoreCase(v)) arrowSessions.add(sess.id)
+                if ("arrow".equalsIgnoreCase(v)) arrow = true
               } else if (key.endsWith("operation.result.max.rows")) {
                 // bounded collect (ref kyuubi.operation.result.max.rows)
                 val n = v.toInt
-                if (n > 0) maxRowsBySession.put(sess.id, n)
+                if (n > 0) maxRows = n
               } else if (key.endsWith("operation.query.timeout")) {
                 // server-side query timeout cap in ms (reference
                 // kyuubi.operation.query.timeout, checkValue >= 1s):
                 // caps the client's Statement.setQueryTimeout, or arms
                 // the timeout alone when the client sends none
                 val ms = v.toLong
-                if (ms >= 1000L) timeoutCapBySession.put(sess.id, ms)
+                if (ms >= 1000L) timeoutCapMs = ms
               } else if (key.endsWith("operation.scheduler.pool")) {
                 // per-operation FAIR scheduler pool (reference
                 // kyuubi.operation.scheduler.pool): stored in session
@@ -466,14 +452,21 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
           else if (req.getClient_protocol.getValue <= TProtocolVersion.HIVE_CLI_SERVICE_PROTOCOL_V10.getValue)
             req.getClient_protocol
           else TProtocolVersion.HIVE_CLI_SERVICE_PROTOCOL_V10
+        val mode =
+          if (arrow) ResultMode.Arrow()
+          else if (maxRows > 0) ResultMode.Bounded(maxRows)
+          else ResultMode.Full
+        sessions.put(sess.id, new ThriftSession(sess, admission, negotiated, mode, timeoutCapMs))
+        // the close/reap paths release both from here on
+        unownedSlot = None
+        unownedSession = None
         resp.setServerProtocolVersion(negotiated)
-        protoBySession.put(sess.id, negotiated)
         resp.setSessionHandle(new TSessionHandle(handleId(sess.id)))
         resp.setConfiguration(Map.empty[String, String].asJava)
         resp.setStatus(ok)
       } catch { case e: Throwable =>
-        // give back a limiter slot no session came to own (failures
-        // after openSession release through the close/reap paths)
+        // give back what no session record came to own
+        unownedSession.foreach(s => engine.closeSession(s.id))
         unownedSlot.foreach(limiter.release)
         resp.setStatus(err(e))
       }
@@ -507,24 +500,18 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     override def ExecuteStatement(req: TExecuteStatementReq): TExecuteStatementResp = {
       val resp = new TExecuteStatementResp()
       try {
-        val sess = sessions.get(idOf(req.getSessionHandle.getSessionId))
-        require(sess != null, "no such session")
+        val rec = sessionOf(req.getSessionHandle)
         // Query timeout (HIVE-4924 Statement.setQueryTimeout, seconds on
         // the wire) combined with the server-side cap the reference way
         // (KyuubiOperationManager.getQueryTimeout): min of the two when
         // both are set, the cap alone when the client sends none, and a
         // timed-out op lands in TIMEOUT (cancelled job group).
         val clientTimeoutMs = math.max(0L, req.getQueryTimeout) * 1000L
-        val timeoutMs = Option(timeoutCapBySession.get(sess.id)) match {
-          case Some(cap) if clientTimeoutMs > 0 => math.min(cap.longValue, clientTimeoutMs)
-          case Some(cap) => cap.longValue
-          case None => clientTimeoutMs
-        }
-        val mode =
-          if (arrowSessions.contains(sess.id)) ResultMode.Arrow()
-          else Option(maxRowsBySession.get(sess.id)).fold[ResultMode](ResultMode.Full)(ResultMode.Bounded(_))
-        val op = sess.executeStatement(req.getStatement, mode, timeoutMs)
-        ops.put(op.handle, op)
+        val cap = rec.timeoutCapMs
+        val timeoutMs =
+          if (cap > 0 && clientTimeoutMs > 0) math.min(cap, clientTimeoutMs)
+          else math.max(cap, clientTimeoutMs)
+        val op = rec.session.executeStatement(req.getStatement, rec.mode, timeoutMs)
         // Async clients get the handle immediately and discover
         // completion/errors via GetOperationStatus polling; only the
         // sync path blocks the worker thread (matches the reference's
@@ -545,8 +532,10 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
 
     override def GetOperationStatus(req: TGetOperationStatusReq): TGetOperationStatusResp = {
       val resp = new TGetOperationStatusResp()
-      val op = ops.get(idOf(req.getOperationHandle.getOperationId))
-      if (op == null) { resp.setStatus(err(new NoSuchElementException("no such operation"))); return resp }
+      val (op, rec) = operation(req.getOperationHandle) match {
+        case Some(found) => found
+        case None => resp.setStatus(err(noSuchOperation)); return resp
+      }
       // Long poll (HiveServer2's hive.server2.long.polling.timeout,
       // Kyuubi's kyuubi.operation.status.polling.timeout): hold the call
       // until the operation is terminal or Operation.StatusWaitMs
@@ -571,9 +560,7 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
           // Clients below HIVE-4924 (protocol <= V8, Hive < 2.1) have no
           // TIMEDOUT status and would poll forever — report CANCELED to
           // them (reference AbstractOperation.addTimeoutMonitor).
-          val proto = protoBySession.get(op.session.id)
-          if (proto != null &&
-            proto.getValue <= TProtocolVersion.HIVE_CLI_SERVICE_PROTOCOL_V8.getValue)
+          if (rec.protocol.getValue <= TProtocolVersion.HIVE_CLI_SERVICE_PROTOCOL_V8.getValue)
             TOperationState.CANCELED_STATE
           else TOperationState.TIMEDOUT_STATE
       }
@@ -612,7 +599,7 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     }
 
     override def CancelOperation(req: TCancelOperationReq): TCancelOperationResp = {
-      Option(ops.get(idOf(req.getOperationHandle.getOperationId))).foreach { op =>
+      operation(req.getOperationHandle).foreach { case (op, _) =>
         op.session.touch() // cancel is session activity for the idle reaper
         op.cancel()
       }
@@ -620,15 +607,14 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     }
 
     override def CloseOperation(req: TCloseOperationReq): TCloseOperationResp = {
-      Option(ops.remove(idOf(req.getOperationHandle.getOperationId))).foreach(_.close())
+      operation(req.getOperationHandle).foreach(_._1.close())
       new TCloseOperationResp(ok)
     }
 
     override def GetResultSetMetadata(req: TGetResultSetMetadataReq): TGetResultSetMetadataResp = {
       val resp = new TGetResultSetMetadataResp()
       try {
-        val op = ops.get(idOf(req.getOperationHandle.getOperationId))
-        require(op != null, "no such operation")
+        val (op, _) = operation(req.getOperationHandle).getOrElse(throw noSuchOperation)
         op.awaitTermination()
         resp.setSchema(tableSchema(op.resultSchema))
         resp.setStatus(ok)
@@ -639,8 +625,7 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     override def FetchResults(req: TFetchResultsReq): TFetchResultsResp = {
       val resp = new TFetchResultsResp()
       try {
-        val op = ops.get(idOf(req.getOperationHandle.getOperationId))
-        require(op != null, "no such operation")
+        val (op, rec) = operation(req.getOperationHandle).getOrElse(throw noSuchOperation)
         op.session.touch() // paging is session activity for the idle reaper
         // fetchType 1 = operation LOG (HiveServer2 convention): a
         // single-string-column page of pending log lines, available
@@ -649,7 +634,7 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
           val max = math.max(1L, math.min(req.getMaxRows, 10000L)).toInt
           val lines = op.fetchLog(max)
           val logSchema = StructType(Seq(StructField("operation_log", StringType)))
-          resp.setResults(rowSet(logSchema, lines.map(Row(_)), op.session))
+          resp.setResults(rowSet(logSchema, lines.map(Row(_)), rec))
           resp.setHasMoreRows(false)
           resp.setStatus(ok)
           return resp
@@ -678,7 +663,7 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
             resp.setHasMoreRows(es.arrowIterator.hasNext)
           case _ =>
             val page = op.fetchIterator.fetch(orientation, max)
-            resp.setResults(rowSet(op.resultSchema, page, op.session))
+            resp.setResults(rowSet(op.resultSchema, page, rec))
             resp.setHasMoreRows(op.fetchIterator.hasNext)
         }
         resp.setStatus(ok)
@@ -687,7 +672,7 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     }
 
     // --- metadata operations ------------------------------------------------
-    private def sessionOf(h: TSessionHandle): EngineSession = {
+    private def sessionOf(h: TSessionHandle): ThriftSession = {
       val s = sessions.get(idOf(h.getSessionId))
       require(s != null, "no such session")
       s
@@ -700,8 +685,7 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     private def metadataOp(setStatus: TStatus => Any, setHandle: TOperationHandle => Any,
         h: TSessionHandle)(build: => SparkSession => DataFrame): Unit =
       try {
-        val op = sessionOf(h).executeMetadata(build)
-        ops.put(op.handle, op)
+        val op = sessionOf(h).session.executeMetadata(build)
         op.awaitTermination()
         setHandle(opHandle(op.handle, hasResult = true))
         setStatus(ok)

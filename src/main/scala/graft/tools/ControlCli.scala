@@ -4,6 +4,7 @@ import java.io.IOException
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
+import graft.core.Json
 import graft.core.Json.{quote => q}
 
 /** `graft-ctl` — the admin command line over the REST admin surface
@@ -105,8 +106,8 @@ object ControlCli {
         val p = java.nio.file.Paths.get(f)
         if (!java.nio.file.Files.exists(p))
           return Result(1, s"""{"error": "spec file not found: $f"}""")
-        val spec = new String(java.nio.file.Files.readAllBytes(p), StandardCharsets.UTF_8)
-        val resource = MiniJson.str(spec, "resource").getOrElse {
+        val spec = Json.fields(new String(java.nio.file.Files.readAllBytes(p), StandardCharsets.UTF_8))
+        val resource = spec.str("resource").getOrElse {
           return Result(1, """{"error": "spec must name a local `resource` file"}""")
         }
         val resPath = {
@@ -115,7 +116,7 @@ object ControlCli {
         }
         if (!java.nio.file.Files.exists(resPath))
           return Result(1, s"""{"error": "resource file not found: $resPath"}""")
-        val extras = MiniJson.strArray(spec, "extraResources").map { e =>
+        val extras = spec.strs("extraResources").map { e =>
           val ep = java.nio.file.Paths.get(e)
           if (ep.isAbsolute) ep else p.toAbsolutePath.getParent.resolve(ep)
         }
@@ -138,15 +139,15 @@ object ControlCli {
         val req = {
           val sb = new StringBuilder("{")
           sb ++= s""""batchType": ${q(
-            MiniJson.str(spec, "batchType").getOrElse("SPARK"))}"""
-          MiniJson.str(spec, "className").foreach(c => sb ++= s""", "className": ${q(c)}""")
-          MiniJson.str(spec, "user").orElse(asUser.map(_.takeWhile(_ != ':')))
+            spec.str("batchType").getOrElse("SPARK"))}"""
+          spec.str("className").foreach(c => sb ++= s""", "className": ${q(c)}""")
+          spec.str("user").orElse(asUser.map(_.takeWhile(_ != ':')))
             .foreach(u => sb ++= s""", "user": ${q(u)}""")
-          MiniJson.str(spec, "name").foreach(n => sb ++= s""", "name": ${q(n)}""")
-          val args0 = MiniJson.strArray(spec, "args")
+          spec.str("name").foreach(n => sb ++= s""", "name": ${q(n)}""")
+          val args0 = spec.strs("args")
           if (args0.nonEmpty)
             sb ++= s""", "args": [${args0.map(q).mkString(", ")}]"""
-          val conf = MiniJson.strMap(spec, "conf")
+          val conf = spec.strMap("conf")
           if (conf.nonEmpty)
             sb ++= s""", "conf": {${conf.map { case (k, v) =>
               s"${q(k)}: ${q(v)}" }.mkString(", ")}}"""
@@ -162,7 +163,7 @@ object ControlCli {
         text(s"--$boundary\r\n")
         text("Content-Disposition: form-data; name=\"batchRequest\"\r\n")
         text("Content-Type: application/json\r\n\r\n")
-        text(req)
+        body.write(req.getBytes(StandardCharsets.UTF_8)) // the server reads the JSON as UTF-8
         text(s"\r\n--$boundary\r\n")
         text(s"""Content-Disposition: form-data; name="resourceFile"; filename="${resPath.getFileName}"""" + "\r\n")
         text("Content-Type: application/octet-stream\r\n\r\n")
@@ -207,23 +208,23 @@ object ControlCli {
     def submitBatch(): Result = {
       val created = postBatchSpec()
       if (created.code != 0) return created
-      val id = MiniJson.str(created.out, "id").getOrElse(
+      val id = Json.fields(created.out).str("id").getOrElse(
         return Result(1, s"""{"error": "no id in create response: ${created.out}"}"""))
       emit(created.out)
       val terminal = Set("FINISHED", "ERROR", "CANCELED", "CLOSED", "TIMEOUT")
       val deadline = System.nanoTime() + waitTimeoutSec * 1000000000L
-      var state = MiniJson.str(created.out, "state").getOrElse("")
+      var state = Json.fields(created.out).str("state").getOrElse("")
       val collected = new StringBuilder(created.out).append('\n')
       def drainLog(): Unit = {
         val log = http("GET", s"/batches/${enc(id)}/localLog")
         // localLog is incremental: each line arrives exactly once
-        MiniJson.strArray(log.out, "logRowSet").foreach { line =>
+        Json.fields(log.out).strs("logRowSet").foreach { line =>
           emit(line); collected.append(line).append('\n')
         }
       }
       while (!terminal(state) && System.nanoTime() < deadline) {
         drainLog()
-        state = MiniJson.str(http("GET", s"/batches/${enc(id)}").out, "state")
+        state = Json.fields(http("GET", s"/batches/${enc(id)}").out).str("state")
           .getOrElse(state)
         if (!terminal(state)) Thread.sleep(300)
       }
@@ -307,46 +308,6 @@ object ControlCli {
     * string fields, string arrays, flat string maps (the same regex
     * discipline the REST frontend applies to batchRequest bodies).
     */
-  private object MiniJson {
-    private def unesc(s: String): String =
-      s.replace("\\n", "\n").replace("\\\"", "\"").replace("\\\\", "\\")
-
-    def str(json: String, key: String): Option[String] = {
-      val m = java.util.regex.Pattern
-        .compile("\"" + key + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").matcher(json)
-      if (m.find()) Some(unesc(m.group(1))) else None
-    }
-
-    def strArray(json: String, key: String): Seq[String] = {
-      val arr = java.util.regex.Pattern
-        .compile("\"" + key + "\"\\s*:\\s*\\[((?:[^\\]\"]|\"(?:[^\"\\\\]|\\\\.)*\")*)\\]")
-        .matcher(json)
-      if (!arr.find()) Nil
-      else {
-        val lit = java.util.regex.Pattern
-          .compile("\"((?:[^\"\\\\]|\\\\.)*)\"").matcher(arr.group(1))
-        val out = Seq.newBuilder[String]
-        while (lit.find()) out += unesc(lit.group(1))
-        out.result()
-      }
-    }
-
-    def strMap(json: String, key: String): Map[String, String] = {
-      val obj = java.util.regex.Pattern
-        .compile("\"" + key + "\"\\s*:\\s*\\{((?:[^}\"]|\"(?:[^\"\\\\]|\\\\.)*\")*)\\}")
-        .matcher(json)
-      if (!obj.find()) Map.empty
-      else {
-        val pair = java.util.regex.Pattern
-          .compile("\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"")
-          .matcher(obj.group(1))
-        val out = Map.newBuilder[String, String]
-        while (pair.find()) out += unesc(pair.group(1)) -> unesc(pair.group(2))
-        out.result()
-      }
-    }
-  }
-
   private val usage: String =
     """graft-ctl [--api http://host:port] <verb> <noun> [id] [--space s]
       |  create batch -f <spec.json> upload + launch a batch, print the handle

@@ -182,4 +182,22 @@ class EngineSpec extends AnyFunSuite {
     isolated.spark.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, true)
     assert(taskLoader(isolated) != a)
   }
+
+  test("a query-timeout task leaves the scheduler once its operation is terminal or closed") {
+    val queue = Operation.timeoutScheduler.getQueue
+    def sleepSql(ms: Long) = s"SELECT reflect('java.lang.Thread', 'sleep', CAST($ms AS BIGINT)) AS z"
+    val sess = engine.openSession("timeouts")
+    try {
+      val baseline = queue.size
+      val finishing = sess.executeStatement(sleepSql(300), timeoutMs = 60000)
+      assert(queue.size == baseline + 1, "the timeout is armed while the statement runs")
+      assert(finishing.awaitTermination() == OperationState.Finished)
+      assert(queue.size == baseline, "a finished statement's timeout still queued")
+      finishing.close()
+      val closed = sess.executeStatement(sleepSql(60000), timeoutMs = 60000)
+      assert(queue.size == baseline + 1)
+      closed.close()
+      assert(queue.size == baseline, "a closed statement's timeout still queued")
+    } finally engine.closeSession(sess.id)
+  }
 }

@@ -37,4 +37,24 @@ class JsonSpec extends AnyFunSuite {
       if (!s.exists(c => Character.isSurrogate(c))) assert(mapper.readValue(Json.quote(s), classOf[String]) == s)
     }
   }
+
+  test("fields reads what quote writes, top-level string members only") {
+    val odd = "tab\there \u00e9 back\\nslash / \u0001"
+    val doc = s"""{"sql": ${Json.quote(odd)}, "esc": "\\u00e9\\/\\t", "n": 5,
+      |  "args": [${Json.quote(odd)}, 7, "b"], "conf": {${Json.quote(odd)}: ${Json.quote(odd)}, "k": 1},
+      |  "nested": {"inner": "deep", "sql": "no"}}""".stripMargin
+    val f = Json.fields(doc)
+    assert(f.str("sql").contains(odd))
+    assert(f.str("esc").contains("\u00e9/\t"))
+    assert(f.str("n").isEmpty, "a number is not a string member")
+    assert(f.str("inner").isEmpty, "a nested member is not a top-level one")
+    assert(f.strs("args") == Seq(odd, "b"))
+    assert(f.strs("conf").isEmpty && f.strMap("args").isEmpty)
+    assert(f.strMap("conf") == Map(odd -> odd))
+    // a body that does not parse has no members
+    Seq("", "not json", "[1, 2]", "{\"sql\": ").foreach { bad =>
+      val b = Json.fields(bad)
+      assert(b.str("sql").isEmpty && b.strs("args").isEmpty && b.strMap("conf").isEmpty, bad)
+    }
+  }
 }

@@ -474,4 +474,35 @@ class GatewayServerSpec extends AnyFunSuite {
       } finally conn.close()
     } finally gw.stop()
   }
+
+  test("CloseSession drops the routes of the operations its client never closed") {
+    import org.apache.hive.service.rpc.thrift._
+    val dir = Files.createTempDirectory("graft-gateway-routes")
+    val gw = new GatewayServer(new EngineProcBuilder(dir)).start()
+    val sock = new org.apache.thrift.transport.TSocket("localhost", gw.boundPort)
+    try {
+      sock.open()
+      val client = new TCLIService.Client(new org.apache.thrift.protocol.TBinaryProtocol(sock))
+      val open = new TOpenSessionReq()
+      open.setUsername("gus")
+      val sess = client.OpenSession(open)
+      assert(sess.getStatus.getStatusCode == TStatusCode.SUCCESS_STATUS,
+        String.valueOf(sess.getStatus.getErrorMessage))
+      val exec = client.ExecuteStatement(
+        new TExecuteStatementReq(sess.getSessionHandle, "SELECT 1 AS one"))
+      assert(exec.getStatus.getStatusCode == TStatusCode.SUCCESS_STATUS)
+      val h = exec.getOperationHandle
+      assert(client.GetOperationStatus(new TGetOperationStatusReq(h)).getStatus.getStatusCode ==
+        TStatusCode.SUCCESS_STATUS)
+      // the operation is never closed: CloseSession must drop its route too
+      assert(client.CloseSession(new TCloseSessionReq(sess.getSessionHandle))
+        .getStatus.getStatusCode == TStatusCode.SUCCESS_STATUS)
+      val st = client.GetOperationStatus(new TGetOperationStatusReq(h))
+      assert(st.getStatus.getStatusCode == TStatusCode.ERROR_STATUS)
+      assert(st.getStatus.getErrorMessage == "unknown operation")
+    } finally {
+      sock.close()
+      gw.stop()
+    }
+  }
 }

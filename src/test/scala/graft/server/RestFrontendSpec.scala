@@ -463,6 +463,13 @@ class RestFrontendSpec extends AnyFunSuite {
         |    if (a.length > 1 && a[0].equals("prop")) {
         |      System.out.println("prop=" + System.getProperty(a[1])); return;
         |    }
+        |    if (a.length > 1 && a[0].equals("echo")) {
+        |      StringBuilder b = new StringBuilder("echo prop=")
+        |        .append(java.net.URLEncoder.encode(String.valueOf(System.getProperty(a[1])), "UTF-8"));
+        |      for (int i = 2; i < a.length; i++)
+        |        b.append(" arg=").append(java.net.URLEncoder.encode(a[i], "UTF-8"));
+        |      System.out.println(b); return;
+        |    }
         |    System.out.println("hello-from-uploaded-batch " + String.join(",", a));
         |  }
         |}
@@ -1970,6 +1977,84 @@ class RestFrontendSpec extends AnyFunSuite {
       // unknowns 404 as pages, not stack traces
       assert(get(c, s"$root/ui/session/nope")._1 == 404)
       assert(get(c, s"$root/ui/batch/nope")._1 == 404)
+    }
+  }
+
+  // ---- request bodies and stored descriptors are read as JSON ----
+
+  /** A tab, a non-ASCII letter, and a backslash followed by `n`. */
+  private val oddText = "tab\there \u00e9 back\\nslash"
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  test("REST request bodies decode every JSON escape") {
+    withServer { (c, base) =>
+      val user = mapper.createObjectNode().put("user", oddText).toString
+      val sid = extract(post(c, s"$base/sessions", user)._2, "sessionId")
+      assert(mapper.readTree(get(c, s"$base/sessions/$sid")._2).get("user").asText == oddText)
+      // the SQL literal doubles the backslash, so the value is oddText
+      val sql = s"SELECT '${oddText.replace("\\", "\\\\")}' AS v"
+      val body = mapper.createObjectNode().put("sql", sql).toString
+      val opId = extract(post(c, s"$base/sessions/$sid/statements", body)._2, "operationId")
+      var state = ""
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (state != "FINISHED" && System.nanoTime() < deadline) {
+        state = extract(get(c, s"$base/sessions/$sid/statements/$opId")._2, "state")
+        assert(state != "ERROR")
+        if (state != "FINISHED") Thread.sleep(50)
+      }
+      val (rc, rbody) = get(c, s"$base/sessions/$sid/statements/$opId/result")
+      assert(rc == 200, rbody)
+      assert(mapper.readTree(rbody).get("rows").get(0).get("v").asText == oddText, rbody)
+      // a long statement is read like a short one
+      val long = mapper.createObjectNode().put("sql", s"SELECT '${"x" * 20000}' AS v").toString
+      val (lc, lbody) = post(c, s"$base/sessions/$sid/statements", long)
+      assert(lc == 200, lbody)
+    }
+  }
+
+  test("a stored batch's args and conf keep every JSON escape through recovery") {
+    import graft.core.Json.{quote => q}
+    val storeDir = java.nio.file.Files.createTempDirectory("graft-batch-escapes").toString
+    val id = java.util.UUID.randomUUID().toString
+    val key = "spark.graft.test.odd"
+    // an unfinished uploaded batch as a gateway stores it
+    val descriptor = s"""{"resourceBatch": true, "batchType": "SPARK", """ +
+      s""""resource": ${q(uploadableJar.toString)}, "mainClass": "GraftBatchApp", """ +
+      s""""args": [${Seq("echo", key, oddText).map(q).mkString(",")}], """ +
+      s""""conf": {${q(key)}: ${q(oddText)}}}"""
+    val store = new BatchMetadataStore(storeDir)
+    try store.insert(id, "escaper", descriptor, "RUNNING") finally store.close()
+    // a gateway over the store relaunches it from the descriptor
+    val front = new RestFrontend(new Engine(spark), port = 0, batchStoreDir = Some(storeDir))
+    val port = front.start()
+    try {
+      val c = HttpClient.newHttpClient()
+      val base = s"http://localhost:$port/api/v1"
+      assert(pollBatch(c, base, id, Set("FINISHED", "ERROR")) == "FINISHED")
+      val lines = mapper.readTree(get(c, s"$base/batches/$id/localLog")._2)
+        .get("logRowSet").elements()
+      import scala.jdk.CollectionConverters._
+      val echo = lines.asScala.map(_.asText).find(_.startsWith("echo "))
+      // argv reaches the child in the platform charset, which may not
+      // hold every character: compare with what it carries for oddText
+      val jnu = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+      val enc = java.net.URLEncoder.encode(new String(oddText.getBytes(jnu), jnu), "UTF-8")
+      assert(echo.contains(s"echo prop=$enc arg=$enc"), echo)
+    } finally front.stop()
+  }
+
+  test("a closed operation is unknown: PUT close, then GET answers 404") {
+    withServer { (c, base) =>
+      val sid = extract(post(c, s"$base/sessions", """{"user": "closer"}""")._2, "sessionId")
+      val opId = extract(post(c, s"$base/sessions/$sid/statements",
+        """{"sql": "SELECT 1 AS one"}""")._2, "operationId")
+      assert(get(c, s"$base/operations/$opId")._1 == 200)
+      val (cc, cbody) = put(c, s"$base/operations/$opId", """{"action": "close"}""")
+      assert(cc == 200 && extract(cbody, "state") == "CLOSED", cbody)
+      assert(get(c, s"$base/operations/$opId")._1 == 404)
+      assert(get(c, s"$base/sessions/$sid/statements/$opId")._1 == 404)
+      assert(put(c, s"$base/operations/$opId", """{"action": "close"}""")._1 == 404)
+      assert(get(c, s"$base/sessions/$sid")._2.contains("\"openOperations\": 0"))
     }
   }
 }

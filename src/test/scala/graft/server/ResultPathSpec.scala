@@ -26,12 +26,17 @@ import graft.core.Engine
 class ResultPathSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
+  /** (i, FLOAT, DOUBLE) of the non-finite rows. */
+  private val nonFinite = Seq((-4, "NaN", "Infinity"), (-5, "Infinity", "NaN"),
+    (-6, "-Infinity", "-0.0"), (-7, "-0.0", "-Infinity"))
+
   /** The type matrix: one row of typical values, one of edge values
     * (zero decimal at scale 18, a string needing JSON escapes, empty
-    * binary, a one-element array), one of nulls.
+    * binary, a one-element array), four that put NaN, both infinities
+    * and negative zero in each floating column, one of nulls.
     */
   private val matrixSql =
-    """SELECT * FROM (
+    raw"""SELECT * FROM (
       |SELECT true AS b, CAST(1 AS TINYINT) AS t, CAST(2 AS SMALLINT) AS s, 3 AS i,
       |  CAST(4 AS BIGINT) AS l, CAST(1.5 AS FLOAT) AS f, 2.25D AS d,
       |  CAST(0 AS DECIMAL(38,18)) AS dec, 'x' AS str, DATE'2026-01-02' AS dt,
@@ -42,7 +47,13 @@ class ResultPathSpec extends AnyFunSuite {
       |  CAST(-0.25 AS FLOAT), -1.0E10D, CAST(12345.678 AS DECIMAL(38,18)),
       |  'he said "hi"\n\ttab', DATE'1999-12-31', TIMESTAMP'1999-12-31 23:59:59',
       |  X'', ARRAY(3), MAP('z', 2), named_struct('a', 2, 'b', 'r')
-      |UNION ALL
+      |${nonFinite.map { case (i, f, d) =>
+        s"""UNION ALL
+        |SELECT true, CAST(1 AS TINYINT), CAST(2 AS SMALLINT), $i, CAST(4 AS BIGINT),
+        |  CAST('$f' AS FLOAT), CAST('$d' AS DOUBLE), CAST(0 AS DECIMAL(38,18)), 'x',
+        |  DATE'2026-01-02', TIMESTAMP'2026-01-02 03:04:05.123', X'616263', ARRAY(1, 2),
+        |  MAP('k', 1), named_struct('a', 1, 'b', 'q')
+        |""".stripMargin }.mkString}UNION ALL
       |SELECT CAST(NULL AS BOOLEAN), CAST(NULL AS TINYINT), CAST(NULL AS SMALLINT),
       |  CAST(NULL AS INT), CAST(NULL AS BIGINT), CAST(NULL AS FLOAT), CAST(NULL AS DOUBLE),
       |  CAST(NULL AS DECIMAL(38,18)), CAST(NULL AS STRING), CAST(NULL AS DATE),
@@ -53,6 +64,10 @@ class ResultPathSpec extends AnyFunSuite {
   private lazy val schema: StructType = spark.sql(matrixSql).schema
   private val mapper = new ObjectMapper()
     .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+  // FLOAT and DOUBLE cells are read as doubles: a BigDecimal has no
+  // negative zero
+  private val doubles = new ObjectMapper()
+  private def floating(dt: DataType): Boolean = dt == FloatType || dt == DoubleType
 
   // --- canonical cell values: how each wire's rendering is compared -------
   private val Null = "NULL"
@@ -73,8 +88,9 @@ class ResultPathSpec extends AnyFunSuite {
     if (node == null || node.isNull) Null
     else dt match {
       case _: DecimalType => node.decimalValue.stripTrailingZeros.toPlainString
-      case FloatType => node.floatValue.toString
-      case DoubleType => node.doubleValue.toString
+      // JSON has no NaN or infinity: those arrive as strings
+      case FloatType => if (node.isTextual) node.asText.toFloat.toString else node.floatValue.toString
+      case DoubleType => if (node.isTextual) node.asText.toDouble.toString else node.doubleValue.toString
       case TimestampType => java.time.OffsetDateTime.parse(node.asText).toInstant.toString
       case BinaryType => hex(java.util.Base64.getDecoder.decode(node.asText))
       case _: ArrayType | _: MapType | _: StructType => node.toString
@@ -193,9 +209,17 @@ class ResultPathSpec extends AnyFunSuite {
   private def rowsText(page: String): String =
     page.substring(page.indexOf("\"rows\": [") + "\"rows\": [".length, page.lastIndexOf(']'))
 
+  /** A JSON document's rows, read twice: exactly, and with doubles. */
+  private def readRows(doc: String, key: String): Seq[(JsonNode, JsonNode)] = {
+    def rows(m: ObjectMapper) = m.readTree(doc).get(key).elements().asScala.toSeq
+    rows(mapper).zip(rows(doubles))
+  }
+
   private def restCells(page: String): Seq[Seq[String]] =
-    mapper.readTree(page).get("rows").elements().asScala.toSeq.map(r =>
-      schema.fields.toSeq.map(f => fromJson(r.get(f.name), f.dataType)))
+    readRows(page, "rows").map { case (exact, binary) =>
+      schema.fields.toSeq.map(f =>
+        fromJson((if (floating(f.dataType)) binary else exact).get(f.name), f.dataType))
+    }
 
   private def trino(c: HttpClient, root: String, sql: String): String = {
     var doc = post(c, s"$root/v1/statement", sql)
@@ -210,12 +234,14 @@ class ResultPathSpec extends AnyFunSuite {
   }
 
   private def trinoCells(doc: String): Seq[Seq[String]] =
-    mapper.readTree(doc).get("data").elements().asScala.toSeq.map(_.elements().asScala.toSeq
-      .zip(schema.fields).map { case (v, f) =>
+    readRows(doc, "data").map { case (exact, binary) =>
+      schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        val v = (if (floating(f.dataType)) binary else exact).get(i)
         if (v.isNull) Null
         else if (v.isTextual) fromText(v.asText, f.dataType)
         else fromText(v.toString, f.dataType)
-      })
+      }
+    }
 
   test("every wire renders the type matrix alike") {
     withServers { (thriftPort, root, c) =>
@@ -234,8 +260,11 @@ class ResultPathSpec extends AnyFunSuite {
           "2026-01-02T03:04:05.123Z", "616263", "[1,2]", """{"k":1}""", """{"a":1,"b":"q"}"""),
         Seq("false", "-1", "-2", "-3", "-4", "-0.25", "-1.0E10", "12345.678",
           "he said \"hi\"\n\ttab", "1999-12-31", "1999-12-31T23:59:59Z", "", "[3]",
-          """{"z":2}""", """{"a":2,"b":"r"}"""),
-        Seq.fill(schema.length)(Null))
+          """{"z":2}""", """{"a":2,"b":"r"}""")) ++
+        nonFinite.map { case (i, f, d) =>
+          Seq("true", "1", "2", i.toString, "4", f, d, "0", "x", "2026-01-02",
+            "2026-01-02T03:04:05.123Z", "616263", "[1,2]", """{"k":1}""", """{"a":1,"b":"q"}""")
+        } :+ Seq.fill(schema.length)(Null)
       assert(columns == expected, "Thrift column pages")
       assert(rows == expected, "Thrift row pages")
       assert(result == expected, "REST /result")

@@ -864,4 +864,80 @@ class ThriftFrontendSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(ms < StatusWaitMs, s"the call that saw the timeout was held ${ms.round} ms")
     }
   }
+
+  // ---- the engine's one operation registry ----
+
+  import org.apache.hive.service.rpc.thrift.{TCloseOperationReq, TFetchOrientation,
+    TFetchResultsReq, THandleIdentifier, TOperationType}
+
+  /** A Thrift handle for an operation id (the engine's handles are UUIDs). */
+  private def handleFor(opId: String): TOperationHandle = {
+    val u = java.util.UUID.fromString(opId)
+    val guid = java.nio.ByteBuffer.allocate(16)
+      .putLong(u.getMostSignificantBits).putLong(u.getLeastSignificantBits)
+    guid.flip()
+    new TOperationHandle(new THandleIdentifier(guid, java.nio.ByteBuffer.allocate(16)),
+      TOperationType.EXECUTE_STATEMENT, true)
+  }
+
+  private def idOf(h: THandleIdentifier): String = {
+    val bb = java.nio.ByteBuffer.wrap(h.getGuid)
+    new java.util.UUID(bb.getLong, bb.getLong).toString
+  }
+
+  test("CloseOperation removes the operation: the session holds no closed result and the handle is unknown") {
+    withRawSession() { (client, sess) =>
+      val handles = (1 to 20).map { i =>
+        val exec = client.ExecuteStatement(new TExecuteStatementReq(sess, s"SELECT $i AS n"))
+        assert(exec.getStatus.getStatusCode == TStatusCode.SUCCESS_STATUS)
+        val h = exec.getOperationHandle
+        val page = client.FetchResults(new TFetchResultsReq(h, TFetchOrientation.FETCH_NEXT, 10))
+        assert(page.getResults.getColumns.get(0).getI32Val.getValues.get(0) == i)
+        assert(client.CloseOperation(new TCloseOperationReq(h)).getStatus.getStatusCode ==
+          TStatusCode.SUCCESS_STATUS)
+        h
+      }
+      val es = engine.session(idOf(sess.getSessionId)).get
+      assert(es.openOperations.isEmpty, s"${es.openOperations.size} closed operations still held")
+      handles.foreach(h => assert(engine.operation(idOf(h.getOperationId)).isEmpty))
+      // every call on a closed handle answers as for an unknown one
+      val h = handles.last
+      val st = client.GetOperationStatus(new TGetOperationStatusReq(h))
+      assert(st.getStatus.getStatusCode == TStatusCode.ERROR_STATUS)
+      assert(st.getStatus.getErrorMessage == "no such operation")
+      val fr = client.FetchResults(new TFetchResultsReq(h, TFetchOrientation.FETCH_FIRST, 10))
+      assert(fr.getStatus.getStatusCode == TStatusCode.ERROR_STATUS)
+      assert(fr.getStatus.getErrorMessage == "no such operation")
+    }
+  }
+
+  test("a Thrift client cannot resolve an operation another frontend started") {
+    val rest = new RestFrontend(engine, port = 0)
+    val base = s"http://localhost:${rest.start()}/api/v1"
+    try {
+      val http = java.net.http.HttpClient.newHttpClient()
+      def post(url: String, body: String): String = http.send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString()).body()
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val sid = mapper.readTree(post(s"$base/sessions", """{"user": "resty"}"""))
+        .get("sessionId").asText
+      val restOp = mapper.readTree(post(s"$base/sessions/$sid/statements",
+        """{"sql": "SELECT 1 AS one"}""")).get("operationId").asText
+      assert(engine.operation(restOp).isDefined)
+      withRawSession() { (client, _) =>
+        val h = handleFor(restOp)
+        val st = client.GetOperationStatus(new TGetOperationStatusReq(h))
+        assert(st.getStatus.getStatusCode == TStatusCode.ERROR_STATUS)
+        assert(st.getStatus.getErrorMessage == "no such operation")
+        val fr = client.FetchResults(new TFetchResultsReq(h, TFetchOrientation.FETCH_NEXT, 10))
+        assert(fr.getStatus.getErrorMessage == "no such operation")
+        // and its close leaves the REST operation alone
+        client.CloseOperation(new TCloseOperationReq(h))
+        assert(engine.operation(restOp).isDefined)
+      }
+      engine.closeSession(sid)
+    } finally rest.stop()
+  }
 }
