@@ -1,9 +1,10 @@
 package graft.core
 
 import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, Executor, LinkedBlockingQueue, RejectedExecutionException,
+  ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
-import scala.concurrent.ExecutionContext
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -28,13 +29,14 @@ object ShareLevel {
   * SparkSQLSessionManager.scala:108-120), plus its live operations.
   * Only [[Engine.openSession]] makes one: `registry` is the engine's
   * handle index, which an operation enters in `start` and leaves in
-  * [[Operation.close]].
+  * [[Operation.close]], and `pool` the engine's operation pool.
   */
 final class EngineSession private[core] (
     val id: String,
     val user: String,
     val spark: SparkSession,
-    registry: ConcurrentHashMap[String, Operation]) {
+    registry: ConcurrentHashMap[String, Operation],
+    pool: Executor) {
 
   val createdMs: Long = System.currentTimeMillis()
 
@@ -51,18 +53,17 @@ final class EngineSession private[core] (
   def executeStatement(
       statement: String,
       mode: ResultMode = ResultMode.Full,
-      timeoutMs: Long = 0)(implicit ec: ExecutionContext): ExecuteStatement =
+      timeoutMs: Long = 0): ExecuteStatement =
     start(new ExecuteStatement(this, statement, mode), timeoutMs)
 
   /** Run a metadata-style DataFrame builder under the operation
     * lifecycle (registered like any statement, so engine-wide lookup,
     * cancel, and rowset paging all apply).
     */
-  def executeMetadata(build: SparkSession => DataFrame)(
-      implicit ec: ExecutionContext): DataFrameOperation =
+  def executeMetadata(build: SparkSession => DataFrame): DataFrameOperation =
     start(new DataFrameOperation(this, build), 0)
 
-  private def start[O <: Operation](op: O, timeoutMs: Long)(implicit ec: ExecutionContext): O = {
+  private def start[O <: Operation](op: O, timeoutMs: Long): O = {
     touch()
     ops.put(op.handle, op)
     registry.put(op.handle, op)
@@ -72,7 +73,13 @@ final class EngineSession private[core] (
       throw new IllegalStateException(s"session $id is closed")
     }
     if (timeoutMs > 0) op.armTimeout(timeoutMs, Operation.timeoutScheduler)
-    op.run()
+    // a closed engine's pool takes nothing: undo the registration
+    try op.run(pool)
+    catch {
+      case e: RejectedExecutionException =>
+        op.close()
+        throw new IllegalStateException("the engine is closed", e)
+    }
     op
   }
 
@@ -134,6 +141,11 @@ final class InMemoryDiscoveryClient extends DiscoveryClient {
   * (reference's kyuubi.engine.single.spark.session) sessions sharing a
   * key share the engine SparkSession itself — temp views become
   * visible across connections of the same user/group/server scope.
+  *
+  * Every operation of every session runs on the engine's one operation
+  * pool (the reference engine's exec pool): a frontend only submits and
+  * waits, so no wire's worker threads, and no shared pool a blocking
+  * collect can fill, decide when a statement runs. [[close]] stops it.
   */
 final class Engine(
     val rootSpark: SparkSession,
@@ -155,18 +167,14 @@ final class Engine(
   // serves renewed tokens, not its launch-time ones. The map itself
   // (plain serializable strings) is what `engine_credential` captures.
   private val credentialsStore = new ConcurrentHashMap[String, String]()
-  @volatile private var credsEpoch: Long = -1L
 
   /** Replace the engine's delegation tokens (alias → base64 token). */
   def updateCredentials(aliasToB64: Map[String, String]): Unit = {
     credentialsStore.putAll(aliasToB64.asJava)
     credentialsStore.keySet().retainAll(aliasToB64.keySet.asJava)
-    credsEpoch += 1
   }
 
   def credential(alias: String): Option[String] = Option(credentialsStore.get(alias))
-  def credentialAliases: Set[String] = credentialsStore.keySet().asScala.toSet
-  def credentialsEpoch: Long = credsEpoch
 
   Kdf.registerCredentialLookup(rootSpark, credentialsStore)
 
@@ -176,6 +184,20 @@ final class Engine(
   private val operations = new ConcurrentHashMap[String, Operation]()
   // share-level cache: key → that scope's engine SparkSession
   private val sparkByKey = new ConcurrentHashMap[String, SparkSession]()
+
+  // Named daemon threads made on demand up to the ceiling and retired
+  // after a minute idle; statements beyond the ceiling wait in FIFO
+  // order. Package-visible so a test can shrink it to one thread.
+  private[core] val operationPool: ThreadPoolExecutor = {
+    val p = new ThreadPoolExecutor(Engine.OperationThreads, Engine.OperationThreads,
+      60, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, s"graft-op-${Engine.opThreadIds.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
 
   private def shareKey(user: String, sessionId: String,
       conf: Map[String, String]): String = shareLevel match {
@@ -253,7 +275,7 @@ final class Engine(
     val connInit = conf.get("graft.session.initialize.sql")
       .map(_.split(";").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
     (sessionInitSql ++ connInit).foreach(sessionSpark.sql(_).collect())
-    val sess = new EngineSession(id, user, sessionSpark, operations)
+    val sess = new EngineSession(id, user, sessionSpark, operations, operationPool)
     Kdf.registerAll(sess.spark, engineId, sessionUser = Some(user))
     Kdf.registerCredentialLookup(sess.spark, credentialsStore)
     sessions.put(id, sess)
@@ -286,8 +308,7 @@ final class Engine(
   /** Close sessions idle longer than `idleTimeoutMs` and with no live
     * operation (ref kyuubi.session.engine.idle.timeout — the reaper
     * that keeps a long-lived multi-tenant gateway from accumulating
-    * abandoned sessions). Returns the closed session ids. Call it from
-    * a scheduler ([[startIdleReaper]]) or directly in tests.
+    * abandoned sessions). Returns the closed session ids.
     */
   def reapIdleSessions(idleTimeoutMs: Long): Seq[String] = {
     val cutoff = System.currentTimeMillis() - idleTimeoutMs
@@ -311,12 +332,17 @@ final class Engine(
     }
   }
 
-  /** Shut the engine down: close every session and drop every
-    * discovery registration (the reference engine's stop() path
+  /** Shut the engine down: close every session, stop the operation
+    * pool (a statement submitted from here on fails at once) and drop
+    * every discovery registration (the reference engine's stop() path
     * deregisters from its ZK namespace before exiting).
     */
   def close(): Unit = {
     sessions.keySet().asScala.toSeq.foreach(closeSession)
+    // closing the sessions cancelled and interrupted every running
+    // operation; queued ones are closed and never start
+    operationPool.shutdownNow()
+    operationPool.awaitTermination(10, TimeUnit.SECONDS)
     sparkByKey.keySet().asScala.toSeq.foreach { key =>
       try discovery.unregister(key) catch { case _: Throwable => }
     }
@@ -327,15 +353,17 @@ final class Engine(
     * (admin/UI listing — each has a live discovery registration).
     */
   def engineSpaces: Seq[String] = sparkByKey.keySet().asScala.toSeq.sorted
-
-  /** Arm a periodic idle reaper on the shared scheduler. */
-  def startIdleReaper(idleTimeoutMs: Long, periodMs: Long = 60000): Unit =
-    Operation.timeoutScheduler.scheduleAtFixedRate(
-      () => try reapIdleSessions(idleTimeoutMs) catch { case _: Throwable => },
-      periodMs, periodMs, java.util.concurrent.TimeUnit.MILLISECONDS)
 }
 
 object Engine {
+  /** The most operations one engine runs at once (the reference's
+    * exec pool size, kyuubi.backend.engine.exec.pool.size). A constant,
+    * not a setting.
+    */
+  val OperationThreads = 100
+
+  private val opThreadIds = new AtomicInteger
+
   /** True for client conf keys in the server-reserved `graft.server.*`
     * namespace (bare, or under the `set:hiveconf:`/`set:hivevar:`
     * Hive-JDBC-URL conf prefixes). Those keys carry server-trusted

@@ -1,11 +1,11 @@
 package graft.core
 
 import java.util.UUID
-import java.util.concurrent.{ScheduledExecutorService, ScheduledFuture, ScheduledThreadPoolExecutor,
-  TimeUnit}
+import java.util.concurrent.{Executor, ScheduledExecutorService, ScheduledFuture,
+  ScheduledThreadPoolExecutor, TimeUnit}
 
 import scala.collection.View
-import scala.concurrent.{ExecutionContext, Future, Promise}
+import scala.concurrent.Promise
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success}
 
@@ -174,11 +174,11 @@ abstract class Operation(val session: EngineSession) {
     Option(execThread).foreach(_.interrupt())
   }
 
-  def run()(implicit ec: ExecutionContext): Future[Unit] = {
+  /** Queue the operation on `pool`, its engine's operation pool. */
+  private[core] def run(pool: Executor): Unit = {
     setState(OperationState.Pending)
-    Future {
+    pool.execute { () =>
       execThread = Thread.currentThread()
-      setState(OperationState.Running)
       // NOT scala.util.Try: Try catches only NonFatal, and an
       // InterruptedException — exactly what the cancel/timeout paths
       // deliver to this thread — would blow straight through it,
@@ -189,8 +189,12 @@ abstract class Operation(val session: EngineSession) {
       // NEXT operation the same way (observed: a cancelled statement's
       // interrupt left the following query-timeout test polling
       // GetOperationStatus in a busy loop for 10+ minutes).
+      // The RUNNING transition is inside too: it throws for an operation
+      // cancelled, timed out or closed while it queued, which then ends
+      // here without running.
+      var started = false
       val outcome =
-        try { withJobGroup(runInternal()); Success(()) }
+        try { setState(OperationState.Running); started = true; withJobGroup(runInternal()); Success(()) }
         catch { case t: Throwable => Failure(t) }
       // release the thread ref and clear any interrupt leftover from a
       // racing cancel BEFORE the pooled thread returns to the executor —
@@ -204,6 +208,7 @@ abstract class Operation(val session: EngineSession) {
       outcome match {
         case Success(_) =>
           markTerminal(OperationState.Finished)
+        case Failure(_) if !started => ()
         case Failure(e) =>
           operationException = Some(e)
           logLine(s"operation $handle failed: ${e.getClass.getName}: ${String.valueOf(e.getMessage)}")
@@ -351,7 +356,7 @@ object Operation {
     */
   lazy val timeoutScheduler: ScheduledThreadPoolExecutor = {
     val s = new ScheduledThreadPoolExecutor(1, (r: Runnable) => {
-      val t = new Thread(r, "graft-op-timeout")
+      val t = new Thread(r, "graft-timer")
       t.setDaemon(true)
       t
     })

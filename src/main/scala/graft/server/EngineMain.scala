@@ -16,8 +16,8 @@ import graft.core.{DiscoveryClients, Engine, EngineConfs}
   * Registers `host:port` under `space` once the frontend is bound,
   * then serves until stdin reaches EOF (the launcher holds the pipe,
   * so an exiting/crashing parent tears the engine down) or a
-  * "SHUTDOWN" line arrives. On the way out it unregisters and stops
-  * the frontend.
+  * "SHUTDOWN" line arrives. On the way out it unregisters, stops the
+  * frontend and closes the engine.
   *
   * On a real cluster the same main runs under spark-submit with
   * `--master yarn|k8s` — nothing here assumes local mode: the session
@@ -71,6 +71,7 @@ object EngineMain {
     def shutdown(): Unit = {
       try discovery.unregister(space) catch { case _: Throwable => }
       try frontend.stop() catch { case _: Throwable => }
+      try engine.close() catch { case _: Throwable => }
       try spark.stop() catch { case _: Throwable => }
     }
     Runtime.getRuntime.addShutdownHook(new Thread(() => shutdown()))

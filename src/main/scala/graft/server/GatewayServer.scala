@@ -6,8 +6,7 @@ import javax.security.auth.callback.{Callback, CallbackHandler, NameCallback, Pa
 
 import org.apache.hive.service.rpc.thrift._
 import org.apache.thrift.protocol.TBinaryProtocol
-import org.apache.thrift.server.TThreadPoolServer
-import org.apache.thrift.transport.{TSaslClientTransport, TServerSocket, TSocket, TTransport}
+import org.apache.thrift.transport.{TSaslClientTransport, TSocket, TTransport}
 
 import graft.core.ShareLevel
 
@@ -270,11 +269,9 @@ final class GatewayServer(
     override def CloseSession(req: TCloseSessionReq): TCloseSessionResp =
       sessionConn(req.getSessionHandle) match {
         case None =>
-          val r = new TCloseSessionResp(); r.setStatus(errStatus("unknown session")); r
+          new TCloseSessionResp(errStatus("unknown session"))
         case Some(conn) =>
-          val resp = forward(conn, (st: TStatus) => {
-            val r = new TCloseSessionResp(); r.setStatus(st); r
-          })(_.CloseSession(req))
+          val resp = forward(conn, new TCloseSessionResp(_))(_.CloseSession(req))
           // the conn is this session's alone: drop it with every route
           // to it, the unclosed operations' included
           evictConn(conn)
@@ -287,88 +284,70 @@ final class GatewayServer(
 
     override def GetInfo(req: TGetInfoReq): TGetInfoResp =
       sessionConn(req.getSessionHandle) match {
-        case None => val r = new TGetInfoResp(); r.setStatus(errStatus("unknown session")); r
-        case Some(conn) => forward(conn, (st: TStatus) => {
-          val r = new TGetInfoResp(); r.setStatus(st); r
-        })(_.GetInfo(req))
+        case None => new TGetInfoResp(errStatus("unknown session"), null)
+        case Some(conn) => forward(conn, new TGetInfoResp(_, null))(_.GetInfo(req))
       }
 
     override def ExecuteStatement(req: TExecuteStatementReq): TExecuteStatementResp =
-      viaSession(req.getSessionHandle, (st: TStatus) => {
-        val r = new TExecuteStatementResp(); r.setStatus(st); r
-      })(_.ExecuteStatement(req))(_.getOperationHandle)
+      viaSession(req.getSessionHandle, new TExecuteStatementResp(_))(_.ExecuteStatement(req))(
+        _.getOperationHandle)
 
     override def GetTypeInfo(req: TGetTypeInfoReq): TGetTypeInfoResp =
-      viaSession(req.getSessionHandle, (st: TStatus) => {
-        val r = new TGetTypeInfoResp(); r.setStatus(st); r
-      })(_.GetTypeInfo(req))(_.getOperationHandle)
+      viaSession(req.getSessionHandle, new TGetTypeInfoResp(_))(_.GetTypeInfo(req))(
+        _.getOperationHandle)
 
     override def GetCatalogs(req: TGetCatalogsReq): TGetCatalogsResp =
-      viaSession(req.getSessionHandle, (st: TStatus) => {
-        val r = new TGetCatalogsResp(); r.setStatus(st); r
-      })(_.GetCatalogs(req))(_.getOperationHandle)
+      viaSession(req.getSessionHandle, new TGetCatalogsResp(_))(_.GetCatalogs(req))(
+        _.getOperationHandle)
 
     override def GetSchemas(req: TGetSchemasReq): TGetSchemasResp =
-      viaSession(req.getSessionHandle, (st: TStatus) => {
-        val r = new TGetSchemasResp(); r.setStatus(st); r
-      })(_.GetSchemas(req))(_.getOperationHandle)
+      viaSession(req.getSessionHandle, new TGetSchemasResp(_))(_.GetSchemas(req))(
+        _.getOperationHandle)
 
     override def GetTables(req: TGetTablesReq): TGetTablesResp =
-      viaSession(req.getSessionHandle, (st: TStatus) => {
-        val r = new TGetTablesResp(); r.setStatus(st); r
-      })(_.GetTables(req))(_.getOperationHandle)
+      viaSession(req.getSessionHandle, new TGetTablesResp(_))(_.GetTables(req))(
+        _.getOperationHandle)
 
     override def GetTableTypes(req: TGetTableTypesReq): TGetTableTypesResp =
-      viaSession(req.getSessionHandle, (st: TStatus) => {
-        val r = new TGetTableTypesResp(); r.setStatus(st); r
-      })(_.GetTableTypes(req))(_.getOperationHandle)
+      viaSession(req.getSessionHandle, new TGetTableTypesResp(_))(_.GetTableTypes(req))(
+        _.getOperationHandle)
 
     override def GetColumns(req: TGetColumnsReq): TGetColumnsResp =
-      viaSession(req.getSessionHandle, (st: TStatus) => {
-        val r = new TGetColumnsResp(); r.setStatus(st); r
-      })(_.GetColumns(req))(_.getOperationHandle)
+      viaSession(req.getSessionHandle, new TGetColumnsResp(_))(_.GetColumns(req))(
+        _.getOperationHandle)
 
     override def GetFunctions(req: TGetFunctionsReq): TGetFunctionsResp =
-      viaSession(req.getSessionHandle, (st: TStatus) => {
-        val r = new TGetFunctionsResp(); r.setStatus(st); r
-      })(_.GetFunctions(req))(_.getOperationHandle)
+      viaSession(req.getSessionHandle, new TGetFunctionsResp(_))(_.GetFunctions(req))(
+        _.getOperationHandle)
 
     override def GetPrimaryKeys(req: TGetPrimaryKeysReq): TGetPrimaryKeysResp =
-      viaSession(req.getSessionHandle, (st: TStatus) => {
-        val r = new TGetPrimaryKeysResp(); r.setStatus(st); r
-      })(_.GetPrimaryKeys(req))(_.getOperationHandle)
+      viaSession(req.getSessionHandle, new TGetPrimaryKeysResp(_))(_.GetPrimaryKeys(req))(
+        _.getOperationHandle)
 
     override def GetCrossReference(req: TGetCrossReferenceReq): TGetCrossReferenceResp =
-      viaSession(req.getSessionHandle, (st: TStatus) => {
-        val r = new TGetCrossReferenceResp(); r.setStatus(st); r
-      })(_.GetCrossReference(req))(_.getOperationHandle)
+      viaSession(req.getSessionHandle, new TGetCrossReferenceResp(_))(_.GetCrossReference(req))(
+        _.getOperationHandle)
 
     override def GetOperationStatus(req: TGetOperationStatusReq): TGetOperationStatusResp =
       opConn(req.getOperationHandle) match {
         case None =>
-          val r = new TGetOperationStatusResp(); r.setStatus(errStatus("unknown operation")); r
-        case Some(conn) => forward(conn, (st: TStatus) => {
-          val r = new TGetOperationStatusResp(); r.setStatus(st); r
-        })(_.GetOperationStatus(req))
+          new TGetOperationStatusResp(errStatus("unknown operation"))
+        case Some(conn) => forward(conn, new TGetOperationStatusResp(_))(_.GetOperationStatus(req))
       }
 
     override def CancelOperation(req: TCancelOperationReq): TCancelOperationResp =
       opConn(req.getOperationHandle) match {
         case None =>
-          val r = new TCancelOperationResp(); r.setStatus(errStatus("unknown operation")); r
-        case Some(conn) => forward(conn, (st: TStatus) => {
-          val r = new TCancelOperationResp(); r.setStatus(st); r
-        })(_.CancelOperation(req))
+          new TCancelOperationResp(errStatus("unknown operation"))
+        case Some(conn) => forward(conn, new TCancelOperationResp(_))(_.CancelOperation(req))
       }
 
     override def CloseOperation(req: TCloseOperationReq): TCloseOperationResp =
       opConn(req.getOperationHandle) match {
         case None =>
-          val r = new TCloseOperationResp(); r.setStatus(errStatus("unknown operation")); r
+          new TCloseOperationResp(errStatus("unknown operation"))
         case Some(conn) =>
-          val resp = forward(conn, (st: TStatus) => {
-            val r = new TCloseOperationResp(); r.setStatus(st); r
-          })(_.CloseOperation(req))
+          val resp = forward(conn, new TCloseOperationResp(_))(_.CloseOperation(req))
           opConns.remove(key(req.getOperationHandle.getOperationId))
           resp
       }
@@ -376,19 +355,15 @@ final class GatewayServer(
     override def GetResultSetMetadata(req: TGetResultSetMetadataReq): TGetResultSetMetadataResp =
       opConn(req.getOperationHandle) match {
         case None =>
-          val r = new TGetResultSetMetadataResp(); r.setStatus(errStatus("unknown operation")); r
-        case Some(conn) => forward(conn, (st: TStatus) => {
-          val r = new TGetResultSetMetadataResp(); r.setStatus(st); r
-        })(_.GetResultSetMetadata(req))
+          new TGetResultSetMetadataResp(errStatus("unknown operation"))
+        case Some(conn) => forward(conn, new TGetResultSetMetadataResp(_))(_.GetResultSetMetadata(req))
       }
 
     override def FetchResults(req: TFetchResultsReq): TFetchResultsResp =
       opConn(req.getOperationHandle) match {
         case None =>
-          val r = new TFetchResultsResp(); r.setStatus(errStatus("unknown operation")); r
-        case Some(conn) => forward(conn, (st: TStatus) => {
-          val r = new TFetchResultsResp(); r.setStatus(st); r
-        })(_.FetchResults(req))
+          new TFetchResultsResp(errStatus("unknown operation"))
+        case Some(conn) => forward(conn, new TFetchResultsResp(_))(_.FetchResults(req))
       }
 
     override def GetQueryId(req: TGetQueryIdReq): TGetQueryIdResp =
@@ -397,55 +372,30 @@ final class GatewayServer(
         case Some(conn) => forward(conn, (_: TStatus) => new TGetQueryIdResp(""))(_.GetQueryId(req))
       }
 
-    override def GetDelegationToken(req: TGetDelegationTokenReq): TGetDelegationTokenResp = {
-      val r = new TGetDelegationTokenResp()
-      r.setStatus(errStatus("delegation tokens not supported")); r
-    }
-    override def CancelDelegationToken(req: TCancelDelegationTokenReq): TCancelDelegationTokenResp = {
-      val r = new TCancelDelegationTokenResp()
-      r.setStatus(errStatus("delegation tokens not supported")); r
-    }
-    override def RenewDelegationToken(req: TRenewDelegationTokenReq): TRenewDelegationTokenResp = {
-      val r = new TRenewDelegationTokenResp()
-      r.setStatus(errStatus("delegation tokens not supported")); r
-    }
+    override def GetDelegationToken(req: TGetDelegationTokenReq): TGetDelegationTokenResp =
+      new TGetDelegationTokenResp(errStatus("delegation tokens not supported"))
+    override def CancelDelegationToken(req: TCancelDelegationTokenReq): TCancelDelegationTokenResp =
+      new TCancelDelegationTokenResp(errStatus("delegation tokens not supported"))
+    override def RenewDelegationToken(req: TRenewDelegationTokenReq): TRenewDelegationTokenResp =
+      new TRenewDelegationTokenResp(errStatus("delegation tokens not supported"))
     override def SetClientInfo(req: TSetClientInfoReq): TSetClientInfoResp =
       sessionConn(req.getSessionHandle) match {
-        case None => val r = new TSetClientInfoResp(); r.setStatus(errStatus("unknown session")); r
-        case Some(conn) => forward(conn, (st: TStatus) => {
-          val r = new TSetClientInfoResp(); r.setStatus(st); r
-        })(_.SetClientInfo(req))
+        case None => new TSetClientInfoResp(errStatus("unknown session"))
+        case Some(conn) => forward(conn, new TSetClientInfoResp(_))(_.SetClientInfo(req))
       }
-    override def UploadData(req: TUploadDataReq): TUploadDataResp = {
-      val r = new TUploadDataResp(); r.setStatus(errStatus("UploadData not supported")); r
-    }
-    override def DownloadData(req: TDownloadDataReq): TDownloadDataResp = {
-      val r = new TDownloadDataResp(); r.setStatus(errStatus("DownloadData not supported")); r
-    }
+    override def UploadData(req: TUploadDataReq): TUploadDataResp =
+      new TUploadDataResp(errStatus("UploadData not supported"), null)
+    override def DownloadData(req: TDownloadDataReq): TDownloadDataResp =
+      new TDownloadDataResp(errStatus("DownloadData not supported"), null)
   }
 
   // --- server lifecycle -----------------------------------------------------
-  private val serverSocket = new TServerSocket(requestedPort)
-  val boundPort: Int = serverSocket.getServerSocket.getLocalPort
-
-  private val transportFactory = auth match {
-    case Some(p) => PlainSasl.serverTransportFactory(p)
-    case None => new org.apache.thrift.transport.TTransportFactory()
-  }
-
-  private val server = new TThreadPoolServer(
-    new TThreadPoolServer.Args(serverSocket)
-      .processor(new TCLIService.Processor(iface))
-      .transportFactory(transportFactory)
-      .protocolFactory(new TBinaryProtocol.Factory())
-      .minWorkerThreads(2)
-      .maxWorkerThreads(32))
-
-  private val serverThread = new Thread(() => server.serve(), s"graft-gateway-$boundPort")
-  serverThread.setDaemon(true)
+  private val server = new BinaryThriftServer("graft-gateway", requestedPort,
+    new TCLIService.Processor(iface), auth)
+  val boundPort: Int = server.boundPort
 
   def start(): GatewayServer = {
-    serverThread.start()
+    server.start()
     // Gateway HA: the server registers ITSELF in the same discovery
     // backend its engines use (reference
     // KyuubiTBinaryFrontendService.scala:47-48 creating a
@@ -465,7 +415,6 @@ final class GatewayServer(
     if (selfRegister)
       try discovery.unregister(GatewayServer.Namespace) catch { case _: Throwable => }
     server.stop()
-    serverSocket.close()
     sessionConns.values.forEach(c => try c.transport.close() catch { case _: Throwable => })
     sessionConns.clear()
     opConns.clear()

@@ -2,9 +2,8 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
 
-import scala.concurrent.ExecutionContext
 import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -102,11 +101,10 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     "adminUsers requires a configured restAuth provider: admin verbs " +
       "must authenticate the asserted identity, not trust it")
 
-  // The statement pool and the HTTP worker pool belong to this frontend:
-  // named threads, shut down by stop().
-  private val execPool = RestFrontend.namedPool("graft-rest-exec")
-  private val httpPool = RestFrontend.namedPool("graft-rest-http")
-  private implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(execPool)
+  // The HTTP worker pool belongs to this frontend: named threads, shut
+  // down by stop(). Statements run on the engine's operation pool.
+  private val httpPool = Executors.newFixedThreadPool(8, (r: Runnable) =>
+    new Thread(r, s"graft-rest-http-${RestFrontend.poolThreads.incrementAndGet()}"))
 
   // keyed by batch id (== the submitting operation's handle, except for
   // recovered batches, which keep their original id over a new op)
@@ -850,9 +848,9 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     metadataCleaner.foreach(_.shutdownNow())
     submitterThreads.foreach(_.interrupt())
     server.stop(0)
-    // shut both pools, then give in-flight work a bounded time to drain
-    Seq(httpPool, execPool).foreach(_.shutdown())
-    Seq(httpPool, execPool).foreach(_.awaitTermination(10, TimeUnit.SECONDS))
+    // give in-flight requests a bounded time to drain
+    httpPool.shutdown()
+    httpPool.awaitTermination(10, TimeUnit.SECONDS)
     Events.unregister(metrics)
     Events.unregister(eventLog)
     Events.unregister(sessionCloseListener)
@@ -1974,11 +1972,6 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
 object RestFrontend {
 
   private val poolThreads = new java.util.concurrent.atomic.AtomicInteger()
-
-  /** An 8-thread pool whose threads are named `<prefix>-<n>`. */
-  private def namedPool(prefix: String): ExecutorService =
-    Executors.newFixedThreadPool(8, (r: Runnable) =>
-      new Thread(r, s"$prefix-${poolThreads.incrementAndGet()}"))
 
   /** Every route the dispatcher serves, as (method, path, tag,
     * summary) — the single source the OpenAPI document renders from,

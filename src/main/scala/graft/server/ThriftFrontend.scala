@@ -4,13 +4,12 @@ import java.nio.ByteBuffer
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
-import scala.concurrent.ExecutionContext
 import scala.jdk.CollectionConverters._
 
 import org.apache.hive.service.rpc.thrift._
-import org.apache.thrift.protocol.TBinaryProtocol
-import org.apache.thrift.server.TThreadPoolServer
-import org.apache.thrift.transport.TServerSocket
+import org.apache.thrift.protocol.TProtocol
+import org.apache.thrift.server.{ServerContext, TServerEventHandler}
+import org.apache.thrift.transport.TTransport
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graft.ResultEncoders
 import org.apache.spark.sql.types._
@@ -57,8 +56,6 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     // Denied client IPs (reference SessionLimiter.scala:111-124) —
     // the operator's lever against a misbehaving HOST, not account.
     denyIps: Set[String] = Set.empty) {
-
-  private implicit val ec: ExecutionContext = ExecutionContext.global
 
   /** What one Thrift session settled at OpenSession. `admission` is the
     * limiter admission the open took (the keys ACTUALLY incremented),
@@ -791,11 +788,8 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     override def GetQueryId(req: TGetQueryIdReq): TGetQueryIdResp =
       new TGetQueryIdResp(idOf(req.getOperationHandle.getOperationId))
 
-    override def GetDelegationToken(req: TGetDelegationTokenReq): TGetDelegationTokenResp = {
-      val resp = new TGetDelegationTokenResp()
-      resp.setStatus(err(new UnsupportedOperationException("delegation tokens unsupported")))
-      resp
-    }
+    override def GetDelegationToken(req: TGetDelegationTokenReq): TGetDelegationTokenResp =
+      new TGetDelegationTokenResp(err(new UnsupportedOperationException("delegation tokens unsupported")))
     override def CancelDelegationToken(req: TCancelDelegationTokenReq): TCancelDelegationTokenResp =
       new TCancelDelegationTokenResp(err(new UnsupportedOperationException("delegation tokens unsupported")))
     /** Engine-side credential receiver (reference
@@ -820,16 +814,10 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
       } catch { case e: Throwable => new TRenewDelegationTokenResp(err(e)) }
     override def SetClientInfo(req: TSetClientInfoReq): TSetClientInfoResp =
       new TSetClientInfoResp(ok)
-    override def UploadData(req: TUploadDataReq): TUploadDataResp = {
-      val resp = new TUploadDataResp()
-      resp.setStatus(err(new UnsupportedOperationException("UploadData unsupported")))
-      resp
-    }
-    override def DownloadData(req: TDownloadDataReq): TDownloadDataResp = {
-      val resp = new TDownloadDataResp()
-      resp.setStatus(err(new UnsupportedOperationException("DownloadData unsupported")))
-      resp
-    }
+    override def UploadData(req: TUploadDataReq): TUploadDataResp =
+      new TUploadDataResp(err(new UnsupportedOperationException("UploadData unsupported")), null)
+    override def DownloadData(req: TDownloadDataReq): TDownloadDataResp =
+      new TDownloadDataResp(err(new UnsupportedOperationException("DownloadData unsupported")), null)
   }
 
   /** The TCLIService processor over this frontend's session state —
@@ -841,49 +829,25 @@ final class ThriftFrontend(engine: Engine, requestedPort: Int = 0,
     new TCLIService.Processor(iface)
 
   // --- server lifecycle -----------------------------------------------------
-  private val serverSocket = new TServerSocket(requestedPort)
-  val boundPort: Int = serverSocket.getServerSocket.getLocalPort
-
   // auth=None keeps the historical noSasl wire; a provider switches the
-  // whole socket to SASL PLAIN (credentials checked BEFORE any
-  // TCLIService call reaches the processor).
-  private val transportFactory = auth match {
-    case Some(p) => PlainSasl.serverTransportFactory(p)
-    case None => new org.apache.thrift.transport.TTransportFactory()
-  }
+  // whole socket to SASL PLAIN. Each connection's remote address is
+  // captured on its worker thread before requests are processed (Hive's
+  // TSetIpAddressProcessor pattern) — it feeds the per-IP / per-user:IP
+  // connection limits.
+  private val server = new BinaryThriftServer("graft-thrift", requestedPort, processor, auth,
+    Some(new TServerEventHandler {
+      override def preServe(): Unit = ()
+      override def createContext(in: TProtocol, out: TProtocol): ServerContext = null
+      override def deleteContext(ctx: ServerContext, in: TProtocol, out: TProtocol): Unit = ClientIp.clear()
+      override def processContext(ctx: ServerContext, in: TTransport, out: TTransport): Unit =
+        ClientIp.set(ClientIp.remoteIp(in))
+    }))
+  val boundPort: Int = server.boundPort
 
-  private val server = new TThreadPoolServer(
-    new TThreadPoolServer.Args(serverSocket)
-      .processor(new TCLIService.Processor(iface))
-      .transportFactory(transportFactory)
-      .protocolFactory(new TBinaryProtocol.Factory())
-      .minWorkerThreads(2)
-      .maxWorkerThreads(32))
-
-  // Capture each connection's remote address on its worker thread
-  // before requests are processed (Hive's TSetIpAddressProcessor
-  // pattern) — feeds the per-IP / per-user:IP connection limits.
-  server.setServerEventHandler(new org.apache.thrift.server.TServerEventHandler {
-    override def preServe(): Unit = ()
-    override def createContext(input: org.apache.thrift.protocol.TProtocol,
-        output: org.apache.thrift.protocol.TProtocol): org.apache.thrift.server.ServerContext = null
-    override def deleteContext(ctx: org.apache.thrift.server.ServerContext,
-        input: org.apache.thrift.protocol.TProtocol,
-        output: org.apache.thrift.protocol.TProtocol): Unit = ClientIp.clear()
-    override def processContext(ctx: org.apache.thrift.server.ServerContext,
-        in: org.apache.thrift.transport.TTransport,
-        out: org.apache.thrift.transport.TTransport): Unit =
-      ClientIp.set(ClientIp.remoteIp(in))
-  })
-
-  private val serverThread = new Thread(() => server.serve(), s"graft-thrift-$boundPort")
-  serverThread.setDaemon(true)
-
-  def start(): ThriftFrontend = { serverThread.start(); this }
+  def start(): ThriftFrontend = { server.start(); this }
 
   def stop(): Unit = {
     server.stop()
-    serverSocket.close()
     Events.unregister(sessionCloseListener)
   }
 }

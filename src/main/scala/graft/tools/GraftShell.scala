@@ -1,7 +1,5 @@
 package graft.tools
 
-import scala.concurrent.ExecutionContext.Implicits.global
-
 import graft.core.{Engine, EngineConfs, OperationState, ResultMode}
 
 /** Minimal interactive/one-shot SQL front-end over the gateway Engine —

@@ -2,8 +2,6 @@ package graft.core
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.concurrent.ExecutionContext.Implicits.global
-
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskStart}
 import org.apache.spark.sql.graft.ArrowHelper
 import org.scalatest.funsuite.AnyFunSuite

@@ -1,7 +1,5 @@
 package graft.core
 
-import scala.concurrent.ExecutionContext.Implicits.global
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture

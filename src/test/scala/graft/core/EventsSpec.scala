@@ -2,7 +2,6 @@ package graft.core
 
 import java.nio.file.Files
 
-import scala.concurrent.ExecutionContext.Implicits.global
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite

@@ -1669,10 +1669,13 @@ class RestFrontendSpec extends AnyFunSuite {
 
   test("stop() ends the frontend's named REST threads") {
     import scala.jdk.CollectionConverters._
+    // a REST statement runs on the engine's operation pool, which
+    // Engine.close() stops
     def restThreads: Set[Thread] = Thread.getAllStackTraces.keySet.asScala
-      .filter(t => t.isAlive && t.getName.startsWith("graft-rest-")).toSet
+      .filter(t => t.isAlive && Seq("graft-rest-", "graft-op-").exists(t.getName.startsWith)).toSet
     val before = restThreads
-    val front = new RestFrontend(new Engine(spark), port = 0)
+    val engine = new Engine(spark)
+    val front = new RestFrontend(engine, port = 0)
     val base = s"http://localhost:${front.start()}/api/v1"
     try {
       val c = HttpClient.newHttpClient()
@@ -1688,9 +1691,12 @@ class RestFrontendSpec extends AnyFunSuite {
       val (rc, rbody) = get(c, s"$base/sessions/$sid/statements/$opId/result")
       assert(rc == 200 && rbody.contains("""{"id":2}"""), rbody)
       val started = (restThreads -- before).map(_.getName)
-      assert(started.exists(_.startsWith("graft-rest-exec-")) &&
+      assert(started.exists(_.startsWith("graft-op-")) &&
         started.exists(_.startsWith("graft-rest-http-")), started)
-    } finally front.stop()
+    } finally {
+      front.stop()
+      engine.close()
+    }
     val left = restThreads -- before
     left.foreach(_.join(5000)) // a pool thread may still be unwinding
     assert(left.forall(!_.isAlive), left.filter(_.isAlive).map(_.getName))
