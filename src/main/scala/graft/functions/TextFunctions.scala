@@ -29,8 +29,9 @@ object TextFunctions {
   /** Token n-gram shingles: `n` consecutive tokens joined by a space.
     * Documents with fewer than `n` tokens yield a single shingle of the
     * whole text, so every doc lands in at least one dedup bucket.
-    * Native kernel ([[org.apache.spark.sql.graft.ShinglesExpr]]); the
-    * HOF twin below is the spec-pinned reference.
+    * Native kernel ([[org.apache.spark.sql.graft.ShinglesExpr]]); its
+    * HOF twin, test-scope `HofTwins.shinglesOfTokensHof`, is the
+    * spec-pinned reference.
     */
   def shingles(text: Column, n: Int): Column =
     shinglesOfTokens(tokens(text), n)
@@ -44,16 +45,6 @@ object TextFunctions {
     */
   def distinctShingles(text: Column, n: Int): Column =
     org.apache.spark.sql.graft.TextKernelExprs.shingles(tokens(text), n, distinct = true)
-
-  /** The composed-HOF shingle form the kernel replaced — kept as the
-    * bit-identity reference (TextKernelSpec compares the two on every
-    * fixture corpus).
-    */
-  def shinglesOfTokensHof(toks: Column, n: Int): Column =
-    when(size(toks) < n, array(concat_ws(" ", toks)))
-      .otherwise(transform(
-        sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
 
   /** 64-bit hash of one shingle under hash-function index `seed`.
     * xxhash64 over (seed, value) gives k independent-enough functions
@@ -78,34 +69,21 @@ object TextFunctions {
 
   /** LSH band keys from a minhash signature: hash of each contiguous
     * `rowsPerBand`-slice. Two docs collide in a band iff that slice of
-    * their signatures is identical. Native one-pass kernel; the HOF
-    * twin below is TextKernelSpec's bit-identity reference.
+    * their signatures is identical. Native one-pass kernel; test-scope
+    * `HofTwins.bandKeysHof` is TextKernelSpec's bit-identity reference.
     */
   def bandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
     org.apache.spark.sql.graft.Bridge.column(
       org.apache.spark.sql.graft.BandKeysExpr(
         org.apache.spark.sql.graft.Bridge.expression(signature), bands, rowsPerBand))
 
-  /** The composed per-band slice/cast/concat form the kernel replaced. */
-  def bandKeysHof(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(",",
-          transform(slice(signature, b * rowsPerBand + 1, rowsPerBand),
-            x => x.cast("string")))).as("key"))
-    }: _*)
-
   /** Positional agreement count of two MinHash signatures (the LSH
     * Jaccard estimator's numerator). Native one-pass kernel
-    * ([[org.apache.spark.sql.graft.ZipEqCountExpr]]); the HOF twin
-    * below is TextKernelSpec's bit-identity reference.
+    * ([[org.apache.spark.sql.graft.ZipEqCountExpr]]); test-scope
+    * `HofTwins.zipEqCountHof` is TextKernelSpec's bit-identity reference.
     */
   def zipEqCount(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.TextKernelExprs.zipEqCount(a, b)
-
-  /** The interpreted zip_with/filter/size form the kernel replaced. */
-  def zipEqCountHof(a: Column, b: Column): Column =
-    size(filter(zip_with(a, b, (x, y) => x === y), p => p))
 
   /** 64-bit SimHash over a token array: per bit, sum +1/-1 weighted by
     * whether that bit of xxhash64(token) is set; the sign of each sum is
@@ -118,18 +96,6 @@ object TextFunctions {
   /** SimHash from a pre-hashed token array (native kernel). */
   def simhash64OfHashes(hashes: Column): Column =
     org.apache.spark.sql.graft.TextKernelExprs.simhash64(hashes)
-
-  /** The composed-HOF 64-bit SimHash the kernel replaced — kept as the
-    * bit-identity reference for TextKernelSpec.
-    */
-  def simhash64OfHashesHof(hashes: Column): Column = {
-    val bitCols = (0 until 64).map { i =>
-      val cnt = aggregate(hashes, lit(0),
-        (acc, h) => acc + when(shiftright(h, i).bitwiseAND(1) === 1, 1).otherwise(-1))
-      when(cnt > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }
-    bitCols.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming64(a: Column, b: Column): Column =
@@ -150,41 +116,13 @@ object TextFunctions {
   def entropyTermsMicro(toks: Column): Column =
     org.apache.spark.sql.graft.TextKernelExprs.entropyTermsMicro(toks)
 
-  /** The sort-then-run-count fold the kernel replaced — TextKernelSpec's
-    * bit-identity reference (the sum is over distinct tokens, so the
-    * kernel's hash-counting pass produces the identical integer).
-    */
-  def entropyTermsMicroHof(toks: Column): Column = {
-    def contrib(c: Column): Column =
-      when(c > 0L, c * floor(log(c.cast("double")) * 1000000).cast("long"))
-        .otherwise(lit(0L))
-    aggregate(
-      array_sort(toks),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("acc")),
-      (st, x) => {
-        val same = st.getField("run") > 0L && x === st.getField("prev")
-        struct(
-          x.as("prev"),
-          when(same, st.getField("run") + 1L).otherwise(lit(1L)).as("run"),
-          when(same, st.getField("acc"))
-            .otherwise(st.getField("acc") + contrib(st.getField("run"))).as("acc"))
-      },
-      st => st.getField("acc") + contrib(st.getField("run")))
-  }
-
   /** Oracle-portable 32-bit md5-prefix hash of every element of a
     * string array — the winnowing pipeline's per-gram fingerprint
-    * (native kernel; the HOF twin below is TextKernelSpec's
-    * bit-identity reference).
+    * (native kernel; test-scope `HofTwins.md5Prefix32HashesHof` is
+    * TextKernelSpec's bit-identity reference).
     */
   def md5Prefix32Hashes(arr: Column): Column =
     org.apache.spark.sql.graft.TextKernelExprs.arrayMd5Prefix32(arr)
-
-  /** The composed per-element md5/substring/conv form the kernel
-    * replaced.
-    */
-  def md5Prefix32HashesHof(arr: Column): Column =
-    transform(arr, g => conv(substring(md5(g), 1, 8), 16, 10).cast("long"))
 
   /** Hex-digit values (0..15) of the first 15 hex chars of md5(s): a
     * 60-bit token hash computable bit-for-bit in any engine with md5 —
@@ -269,21 +207,4 @@ object TextFunctions {
 
   def langGuess(toks: Column): Column =
     org.apache.spark.sql.graft.TextKernelExprs.langGuess(toks, langMarkers)
-
-  /** The composed-HOF guesser the kernel replaced — TextKernelSpec's
-    * bit-identity reference.
-    */
-  def langGuessHof(toks: Column): Column = {
-    val scores = langMarkers.map { case (lang, markers) =>
-      val score = markers.map(m =>
-        size(filter(toks, t => t === m))).reduce(_ + _)
-      (lang, score)
-    }
-    // argmax with deterministic preference order (first listed wins ties)
-    val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    val pick = scores.foldRight(lit("und"): Column) { case ((lang, score), acc) =>
-      when(score === best && best > 0, lang).otherwise(acc)
-    }
-    pick
-  }
 }

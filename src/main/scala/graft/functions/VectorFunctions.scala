@@ -11,21 +11,17 @@ import org.apache.spark.sql.functions._
   * [[org.apache.spark.sql.graft.CosineExpr]] kernel: HOFs evaluate
   * interpreted (outside whole-stage codegen) and dominate pair-join
   * stages that score 100k+ candidate pairs. The kernel reproduces
-  * [[cosineHof]]'s fold order bit-for-bit (VecKernelSpec pins it), so
+  * the fold order of its test-scope HOF twin `HofTwins.cosineHof`
+  * bit-for-bit (VecKernelSpec pins it), so
   * every oracle built against the HOF form still matches exactly.
   */
 object VectorFunctions {
 
-  /** Dot product of two equal-length vectors (native kernel; the HOF
-    * twin below is VecKernelSpec's bit-identity reference).
+  /** Dot product of two equal-length vectors (native kernel; test-scope
+    * `HofTwins.dotHof` is VecKernelSpec's bit-identity reference).
     */
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.VecExpr.dot(a, b)
-
-  /** The composed-HOF dot the kernel replaced — spec reference. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
 
   /** Euclidean norm. */
   def l2Norm(a: Column): Column =
@@ -35,28 +31,11 @@ object VectorFunctions {
   def cosine(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.VecExpr.cosine(a, b)
 
-  /** The composed-HOF cosine the kernel replaced — kept as the
-    * bit-identity reference (VecKernelSpec compares the two on every
-    * path the queries use).
-    */
-  def cosineHof(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val n = l2Norm(a) * l2Norm(b)
-    when(n === 0.0, 0.0).otherwise(d / n)
-  }
-
-  /** Squared L2 distance (native kernel; HOF twin below is the spec
-    * reference).
+  /** Squared L2 distance (native kernel; test-scope `HofTwins.l2SqHof`
+    * is the spec reference).
     */
   def l2Sq(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.VecExpr.l2Sq(a, b)
-
-  /** The composed-HOF squared-L2 the kernel replaced — spec reference. */
-  def l2SqHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => {
-      val diff = x.cast("double") - y.cast("double")
-      diff * diff
-    }), lit(0.0), (acc, x) => acc + x)
 
   /** The deterministic pseudo-random hyperplane family for
     * [[hyperplaneBucket]] — also dumped by graft.Verify so the DuckDB

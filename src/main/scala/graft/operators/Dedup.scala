@@ -41,6 +41,71 @@ object Dedup {
     df.join(keepers, Seq(idCol), "left_semi")
   }
 
+  /** The i<j pairs of every capped posting list: the one bucket → pairs
+    * step of the LSH, shingle and winnowing chains below. `members`
+    * holds one row per (bucket key, member); each pair is one row of
+    * struct column `p` with the a-side `<payload>_a` fields, then the
+    * b-side `<payload>_b` fields.
+    *
+    *  - Guard ([[keysWithin]]): buckets with df < 2 or df > `cap` are
+    *    pruned by a fixed-width count aggregation + left_semi BEFORE
+    *    any posting list is collected. collect_list has no size cap,
+    *    so a hot key (a stopword shingle, a boilerplate cluster's band
+    *    keys) would otherwise materialize its whole posting list in one
+    *    aggregation buffer; df ≥ 2 also drops the singleton buckets,
+    *    the bulk of a real corpus. A pair living only in an overfull
+    *    bucket is missed: such docs are boilerplate exact dedup
+    *    catches, and recall inside capped buckets is unchanged.
+    *  - Pin: the reduce side of the key exchange explodes d members
+    *    into d²/2 pairs, a fanout AQE's map-bytes-sized coalescer cannot
+    *    see (it coalesced this few-MB shuffle to 4 tasks at local[32];
+    *    r18 profile), so [[SkewTools.pinFanout]] fixes its partitions.
+    *  - Collect and explode: members collect into ONE per-bucket sorted
+    *    array and the pairs explode map-side, so the count agg, the semi
+    *    join and the collect groupBy share one key exchange where a
+    *    bucket self-join paid its own exchange + join (guide §2.4 "two
+    *    operations keyed the same way share one exchange"; r17 VERDICT
+    *    #5). sort_array orders members by their first payload column,
+    *    the id (unique per bucket), so slice-from-i+2 enumerates
+    *    exactly the a.id < b.id pairs.
+    *
+    * A single payload column is collected bare, never wrapped in a
+    * struct. Callers score the pair in the projection after the
+    * explode, so their pair-dedup shuffle carries the score, not the
+    * sketches.
+    */
+  private[operators] def bucketPairs(members: DataFrame, keys: Seq[String],
+      payload: Seq[String], cap: Int): DataFrame =
+    pinnedPairs(members, keys, payload, Some(keysWithin(members, keys, cap)))
+
+  /** The keys of `members` held by 2 to `cap` rows: [[bucketPairs]]'
+    * df guard, for a caller that prunes before the pin.
+    */
+  private[operators] def keysWithin(members: DataFrame, keys: Seq[String],
+      cap: Int): DataFrame =
+    members.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("df"))
+      .filter(col("df") >= 2 && col("df") <= cap)
+      .select(keys.map(col): _*)
+
+  /** [[bucketPairs]] after its guard: pin, semi-join `kept` (when
+    * given), collect, explode.
+    */
+  private[operators] def pinnedPairs(members: DataFrame, keys: Seq[String],
+      payload: Seq[String], kept: Option[DataFrame]): DataFrame = {
+    val pinned = SkewTools.pinFanout(members, keys.map(col): _*)
+    val bare = payload.size == 1
+    val member = if (bare) col(payload.head) else struct(payload.map(col): _*)
+    def side(m: Column, s: String): Seq[Column] =
+      payload.map(n => (if (bare) m else m.getField(n)).as(s"${n}_$s"))
+    kept.fold(pinned)(pinned.join(_, keys, "left_semi"))
+      .groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(member)).as("ms"))
+      .select(explode(flatten(transform(col("ms"), (x, i) =>
+        transform(slice(col("ms"), i + 2, size(col("ms"))),
+          y => struct(side(x, "a") ++ side(y, "b"): _*))))).as("p"))
+  }
+
   /** MinHash-LSH candidate pairs with their estimated (signature-
     * agreement) similarity. `threshold` filters on the fraction of the
     * k minhashes that agree — an unbiased Jaccard estimate.
@@ -84,34 +149,8 @@ object Dedup {
     val allBanded = sigs
       .select(col("id"), col("sig"), explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
       .select(col("id"), col("sig"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val keepBuckets = allBanded.groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2 && col("df") <= maxBandDf)
-      .select(col("band"), col("key"))
-    // Bucket members collect into ONE per-bucket sorted array (bounded
-    // by the df <= maxBandDf cap just applied — the count+semi guard
-    // stays, so no uncapped posting list ever reaches an aggregation
-    // buffer) and the i<j pairs explode map-side — the
-    // sharedShinglePairs pattern: the count agg, the semi join and the
-    // collect groupBy all share one (band, key) exchange where the old
-    // bucket SELF-JOIN paid its own exchange + join (guide §2.4 "two
-    // operations keyed the same way share one exchange"; r17 VERDICT
-    // #5). sort_array orders members by id (unique per bucket), so
-    // slice-from-i+2 enumerates exactly the old a.id < b.id pairs.
-    // The est score is computed in the flat projection AFTER the pair
-    // explode (native zipEqCount kernel replacing the interpreted
-    // zip_with/filter/size fold), so the pair-dedup shuffle still
-    // carries one double per row, never signature arrays.
-    // pinFanout: the reduce side of this exchange explodes d ids into
-    // d²/2 pairs, which AQE's map-bytes-sized coalescer cannot see.
-    SkewTools.pinFanout(allBanded, col("band"), col("key"))
-      .join(keepBuckets, Seq("band", "key"), "left_semi")
-      .groupBy(col("band"), col("key"))
-      .agg(sort_array(collect_list(struct(col("id"), col("sig")))).as("ms"))
-      .select(explode(flatten(transform(col("ms"), (x, i) =>
-        transform(slice(col("ms"), i + 2, size(col("ms"))),
-          y => struct(x.getField("id").as("id_a"), x.getField("sig").as("sig_a"),
-            y.getField("id").as("id_b"), y.getField("sig").as("sig_b")))))).as("p"))
+    // est is the native zipEqCount kernel over the pair's signatures
+    bucketPairs(allBanded, Seq("band", "key"), Seq("id", "sig"), maxBandDf)
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
         (graft.functions.TextFunctions.zipEqCount(col("p.sig_a"), col("p.sig_b"))
           .cast("double") / lit(k)).as("est"))
@@ -507,27 +546,7 @@ object Dedup {
           shiftright(col("sim"), b * bandBits).bitwiseAND(mask).as("key"))
       }: _*)).as("bk"))
       .select(col("id"), col("sim"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val keepBuckets = allBanded.groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2 && col("df") <= maxBandDf)
-      .select(col("band"), col("key"))
-    // Same fusion as minhashCandidates: bucket members (each one long
-    // fingerprint) collect into ONE per-bucket sorted array — bounded
-    // by the df <= maxBandDf cap just applied — and the i<j pairs
-    // explode map-side, so the count agg, semi join and collect share
-    // one (band, key) exchange instead of the bucket self-join paying
-    // its own (guide §2.4; r17 VERDICT #5). sort_array orders by id
-    // (unique per bucket): slice-from-i+2 is exactly a.id < b.id.
-    // pinFanout: see minhashCandidates — the pair explode is invisible
-    // to AQE's map-bytes coalescer.
-    SkewTools.pinFanout(allBanded, col("band"), col("key"))
-      .join(keepBuckets, Seq("band", "key"), "left_semi")
-      .groupBy(col("band"), col("key"))
-      .agg(sort_array(collect_list(struct(col("id"), col("sim")))).as("ms"))
-      .select(explode(flatten(transform(col("ms"), (x, i) =>
-        transform(slice(col("ms"), i + 2, size(col("ms"))),
-          y => struct(x.getField("id").as("id_a"), x.getField("sim").as("sim_a"),
-            y.getField("id").as("id_b"), y.getField("sim").as("sim_b")))))).as("p"))
+    bucketPairs(allBanded, Seq("band", "key"), Seq("id", "sim"), maxBandDf)
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
         hamming64(col("p.sim_a"), col("p.sim_b")).as("h"))
       .groupBy(col("id_a"), col("id_b"))
@@ -752,32 +771,7 @@ object Dedup {
     val sizes = sh.select(col("id"), size(col("sh")).as("n"))
     val exploded = sh.select(col("id"), explode(col("sh")).as("s"))
       .select(col("id"), xxhash64(col("s")).as("sh_hash"))
-    // Hot shingles are pruned with a COUNT aggregation + left_semi
-    // BEFORE any posting list is collected: collect_list has no size
-    // cap, so a stopword shingle (df in the millions at corpus scale)
-    // would otherwise materialize its whole posting list in one
-    // aggregation buffer just to be discarded. The count agg is a
-    // fixed-width partial-agg shuffle (skew-safe), the semi join and
-    // the collect groupBy share the sh_hash partitioning (one exchange,
-    // reused), and the df>=2 bound also drops singleton shingles —
-    // the bulk of a real corpus — before the collect. Surviving lists
-    // are ≤ maxShingleDf ids, so the map-side i<j pair explode is
-    // memory-bounded by construction.
-    val keep = exploded.groupBy(col("sh_hash"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2 && col("df") <= maxShingleDf)
-      .select(col("sh_hash"))
-    // pinFanout: the reduce side of this exchange enumerates the i<j
-    // pairs of every posting list — a fanout AQE's map-bytes coalescer
-    // cannot see (it coalesced this few-MB shuffle to 4 tasks at
-    // local[32]; r18 profile).
-    val shared = SkewTools.pinFanout(exploded, col("sh_hash"))
-      .join(keep, Seq("sh_hash"), "left_semi")
-      .groupBy(col("sh_hash"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + 2, size(col("ids"))),
-          y => struct(x.as("id_a"), y.as("id_b")))))).as("p"))
+    val shared = bucketPairs(exploded, Seq("sh_hash"), Seq("id"), maxShingleDf)
       .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
     (sizes, shared)
@@ -964,31 +958,10 @@ object Dedup {
       shingleSize: Int = 3,
       minContainmentPermille: Int = 800,
       maxShingleDf: Int = 100): DataFrame = {
-    val sh = SketchRegistry.track(
-      SkewTools.spreadIfNarrow(df, col(idCol))
-        .select(col(idCol).as("id"),
-          distinctShingles(col(textCol), shingleSize).as("sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val sizes = sh.select(col("id"), size(col("sh")).cast("long").as("n"))
-    val exploded = sh.select(col("id"), explode(col("sh")).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("sh_hash"))
-    val keep = exploded.groupBy(col("sh_hash"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2 && col("df") <= maxShingleDf)
-      .select(col("sh_hash"))
-    // pinFanout: the reduce side of this exchange enumerates the i<j
-    // pairs of every posting list — a fanout AQE's map-bytes coalescer
-    // cannot see (it coalesced this few-MB shuffle to 4 tasks at
-    // local[32]; r18 profile).
-    val shared = SkewTools.pinFanout(exploded, col("sh_hash"))
-      .join(keep, Seq("sh_hash"), "left_semi")
-      .groupBy(col("sh_hash"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + 2, size(col("ids"))),
-          y => struct(x.as("id_a"), y.as("id_b")))))).as("p"))
-      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
+    val (intSizes, shared) =
+      sharedShinglePairs(df, idCol, textCol, shingleSize, maxShingleDf)
+    // long sizes: the permille gate multiplies them
+    val sizes = intSizes.select(col("id"), col("n").cast("long").as("n"))
     shared
       .join(sizes.as("ca"), col("id_a") === col("ca.id"))
       .join(sizes.as("cb"), col("id_b") === col("cb.id"))
@@ -1127,35 +1100,19 @@ object Dedup {
     val fps = SketchRegistry.track(
       winnowFingerprints(df, idCol, textCol, k, window)
         .select(col(idCol), col("fp")).distinct().persist())
-    val keep = fps.groupBy(col("fp"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2 && col("df") <= maxFpDf)
-      .select(col("fp"))
-    val pruned = fps.join(keep, Seq("fp"), "left_semi")
+    val pruned = fps.join(keysWithin(fps, Seq("fp"), maxFpDf), Seq("fp"), "left_semi")
       .select(col(idCol), col("fp"))
-    // Df-capped tier: posting lists are ≤ maxFpDf ids, so the bucket
-    // members collect into ONE per-fp sorted array and the i<j pairs
-    // explode map-side — the sharedShinglePairs fusion: the count agg,
-    // the semi join and the collect groupBy share one fp exchange where
-    // the self-join paid its own exchange + join (guide §2.4). ids are
-    // distinct within an fp (fps is distinct), so slice-from-i+2 over
-    // the sorted array enumerates exactly the id_a < id_b pairs and
-    // count-per-pair is the same n_shared. The UNCAPPED comparable tier
+    // Df-capped tier: [[pinnedPairs]] over the semi join above (ids
+    // are distinct within an fp, as fps is distinct), with the count
+    // per pair the same n_shared. The UNCAPPED comparable tier
     // (maxFpDf = MaxValue) keeps the join shape: collect_list has no
     // size cap, and only a join spills gracefully when one fingerprint
-    // owns the corpus — the cap is the aggregation-buffer guard.
+    // owns the corpus — the cap is the aggregation-buffer guard. Its
+    // join output is data-sized, so it keeps plain AQE sizing.
     val paired =
       if (maxFpDf <= 10000) {
-        // pinFanout: same pair-explode fanout blindness as
-        // sharedShinglePairs (the uncapped tier below keeps plain AQE
-        // sizing — its join output is data-sized, not fanout-hidden)
-        SkewTools.pinFanout(pruned, col("fp"))
-          .groupBy(col("fp"))
-          .agg(sort_array(collect_list(col(idCol))).as("ids"))
-          .select(explode(flatten(transform(col("ids"), (x, i) =>
-            transform(slice(col("ids"), i + 2, size(col("ids"))),
-              y => struct(x.as("id_a"), y.as("id_b")))))).as("p"))
-          .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+        pinnedPairs(pruned, Seq("fp"), Seq(idCol), kept = None)
+          .select(col(s"p.${idCol}_a").as("id_a"), col(s"p.${idCol}_b").as("id_b"))
       } else {
         pruned.toDF("id_a", "fp")
           .join(pruned.toDF("id_b", "fp"), "fp")

@@ -20,18 +20,12 @@ import graft.functions.TextFunctions._
 object QualityFilters {
 
   /** Fraction of `arr` occupied by its most frequent element (native
-    * one-pass kernel; the HOF twin below is TextKernelSpec's reference).
+    * one-pass kernel; its HOF twin, test-scope
+    * `HofTwins.topElementFracHof`, is TextKernelSpec's reference).
     */
   private def topElementFrac(arr: Column): Column =
     org.apache.spark.sql.graft.TextKernelExprs.topElementCount(arr)
       .cast("double") / size(arr)
-
-  /** The O(u·n) composed-HOF form the kernel replaced — kept as the
-    * bit-identity reference.
-    */
-  private[graft] def topElementFracHof(arr: Column): Column =
-    array_max(transform(array_distinct(arr), g =>
-      size(filter(arr, x => x === g)))).cast("double") / size(arr)
 
   /** Per-document repetition metrics:
     *  - `max_token_frac`: share of tokens taken by the single most

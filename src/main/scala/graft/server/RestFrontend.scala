@@ -108,7 +108,28 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
 
   // keyed by batch id (== the submitting operation's handle, except for
   // recovered batches, which keep their original id over a new op)
-  private val batches = new ConcurrentHashMap[String, ExecuteStatement]()
+  private val batches = new ConcurrentHashMap[String, SqlBatch]()
+
+  /** A SQL batch's statement. Once the statement ends, the batch closes
+    * its engine session, which turns the statement CLOSED; from then on
+    * `state` answers with the state the batch ended in.
+    */
+  private final class SqlBatch(val op: ExecuteStatement) {
+    @volatile private var ended: Option[OperationState] = None
+    // the statement's state first: `end` records `ended` before the
+    // close turns the statement CLOSED
+    def state: OperationState = { val s = op.currentState; ended.getOrElse(s) }
+    def hasEnded: Boolean = ended.isDefined
+
+    /** End the batch in terminal state `s` (the first end wins) and
+      * close its session. CLOSED is no end: a statement closed from
+      * outside leaves the batch to the session-close listener.
+      */
+    def end(s: OperationState): Unit = if (s != OperationState.Closed) {
+      synchronized { if (ended.isEmpty) ended = Some(s) }
+      engine.closeSession(op.session.id)
+    }
+  }
   // the last documents of Trino queries that ended other than FINISHED,
   // served again after their engine session is closed (Trino keeps its
   // query.max-history of 100 ended queries the same way)
@@ -192,7 +213,8 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
   // metadata store, so the persisted state is current when we die.
   // Terminal states also retire the op→batch route: without this the
   // map grows for the life of the server (the batch itself stays
-  // servable from `batches` / the store).
+  // servable from `batches` / the store), and end the batch, which
+  // closes its engine session.
   // Per-user live-batch accounting (reference SessionLimiter pattern:
   // atomic increment-then-check, never scan-then-act — two concurrent
   // POSTs at limit−1 must not both pass). batchSlotUsers maps a COUNTED
@@ -229,10 +251,10 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         val batchId = opToBatch.get(opId)
         if (batchId != null) {
           store.foreach(_.updateState(batchId, state, error))
-          val terminal = OperationState.all.exists(s => s.name == state && s.terminal)
-          if (terminal) {
+          OperationState.all.find(s => s.name == state && s.terminal).foreach { s =>
             opToBatch.remove(opId)
             releaseBatchSlot(batchId) // terminal batches free their slot
+            Option(batches.get(batchId)).foreach(_.end(s))
           }
         }
       case _ => ()
@@ -260,12 +282,14 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
 
   // Engine-side session closes (idle reaper included) purge this
   // frontend's per-session state, so abandoned batches don't pin
-  // their sessions and result arrays forever.
+  // their sessions and result arrays forever. An ended batch closed
+  // its own session and stays servable.
   private val sessionCloseListener: Events.Handler = new Events.Handler {
     override def onEvent(e: Events.Event): Unit = e match {
       case Events.SessionEvent(sid, _, "CLOSED", _) =>
-        batches.forEach { (id, op) =>
-          if (op.session.id == sid) {
+        batches.forEach { (id, b) =>
+          val op = b.op
+          if (op.session.id == sid && !b.hasEnded) {
             if (!op.currentState.terminal)
               store.foreach(_.updateState(id, "CANCELED", None))
             try op.close() catch { case _: Throwable => }
@@ -493,14 +517,14 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
           }
         case "batch" :: id :: Nil =>
           Option(batches.get(id)) match {
-            case Some(op) =>
+            case Some(b) =>
               page(200, s"batch $id",
-                s"""<p>user: ${esc(op.session.user)} &middot; state: ${esc(op.currentState.toString)}
+                s"""<p>user: ${esc(b.op.session.user)} &middot; state: ${esc(b.state.toString)}
                    | &middot; appState: ${esc(
-                  ApplicationState.fromOperationStateName(op.currentState.toString).toString)}</p>
-                   |<h2>statement</h2><pre>${esc(stmtOf(op))}</pre>
+                  ApplicationState.fromOperationStateName(b.state.toString).toString)}</p>
+                   |<h2>statement</h2><pre>${esc(stmtOf(b.op))}</pre>
                    |<h2>pending log</h2><pre>${
-                  op.peekLog(500).map(esc).mkString("\n")}</pre>""".stripMargin)
+                  b.op.peekLog(500).map(esc).mkString("\n")}</pre>""".stripMargin)
             case None => store.flatMap(_.get(id)) match {
               case Some(rec) =>
                 page(200, s"batch $id (restored)",
@@ -732,7 +756,8 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
     // event, then sync the current state (events that fired between
     // executeStatement and here would otherwise be lost)
     opToBatch.put(op.handle, id)
-    batches.put(id, op)
+    val batch = new SqlBatch(op)
+    batches.put(id, batch)
     batchSlotUsers.put(id, user)
     try store.foreach { s =>
       if (fixedId.isEmpty) s.insert(id, user, sql, op.currentState.toString, Some(selfUrl))
@@ -744,8 +769,9 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       throw e
     }
     // the op can reach terminal BEFORE opToBatch.put routed its events —
-    // release here too; both paths are idempotent via the map remove
-    if (op.currentState.terminal) releaseBatchSlot(id)
+    // release and end here too; both paths are idempotent
+    val st = op.currentState
+    if (st.terminal) { releaseBatchSlot(id); batch.end(st) }
     id
   }
 
@@ -941,7 +967,7 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
               Option(liveBatchCounts.get(user)).foreach(_.decrementAndGet())
               throw e
           }
-          val st = Option(batches.get(id)).map(_.currentState.toString).getOrElse("PENDING")
+          val st = Option(batches.get(id)).map(_.state.toString).getOrElse("PENDING")
           reply(ex, 200, s"""{"id": ${q(id)}, "state": ${q(st)}, "appState": ${q(
             ApplicationState.fromOperationStateName(st).toString)}}""")
         }
@@ -952,8 +978,8 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         // derives from it (PENDING/RUNNING/FINISHED/KILLED/FAILED —
         // identical wording to a YARN report / K8s pod-phase mapping).
         Option(batches.get(id)) match {
-          case Some(op) =>
-            val st = op.currentState.toString
+          case Some(b) =>
+            val st = b.state.toString
             reply(ex, 200, s"""{"id": ${q(id)}, "state": ${q(st)}, "appState": ${q(
               ApplicationState.fromOperationStateName(st).toString)}}""")
           case None if procBatches.containsKey(id) =>
@@ -995,8 +1021,8 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // incremental — each line is delivered once.
       case ("GET", "batches" :: id :: "localLog" :: Nil) =>
         Option(batches.get(id)) match {
-          case Some(op) =>
-            val lines = op.fetchLog(1000)
+          case Some(b) =>
+            val lines = b.op.fetchLog(1000)
             reply(ex, 200, s"""{"logRowSet": [${lines.map(q).mkString(",")}], "rowCount": ${lines.size}}""")
           case None if procBatches.containsKey(id) =>
             val lines = procBatches.get(id).fetchLog(1000)
@@ -1207,10 +1233,10 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         val live = batches.entrySet.iterator
         val liveRows = scala.collection.mutable.LinkedHashMap.empty[String, (String, String, String)]
         live.forEachRemaining { e =>
-          val op = e.getValue
-          val user = op.session.user
-          liveRows(e.getKey) = (user, op.currentState.toString,
-            s"""{"id": ${q(e.getKey)}, "user": ${q(user)}, "state": ${q(op.currentState.toString)}}""")
+          val user = e.getValue.op.session.user
+          val st = e.getValue.state.toString
+          liveRows(e.getKey) = (user, st,
+            s"""{"id": ${q(e.getKey)}, "user": ${q(user)}, "state": ${q(st)}}""")
         }
         procBatches.forEach { (id, job) =>
           liveRows(id) = (job.user, job.currentState,
@@ -1246,10 +1272,10 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
       // batch's operation and record the terminal state.
       case ("DELETE", "batches" :: id :: Nil) =>
         Option(batches.get(id)) match {
-          case Some(op) =>
-            try op.cancel() catch { case _: Throwable => }
-            store.foreach(_.updateState(id, op.currentState.toString, None))
-            reply(ex, 200, s"""{"id": ${q(id)}, "state": ${q(op.currentState.toString)}}""")
+          case Some(b) =>
+            try b.op.cancel() catch { case _: Throwable => }
+            store.foreach(_.updateState(id, b.state.toString, None))
+            reply(ex, 200, s"""{"id": ${q(id)}, "state": ${q(b.state.toString)}}""")
           case None if procBatches.containsKey(id) =>
             val job = procBatches.get(id)
             try job.cancel() catch { case _: Throwable => }
@@ -1400,8 +1426,8 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
         val wantUser = queryParam(ex, "batchUser")
         val wantState = queryParam(ex, "batchState").map(_.toUpperCase)
         val live = scala.collection.mutable.LinkedHashMap.empty[String, (String, String)]
-        batches.forEach { (id, op) =>
-          live(id) = (op.session.user, op.currentState.toString)
+        batches.forEach { (id, b) =>
+          live(id) = (b.op.session.user, b.state.toString)
         }
         procBatches.forEach { (id, job) => live(id) = (job.user, job.currentState) }
         val stored = store.toSeq.flatMap(_.list())

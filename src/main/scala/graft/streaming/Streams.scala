@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import scala.collection.mutable.ListBuffer
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -580,6 +580,30 @@ object Streams {
       thresholdLen: Long): DataFrame =
     docs.filter(length(col(textCol)).cast("long") >= lit(thresholdLen))
 
+  /** The (source, token) count table [[sourceDriftStream]] and
+    * [[zipfSlopeStream]] keep as stateful aggregations.
+    */
+  private def sourceTokenCounts(docs: DataFrame, sourceCol: String,
+      textCol: String): DataFrame =
+    docs
+      .select(col(sourceCol).as("source"),
+        explode(split(trim(col(textCol)), " +")).as("__tok"))
+      .groupBy(col("source"), col("__tok"))
+      .agg(count(lit(1)).as("__c"))
+
+  /** Starts `df` with `f` as its micro-batch sink. */
+  private def eachBatch(df: DataFrame, mode: OutputMode = OutputMode.Append())(
+      f: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    df.writeStream.outputMode(mode).foreachBatch(f).start()
+
+  /** Starts `df` handing `sink` each non-empty micro-batch mapped by `f`. */
+  private def mapEachBatch(df: DataFrame, mode: OutputMode = OutputMode.Append())(
+      sink: (DataFrame, Long) => Unit)(
+      f: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
+    eachBatch(df, mode) { (batch, batchId) =>
+      if (!batch.isEmpty) sink(f(batch), batchId)
+    }
+
   /** Streaming per-source distribution drift — online twin of the
     * batch d53 statistic (graft.operators.CorpusLm.sourceDriftKl).
     * The stream maintains the (source, token) count table as a
@@ -595,18 +619,8 @@ object Streams {
     */
   def sourceDriftStream(docs: DataFrame, sourceCol: String, textCol: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs
-      .select(col(sourceCol).as("source"),
-        explode(split(trim(col(textCol)), " +")).as("__tok"))
-      .groupBy(col("source"), col("__tok"))
-      .agg(count(lit(1)).as("__c"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .foreachBatch { (counts: DataFrame, batchId: Long) =>
-        if (!counts.isEmpty)
-          sink(graft.operators.CorpusLm.sourceDriftKlFromCounts(counts), batchId)
-      }
-      .start()
+    mapEachBatch(sourceTokenCounts(docs, sourceCol, textCol), OutputMode.Complete())(sink)(
+      graft.operators.CorpusLm.sourceDriftKlFromCounts)
 
   /** Streaming Zipf-slope twin — online d57: the stream maintains the
     * (source, token) count table as a stateful aggregation (state is
@@ -620,18 +634,8 @@ object Streams {
     */
   def zipfSlopeStream(docs: DataFrame, sourceCol: String, textCol: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs
-      .select(col(sourceCol).as("source"),
-        explode(split(trim(col(textCol)), " +")).as("__tok"))
-      .groupBy(col("source"), col("__tok"))
-      .agg(count(lit(1)).as("__c"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .foreachBatch { (counts: DataFrame, batchId: Long) =>
-        if (!counts.isEmpty)
-          sink(graft.operators.CorpusLm.zipfSlopeFromCounts(counts), batchId)
-      }
-      .start()
+    mapEachBatch(sourceTokenCounts(docs, sourceCol, textCol), OutputMode.Complete())(sink)(
+      graft.operators.CorpusLm.zipfSlopeFromCounts)
 
   /** Online NEAR-dup gating: each arriving document is checked for
     * MinHash band collisions against a PREBUILT corpus band index
@@ -651,14 +655,10 @@ object Streams {
       bandIndex: DataFrame,
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 4)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          sink(graft.operators.Dedup.bandCollisions(
-            batch, idCol, textCol, bandIndex, shingleSize, bands, rowsPerBand), batchId)
-      }
-      .start()
+    mapEachBatch(docs)(sink) { batch =>
+      graft.operators.Dedup.bandCollisions(
+        batch, idCol, textCol, bandIndex, shingleSize, bands, rowsPerBand)
+    }
 
   /** Online ANN serving: a stream of query vectors probed against a
     * PERSISTED IVF-PQ index (graft.operators.IvfPqIndex.openIndex) —
@@ -675,13 +675,9 @@ object Streams {
       index: graft.operators.IvfPqIndex.OpenedIndex,
       idCol: String, vecCol: String, k: Int, nProbe: Int)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          sink(index.topK(batch, idCol, vecCol, k, nProbe), batchId)
-      }
-      .start()
+    mapEachBatch(queries)(sink) { batch =>
+      index.topK(batch, idCol, vecCol, k, nProbe)
+    }
 
   /** Ingest-time perceptual near-dup gate: a stream of image binaries
     * is decoded to aHash fingerprints per micro-batch and checked
@@ -697,15 +693,11 @@ object Streams {
       corpusHashes: DataFrame,
       maxHamming: Int = 3)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    images.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          sink(graft.operators.Multimodal.phashMatches(
-            graft.operators.Multimodal.decodeBmpToAHash(batch, idCol, binCol),
-            corpusHashes, maxHamming), batchId)
-      }
-      .start()
+    mapEachBatch(images)(sink) { batch =>
+      graft.operators.Multimodal.phashMatches(
+        graft.operators.Multimodal.decodeBmpToAHash(batch, idCol, binCol),
+        corpusHashes, maxHamming)
+    }
 
   /** Ingest-time SEMANTIC near-dup gate: a stream of embeddings is
     * checked against a STATIC cluster-assigned corpus (the
@@ -724,14 +716,10 @@ object Streams {
       centroids: Array[Array[Double]],
       tauMicro: Long)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          sink(graft.operators.IvfIndex.semdedupMatches(
-            batch, idCol, vecCol, corpusAssigned, centroids, tauMicro), batchId)
-      }
-      .start()
+    mapEachBatch(vectors)(sink) { batch =>
+      graft.operators.IvfIndex.semdedupMatches(
+        batch, idCol, vecCol, corpusAssigned, centroids, tauMicro)
+    }
 
   /** Ingest-time FUZZY entity gate: a stream of catalog items is
     * checked against a STATIC corpus by blocked edit distance
@@ -750,14 +738,10 @@ object Streams {
       corpus: DataFrame,
       dfCap: Int = 25, maxDist: Int = 2)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    items.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          sink(graft.operators.FuzzyMatch.matchesAgainst(
-            batch, corpus, idCol, nameCol, dfCap, maxDist), batchId)
-      }
-      .start()
+    mapEachBatch(items)(sink) { batch =>
+      graft.operators.FuzzyMatch.matchesAgainst(
+        batch, corpus, idCol, nameCol, dfCap, maxDist)
+    }
 
   // ---- streaming index maintenance: idempotent appends ------------
   //
@@ -773,23 +757,24 @@ object Streams {
   // residue; for the band index a compactBandIndex pass drops the
   // exactly-duplicated rows it could leave.
 
-  /** True (and records the marker) when `batchId` has NOT been applied
-    * for this index+stream — the caller performs the append first and
-    * then calls [[recordApplied]]; a replayed id returns false.
+  /** Runs `apply` for a non-empty batch not yet applied for this
+    * index+stream, then writes its marker
+    * `<path>/_applied/<streamId>/batch-%020d` (created atomically,
+    * overwrite=false); a replayed id skips both. Returns whether
+    * `apply` ran.
     */
-  private def alreadyApplied(spark: org.apache.spark.sql.SparkSession,
-      markerDir: String, batchId: Long): Boolean = {
-    val dir = new org.apache.hadoop.fs.Path(markerDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new org.apache.hadoop.fs.Path(dir, f"batch-$batchId%020d"))
-  }
-
-  private def recordApplied(spark: org.apache.spark.sql.SparkSession,
-      markerDir: String, batchId: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(markerDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    fs.create(new org.apache.hadoop.fs.Path(dir, f"batch-$batchId%020d"), false).close()
+  private def applyOnce(batch: DataFrame, batchId: Long, path: String,
+      streamId: String)(apply: => Unit): Boolean = {
+    val dir = new org.apache.hadoop.fs.Path(s"$path/_applied/$streamId")
+    val marker = new org.apache.hadoop.fs.Path(dir, f"batch-$batchId%020d")
+    val fs = dir.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    val fresh = !batch.isEmpty && !fs.exists(marker)
+    if (fresh) {
+      apply
+      fs.mkdirs(dir)
+      fs.create(marker, false).close()
+    }
+    fresh
   }
 
   /** One micro-batch of the band-index maintenance stream — public so
@@ -798,10 +783,8 @@ object Streams {
     */
   def appendBandBatch(batch: DataFrame, batchId: Long, path: String,
       idCol: String, textCol: String, streamId: String = "default"): Unit = {
-    val markerDir = s"$path/_applied/$streamId"
-    if (!batch.isEmpty && !alreadyApplied(batch.sparkSession, markerDir, batchId)) {
+    applyOnce(batch, batchId, path, streamId) {
       graft.operators.Dedup.appendToBandIndex(batch, idCol, textCol, path)
-      recordApplied(batch.sparkSession, markerDir, batchId)
     }
   }
 
@@ -816,12 +799,7 @@ object Streams {
   def bandIndexAppendStream(docs: DataFrame, idCol: String, textCol: String,
       path: String, streamId: String = "default"):
       org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBandBatch(batch, batchId, path, idCol, textCol, streamId)
-      }
-      .start()
+    eachBatch(docs)(appendBandBatch(_, _, path, idCol, textCol, streamId))
 
   /** One micro-batch of a rollup-maintenance stream — public so a
     * replayed delivery is directly testable: calling it twice with the
@@ -874,11 +852,9 @@ object Streams {
   def applyGramNoveltyBatch(batch: DataFrame, batchId: Long, path: String,
       idCol: String, textCol: String, streamId: String = "default")(
       sink: (DataFrame, Long) => Unit): Unit = {
-    val markerDir = s"$path/_applied/$streamId"
-    if (!batch.isEmpty && !alreadyApplied(batch.sparkSession, markerDir, batchId)) {
+    applyOnce(batch, batchId, path, streamId) {
       sink(graft.operators.Dedup.scoreAndIngestGrams(
         batch, idCol, textCol, path), batchId)
-      recordApplied(batch.sparkSession, markerDir, batchId)
     }
   }
 
@@ -893,12 +869,18 @@ object Streams {
   def gramNoveltyStream(docs: DataFrame, idCol: String, textCol: String,
       path: String, streamId: String = "default")(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyGramNoveltyBatch(batch, batchId, path, idCol, textCol, streamId)(sink)
-      }
-      .start()
+    eachBatch(docs)(applyGramNoveltyBatch(_, _, path, idCol, textCol, streamId)(sink))
+
+  /** Maintains the rollup artifact at `path` from `events`: each
+    * micro-batch merges its row counts per `keys` (one `n` measure)
+    * under the in-meta replay marker.
+    */
+  private def countRollupStream(events: DataFrame, path: String, streamId: String)(
+      keys: Column*): org.apache.spark.sql.streaming.StreamingQuery =
+    eachBatch(events) { (batch, batchId) =>
+      applyRollupBatch(batch, batchId, path, streamId)(
+        _.groupBy(keys: _*).agg(count(lit(1)).as("n")))
+    }
 
   /** Streaming-maintained hourly count rollup: each micro-batch of
     * events merges its (event_type, hour, n) increments into the
@@ -912,16 +894,8 @@ object Streams {
   def hourlyRollupAppendStream(events: DataFrame, typeCol: String,
       tsCol: String, path: String, streamId: String = "default"):
       org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyRollupBatch(batch, batchId, path, streamId) { b =>
-          b.groupBy(col(typeCol).as("event_type"),
-              date_trunc("hour", col(tsCol)).as("hour"))
-            .agg(count(lit(1)).as("n"))
-        }
-      }
-      .start()
+    countRollupStream(events, path, streamId)(
+      col(typeCol).as("event_type"), date_trunc("hour", col(tsCol)).as("hour"))
 
   /** The q46 seasonal-baseline anomaly read OFF the streaming-
     * maintained hourly rollup: open the [[hourlyRollupAppendStream]]
@@ -1041,12 +1015,7 @@ object Streams {
   def transitionAppendStream(events: DataFrame, path: String,
       streamId: String = "default"):
       org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyTransitionBatch(batch, batchId, path, streamId)
-      }
-      .start()
+    eachBatch(events)(applyTransitionBatch(_, _, path, streamId))
 
   /** Streaming weekly-activity maintenance: each micro-batch of events
     * merges (user_id, week) → n counts into a RollupIndex artifact —
@@ -1058,16 +1027,8 @@ object Streams {
   def weeklyActivityAppendStream(events: DataFrame, userCol: String,
       tsCol: String, path: String, streamId: String = "default"):
       org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyRollupBatch(batch, batchId, path, streamId) { b =>
-          b.groupBy(col(userCol).as("user_id"),
-              date_trunc("week", col(tsCol)).as("week"))
-            .agg(count(lit(1)).as("n"))
-        }
-      }
-      .start()
+    countRollupStream(events, path, streamId)(
+      col(userCol).as("user_id"), date_trunc("week", col(tsCol)).as("week"))
 
   /** Streaming daily-activity maintenance: each micro-batch merges
     * (user_id, day) → n counts into a RollupIndex artifact — the
@@ -1077,16 +1038,8 @@ object Streams {
   def dailyActivityAppendStream(events: DataFrame, userCol: String,
       tsCol: String, path: String, streamId: String = "default"):
       org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyRollupBatch(batch, batchId, path, streamId) { b =>
-          b.groupBy(col(userCol).as("user_id"),
-              date_trunc("day", col(tsCol)).as("day"))
-            .agg(count(lit(1)).as("n"))
-        }
-      }
-      .start()
+    countRollupStream(events, path, streamId)(
+      col(userCol).as("user_id"), date_trunc("day", col(tsCol)).as("day"))
 
   /** The q58 DAU/WAU stickiness read OFF the maintained daily rollup:
     * the distinct (user, day) set is the artifact's KEY SET, and the
@@ -1165,16 +1118,8 @@ object Streams {
   def valueHistogramAppendStream(events: DataFrame, typeCol: String,
       valueCol: String, path: String, streamId: String = "default"):
       org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyRollupBatch(batch, batchId, path, streamId) { b =>
-          b.groupBy(col(typeCol).as("event_type"),
-              floor(col(valueCol) * 100).as("v_cents"))
-            .agg(count(lit(1)).as("n"))
-        }
-      }
-      .start()
+    countRollupStream(events, path, streamId)(
+      col(typeCol).as("event_type"), floor(col(valueCol) * 100).as("v_cents"))
 
   /** The q55 per-type p50/p90/p99 read OFF the maintained value
     * histogram: the identical bounded cumulative walk and rank-based
@@ -1229,13 +1174,10 @@ object Streams {
   def gramianAppendStream(vectors: DataFrame, vecCol: String, dim: Int,
       path: String, streamId: String = "default"):
       org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyRollupBatch(batch, batchId, path, streamId)(
-          graft.operators.Gramian.increments(_, vecCol, dim))
-      }
-      .start()
+    eachBatch(vectors) { (batch, batchId) =>
+      applyRollupBatch(batch, batchId, path, streamId)(
+        graft.operators.Gramian.increments(_, vecCol, dim))
+    }
 
   /** Mean collision recall of the persisted band index at `path`
     * against the raw corpus at `corpusPath` for a bounded probe sample
@@ -1273,12 +1215,12 @@ object Streams {
       corpusPath: String, idCol: String, textCol: String,
       alarmBelow: Double, baseline: Double,
       auditSample: Int = 64, streamId: String = "default"): Unit = {
-    val markerDir = s"$path/_applied/$streamId"
-    if (!batch.isEmpty && !alreadyApplied(batch.sparkSession, markerDir, batchId)) {
+    val applied = applyOnce(batch, batchId, path, streamId) {
       graft.operators.Dedup.appendToBandIndex(batch, idCol, textCol, path)
       batch.select(col(idCol), col(textCol))
         .write.mode("append").parquet(corpusPath)
-      recordApplied(batch.sparkSession, markerDir, batchId)
+    }
+    if (applied) {
       val recall = auditBandCollisionRecall(batch.sparkSession, path, corpusPath,
         batch.select(col(idCol), col(textCol)).limit(auditSample), idCol, textCol)
       graft.core.Events.post(graft.core.Events.IndexAuditEvent(
@@ -1311,13 +1253,8 @@ object Streams {
       spark.read.parquet(corpusPath)
         .select(col(idCol), col(textCol)).limit(auditSample),
       idCol, textCol)
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        auditedBandBatch(batch, batchId, path, corpusPath, idCol, textCol,
-          alarmBelow, baseline, auditSample, streamId)
-      }
-      .start()
+    eachBatch(docs)(auditedBandBatch(_, _, path, corpusPath, idCol, textCol,
+      alarmBelow, baseline, auditSample, streamId))
   }
 
   /** One micro-batch of the IVF-PQ maintenance stream — same
@@ -1325,10 +1262,8 @@ object Streams {
     */
   def appendIvfPqBatch(batch: DataFrame, batchId: Long, path: String,
       idCol: String, vecCol: String, streamId: String = "default"): Unit = {
-    val markerDir = s"$path/_applied/$streamId"
-    if (!batch.isEmpty && !alreadyApplied(batch.sparkSession, markerDir, batchId)) {
+    applyOnce(batch, batchId, path, streamId) {
       graft.operators.IvfPqIndex.appendToIndex(batch, idCol, vecCol, path)
-      recordApplied(batch.sparkSession, markerDir, batchId)
     }
   }
 
@@ -1342,12 +1277,7 @@ object Streams {
   def ivfPqAppendStream(vectors: DataFrame, idCol: String, vecCol: String,
       path: String, streamId: String = "default"):
       org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendIvfPqBatch(batch, batchId, path, idCol, vecCol, streamId)
-      }
-      .start()
+    eachBatch(vectors)(appendIvfPqBatch(_, _, path, idCol, vecCol, streamId))
 
   /** Mean recall@k of the persisted index at `path` against the raw
     * vectors at `corpusPath` for a bounded query sample — the number
@@ -1389,12 +1319,12 @@ object Streams {
       corpusPath: String, idCol: String, vecCol: String,
       k: Int, nProbe: Int, alarmBelow: Double, baseline: Double,
       auditSample: Int = 64, streamId: String = "default"): Unit = {
-    val markerDir = s"$path/_applied/$streamId"
-    if (!batch.isEmpty && !alreadyApplied(batch.sparkSession, markerDir, batchId)) {
+    val applied = applyOnce(batch, batchId, path, streamId) {
       graft.operators.IvfPqIndex.appendToIndex(batch, idCol, vecCol, path)
       batch.select(col(idCol), col(vecCol))
         .write.mode("append").parquet(corpusPath)
-      recordApplied(batch.sparkSession, markerDir, batchId)
+    }
+    if (applied) {
       val recall = auditMeanRecall(batch.sparkSession, path, corpusPath,
         batch.select(col(idCol), col(vecCol)).limit(auditSample),
         idCol, vecCol, k, nProbe)
@@ -1432,13 +1362,8 @@ object Streams {
       spark.read.parquet(corpusPath)
         .select(col(idCol), col(vecCol)).limit(auditSample),
       idCol, vecCol, k, nProbe)
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        auditedIvfPqBatch(batch, batchId, path, corpusPath, idCol, vecCol,
-          k, nProbe, alarmBelow, baseline, auditSample, streamId)
-      }
-      .start()
+    eachBatch(vectors)(auditedIvfPqBatch(_, _, path, corpusPath, idCol, vecCol,
+      k, nProbe, alarmBelow, baseline, auditSample, streamId))
   }
 
   /** Hourly OHLC bars as an INCREMENTAL aggregation — the streaming

@@ -673,8 +673,9 @@ case class ArrayMd5Prefix32Expr(child: Expression) extends UnaryExpression {
 }
 
 /** Σ over distinct tokens of c·⌊ln(c)·10⁶⌋ in one hash-counting pass —
-  * the kernel twin of `TextFunctions.entropyTermsMicroHof`'s
-  * sort-then-run-count fold (d56's integer entropy numerator). The sum
+  * the kernel twin of the sort-then-run-count fold in test-scope
+  * `graft.functions.HofTwins.entropyTermsMicroHof` (d56's integer
+  * entropy numerator). The sum
   * is over DISTINCT values, so counting via hash map instead of
   * sorting changes nothing; each count's term is the same
   * `floor(log(c) * 1e6)` double math the fold computes — Spark's `log()`

@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * is left-to-right from 0.0 for each of the three sums, elements
   * widened to double before multiplying, result
   * `dot / (sqrt(na) * sqrt(nb))` with 0.0 for a zero-norm input —
-  * exactly `VectorFunctions.cosineHof` and the DuckDB oracle's
-  * `list_reduce` mirror. Null propagation matches the HOF form: null
+  * exactly test-scope `graft.functions.HofTwins.cosineHof` and the
+  * DuckDB oracle's `list_reduce` mirror. Null propagation matches the HOF form: null
   * array, null element, or length mismatch → null.
   */
 object VecExpr {

@@ -42,7 +42,7 @@ class TextKernelSpec extends AnyFunSuite {
     Seq(1, 3, 5).foreach { n =>
       assertNoDiff(
         TextFunctions.shingles(col("text"), n),
-        TextFunctions.shinglesOfTokensHof(TextFunctions.tokens(col("text")), n))
+        HofTwins.shinglesOfTokensHof(TextFunctions.tokens(col("text")), n))
     }
   }
 
@@ -51,7 +51,7 @@ class TextKernelSpec extends AnyFunSuite {
       assertNoDiff(
         TextFunctions.distinctShingles(col("text"), n),
         array_distinct(
-          TextFunctions.shinglesOfTokensHof(TextFunctions.tokens(col("text")), n)))
+          HofTwins.shinglesOfTokensHof(TextFunctions.tokens(col("text")), n)))
     }
   }
 
@@ -72,7 +72,7 @@ class TextKernelSpec extends AnyFunSuite {
     // change any signature slot. Pin against the fully-composed form.
     val composed = org.apache.spark.sql.graft.MinHashSignatureExpr.ofHashes(
       transform(
-        array_distinct(TextFunctions.shinglesOfTokensHof(
+        array_distinct(HofTwins.shinglesOfTokensHof(
           TextFunctions.tokens(col("text")), 3)),
         s => xxhash64(s)), 64)
     assertNoDiff(
@@ -91,13 +91,13 @@ class TextKernelSpec extends AnyFunSuite {
     val toks = TextFunctions.tokens(col("text"))
     assertNoDiff(
       TextFunctions.simhash64(toks),
-      TextFunctions.simhash64OfHashesHof(transform(toks, t => xxhash64(t))))
+      HofTwins.simhash64OfHashesHof(transform(toks, t => xxhash64(t))))
   }
 
   test("langGuess kernel == HOF argmax incl. tie order and und") {
     assertNoDiff(
       TextFunctions.langGuess(TextFunctions.tokens(col("text"))),
-      TextFunctions.langGuessHof(TextFunctions.tokens(col("text"))))
+      HofTwins.langGuessHof(TextFunctions.tokens(col("text"))))
   }
 
   test("bandKeys kernel == per-band slice/concat/xxhash64 HOF") {
@@ -106,13 +106,13 @@ class TextKernelSpec extends AnyFunSuite {
     val d = docs.select(sig.as("sig"))
       .select(
         TextFunctions.bandKeys(col("sig"), 16, 4).as("k"),
-        TextFunctions.bandKeysHof(col("sig"), 16, 4).as("h"))
+        HofTwins.bandKeysHof(col("sig"), 16, 4).as("h"))
       .filter((col("k") =!= col("h")) || (col("k").isNull =!= col("h").isNull))
     assert(d.count() == 0)
     // short-signature truncation matches slice semantics
     val short = Seq(Seq(1L, 2L, 3L)).toDF("sig").select(
       TextFunctions.bandKeys(col("sig"), 2, 2).as("k"),
-      TextFunctions.bandKeysHof(col("sig"), 2, 2).as("h")).head()
+      HofTwins.bandKeysHof(col("sig"), 2, 2).as("h")).head()
     assert(short.get(0) == short.get(1))
   }
 
@@ -123,19 +123,19 @@ class TextKernelSpec extends AnyFunSuite {
       assertNoDiff(
         org.apache.spark.sql.graft.TextKernelExprs.topElementCount(arr)
           .cast("double") / size(arr),
-        graft.operators.QualityFilters.topElementFracHof(arr))
+        HofTwins.topElementFracHof(arr))
     }
   }
 
   test("md5Prefix32 kernel == transform(conv(substring(md5)))  incl. null elements") {
     assertNoDiff(
       TextFunctions.md5Prefix32Hashes(TextFunctions.shingles(col("text"), 3)),
-      TextFunctions.md5Prefix32HashesHof(TextFunctions.shingles(col("text"), 3)))
+      HofTwins.md5Prefix32HashesHof(TextFunctions.shingles(col("text"), 3)))
     // a null element stays a null slot, like the composed form
     val withNulls = Seq(Seq[String]("a", null, "b")).toDF("arr")
     val r = withNulls.select(
       TextFunctions.md5Prefix32Hashes(col("arr")).as("k"),
-      TextFunctions.md5Prefix32HashesHof(col("arr")).as("h")).head()
+      HofTwins.md5Prefix32HashesHof(col("arr")).as("h")).head()
     assert(r.getSeq[Any](0) == r.getSeq[Any](1))
     assert(r.getSeq[Any](0)(1) == null)
   }
@@ -143,7 +143,7 @@ class TextKernelSpec extends AnyFunSuite {
   test("entropyTermsMicro kernel == sorted run-count fold incl. null/empty shapes") {
     assertNoDiff(
       TextFunctions.entropyTermsMicro(TextFunctions.tokens(col("text"))),
-      TextFunctions.entropyTermsMicroHof(TextFunctions.tokens(col("text"))))
+      HofTwins.entropyTermsMicroHof(TextFunctions.tokens(col("text"))))
     // null elements contribute run-length-1 terms (= 0) in the fold and
     // are skipped by the kernel — same sum; empty array → 0; null → null
     val edge = Seq(
@@ -152,7 +152,7 @@ class TextKernelSpec extends AnyFunSuite {
       (3L, null.asInstanceOf[Seq[String]])).toDF("id", "arr")
     val rows = edge.select(
       TextFunctions.entropyTermsMicro(col("arr")).as("k"),
-      TextFunctions.entropyTermsMicroHof(col("arr")).as("h")).collect()
+      HofTwins.entropyTermsMicroHof(col("arr")).as("h")).collect()
     rows.foreach { r =>
       assert(r.isNullAt(0) == r.isNullAt(1))
       if (!r.isNullAt(0)) assert(r.getLong(0) == r.getLong(1))
@@ -167,7 +167,7 @@ class TextKernelSpec extends AnyFunSuite {
       TextFunctions.shingles(col("text"), 2), 64)
     val d = docs.select(sig.as("a"), sig2.as("b"))
       .select(TextFunctions.zipEqCount(col("a"), col("b")).as("k"),
-        TextFunctions.zipEqCountHof(col("a"), col("b")).as("h"))
+        HofTwins.zipEqCountHof(col("a"), col("b")).as("h"))
       .filter((col("k") =!= col("h")) || (col("k").isNull =!= col("h").isNull))
     assert(d.count() == 0)
     // zip_with pads the shorter side with nulls (never counted), null
@@ -180,7 +180,7 @@ class TextKernelSpec extends AnyFunSuite {
       .toDF("a", "b")
     val rows = edge.select(
       TextFunctions.zipEqCount(col("a"), col("b")).as("k"),
-      TextFunctions.zipEqCountHof(col("a"), col("b")).as("h")).collect()
+      HofTwins.zipEqCountHof(col("a"), col("b")).as("h")).collect()
     rows.foreach { r =>
       assert(r.isNullAt(0) == r.isNullAt(1), r.toString)
       if (!r.isNullAt(0)) assert(r.getInt(0) == r.getInt(1), r.toString)

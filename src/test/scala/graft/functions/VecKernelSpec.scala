@@ -23,7 +23,7 @@ class VecKernelSpec extends AnyFunSuite {
     val df = rows.toDF("a", "b")
     val diff = df.select(
         VectorFunctions.cosine(col("a"), col("b")).as("k"),
-        VectorFunctions.cosineHof(col("a"), col("b")).as("h"))
+        HofTwins.cosineHof(col("a"), col("b")).as("h"))
       .filter(col("k") =!= col("h")) // bitwise-equal doubles compare equal
     assert(diff.count() == 0)
   }
@@ -34,7 +34,7 @@ class VecKernelSpec extends AnyFunSuite {
     val df = Seq.fill(200)(Array.fill(64)(rng.nextFloat() * 2 - 1)).toDF("a")
     val diff = df.select(
         VectorFunctions.cosine(col("a"), centCol).as("k"),
-        VectorFunctions.cosineHof(col("a"), centCol).as("h"))
+        HofTwins.cosineHof(col("a"), centCol).as("h"))
       .filter(col("k") =!= col("h"))
     assert(diff.count() == 0)
   }
@@ -46,9 +46,9 @@ class VecKernelSpec extends AnyFunSuite {
     val df = rows.toDF("a", "b")
     val diff = df.select(
         VectorFunctions.dot(col("a"), col("b")).as("dk"),
-        VectorFunctions.dotHof(col("a"), col("b")).as("dh"),
+        HofTwins.dotHof(col("a"), col("b")).as("dh"),
         VectorFunctions.l2Sq(col("a"), col("b")).as("lk"),
-        VectorFunctions.l2SqHof(col("a"), col("b")).as("lh"))
+        HofTwins.l2SqHof(col("a"), col("b")).as("lh"))
       .filter(col("dk") =!= col("dh") || col("lk") =!= col("lh") ||
         (col("dk").isNull =!= col("dh").isNull) ||
         (col("lk").isNull =!= col("lh").isNull))
@@ -56,9 +56,9 @@ class VecKernelSpec extends AnyFunSuite {
     // length mismatch → null on both forms
     val mm = Seq((Array(1f, 2f), Array(1f, 2f, 3f))).toDF("a", "b")
       .select(VectorFunctions.dot(col("a"), col("b")).as("dk"),
-        VectorFunctions.dotHof(col("a"), col("b")).as("dh"),
+        HofTwins.dotHof(col("a"), col("b")).as("dh"),
         VectorFunctions.l2Sq(col("a"), col("b")).as("lk"),
-        VectorFunctions.l2SqHof(col("a"), col("b")).as("lh")).head()
+        HofTwins.l2SqHof(col("a"), col("b")).as("lh")).head()
     assert((0 to 3).forall(mm.isNullAt))
   }
 
@@ -66,7 +66,7 @@ class VecKernelSpec extends AnyFunSuite {
     val df = Seq((Array(0f, 0f, 0f), Array(1f, 2f, 3f))).toDF("a", "b")
     val r = df.select(
       VectorFunctions.cosine(col("a"), col("b")).as("k"),
-      VectorFunctions.cosineHof(col("a"), col("b")).as("h")).head()
+      HofTwins.cosineHof(col("a"), col("b")).as("h")).head()
     assert(r.getDouble(0) == 0.0 && r.getDouble(1) == 0.0)
   }
 

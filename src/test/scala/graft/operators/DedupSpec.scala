@@ -363,6 +363,45 @@ class DedupSpec extends AnyFunSuite {
     assert(kept(5L) == 4L && kept(13L) == 4L,
       s"survivors report their cluster size: $kept")
   }
+
+  test("bucketPairs equals the a.key = b.key AND a.id < b.id self-join over buckets of 2 to cap members") {
+    val cap = 4
+    val rng = new scala.util.Random(20261020L)
+    // a singleton bucket, buckets of exactly cap and cap + 1 members,
+    // and small ones; ids repeat across buckets, as shingles share docs
+    val sizes = Seq(1, cap, cap + 1, 2, 3, cap, 1, cap + 1)
+    val members = sizes.zipWithIndex.flatMap { case (n, key) =>
+      rng.shuffle((1L to 12L).toList).take(n).map(id => (key.toLong, id, rng.nextInt(1000)))
+    }.toDF("key", "id", "v")
+    val df = members.groupBy(col("key")).agg(count(lit(1)).as("df"))
+    val selfJoin = members.as("a").join(members.as("b"),
+        col("a.key") === col("b.key") && col("a.id") < col("b.id"))
+      .join(df.as("d"), col("a.key") === col("d.key"))
+      .filter(col("d.df").between(2, cap))
+    def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
+      d.collect().map(_.mkString(",")).toSeq.sorted
+    val bare = rows(selfJoin.select(col("a.id"), col("b.id")))
+    assert(bare.size == 2 * (cap * (cap - 1) / 2) + 1 + 3, s"oracle pairs: $bare")
+    assert(rows(Dedup.bucketPairs(members, Seq("key"), Seq("id"), cap)
+      .select(col("p.id_a"), col("p.id_b"))) == bare)
+    assert(rows(Dedup.bucketPairs(members, Seq("key"), Seq("id", "v"), cap)
+        .select(col("p.id_a"), col("p.v_a"), col("p.id_b"), col("p.v_b"))) ==
+      rows(selfJoin.select(col("a.id"), col("a.v"), col("b.id"), col("b.v"))))
+  }
+
+  test("winnow candidate pairs: the capped tier at maxFpDf 10000 equals the join tier at 10001") {
+    val corpus = graft.Tables(spark, SparkFixture.sfDir).documents
+    val maxDf = Dedup.winnowFingerprints(corpus, "doc_id", "text")
+      .select(col("doc_id"), col("fp")).distinct()
+      .groupBy(col("fp")).count().agg(max(col("count"))).head().getLong(0)
+    assert(maxDf <= 10000L, s"a fingerprint's df of $maxDf binds the cap")
+    def pairs(maxFpDf: Int): Seq[(Long, Long, Long)] =
+      Dedup.winnowCandidatePairs(corpus, "doc_id", "text", minShared = 1, maxFpDf = maxFpDf)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    val capped = pairs(10000)
+    assert(capped.nonEmpty, "the fixture corpus shares winnowed fingerprints")
+    assert(capped == pairs(10001))
+  }
 }
 
 class SimilaritySearchSpec extends AnyFunSuite {

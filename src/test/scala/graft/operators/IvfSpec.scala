@@ -110,7 +110,7 @@ class IvfSpec extends AnyFunSuite {
     val want = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
       .crossJoin(queries.select(col("vec_id").as("query_id"), col("embedding").as("qv")))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", VectorFunctions.cosineHof(col("qv"), col("cv")))
+      .withColumn("sim", graft.functions.HofTwins.cosineHof(col("qv"), col("cv")))
       .filter(col("sim") >= 0.25)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -34,6 +34,45 @@ class RestFrontendSpec extends AnyFunSuite {
     assert(m.find(), s"$key not in $json"); m.group(1)
   }
 
+  /** The Events bus as a test sees it: FINISHED operation handles and
+    * CLOSED session ids, in arrival order.
+    */
+  private final class EventTap extends graft.core.Events.Handler {
+    private val finished = new java.util.concurrent.LinkedBlockingQueue[String]()
+    private val closed = new java.util.concurrent.LinkedBlockingQueue[String]()
+    override def onEvent(e: graft.core.Events.Event): Unit = e match {
+      case graft.core.Events.OperationEvent(h, _, "FINISHED", _, _) => finished.put(h)
+      case graft.core.Events.SessionEvent(sid, _, "CLOSED", _) => closed.put(sid)
+      case _ => ()
+    }
+
+    /** Wait up to `seconds` for the FINISHED event of every handle. */
+    def awaitFinished(handles: Seq[String], seconds: Int): Unit = {
+      val deadline = System.nanoTime() + seconds * 1000000000L
+      val pending = scala.collection.mutable.Set(handles: _*)
+      while (pending.nonEmpty) {
+        val h = finished.poll(deadline - System.nanoTime(),
+          java.util.concurrent.TimeUnit.NANOSECONDS)
+        if (h == null) fail(s"no FINISHED event in $seconds s for ${pending.mkString(", ")}")
+        pending -= h
+      }
+    }
+
+    /** Wait, one CLOSED session event at a time, until `engine` holds
+      * `sessions` open sessions.
+      */
+    def awaitSessions(engine: Engine, sessions: Int, seconds: Int): Unit =
+      while (engine.openSessionCount != sessions)
+        if (closed.poll(seconds, java.util.concurrent.TimeUnit.SECONDS) == null)
+          fail(s"${engine.openSessionCount - sessions} engine sessions left open")
+  }
+
+  private def onEvents[A](f: EventTap => A): A = {
+    val tap = new EventTap
+    graft.core.Events.register(tap)
+    try f(tap) finally graft.core.Events.unregister(tap)
+  }
+
   test("session → statement → poll → result lifecycle over HTTP") {
     withServer { (c, base) =>
       val (sc, sbody) = post(c, s"$base/sessions", """{"user": "resty"}""")
@@ -1946,16 +1985,22 @@ class RestFrontendSpec extends AnyFunSuite {
       val sid = extract(post(c, s"$base/sessions", """{"user": "ui-user"}""")._2, "sessionId")
       val opId = extract(post(c, s"$base/sessions/$sid/statements",
         """{"sql": "SELECT 1 AS one"}""")._2, "operationId")
-      val bid = extract(post(c, s"$base/batches",
-        """{"sql": "SELECT count(*) FROM range(1000)"}""")._2, "id")
-      var bstate = ""
-      // 120 s: the full parallel test run shares one box across every
-      // suite's Spark jobs, and this batch's collect has been observed
-      // starved past 30 s there (it finishes in <1 s in isolation).
-      val deadline = System.nanoTime() + 120e9.toLong
-      while (bstate != "FINISHED" && System.nanoTime() < deadline) {
-        bstate = extract(get(c, s"$base/batches/$bid")._2, "state"); Thread.sleep(100)
+      // 120 s for the batch to finish: the full parallel test run shares
+      // one box across every suite's Spark jobs, and this batch's collect
+      // has been observed starved past 30 s there (it finishes in <1 s in
+      // isolation). Once it has, each surface gets 30 s.
+      val bid = onEvents { events =>
+        val bid = extract(post(c, s"$base/batches",
+          """{"sql": "SELECT count(*) FROM range(1000)"}""")._2, "id")
+        events.awaitFinished(Seq(bid), seconds = 120)
+        bid
       }
+      val deadline = System.nanoTime() + 30e9.toLong
+      var bstate = extract(get(c, s"$base/batches/$bid")._2, "state")
+      while (bstate != "FINISHED" && System.nanoTime() < deadline) {
+        Thread.sleep(100); bstate = extract(get(c, s"$base/batches/$bid")._2, "state")
+      }
+      assert(bstate == "FINISHED")
 
       val (sc, sessHtml) = get(c, s"$root/ui/session/$sid")
       assert(sc == 200 && sessHtml.contains("ui-user"), sessHtml)
@@ -1964,12 +2009,9 @@ class RestFrontendSpec extends AnyFunSuite {
       val (oc, opHtml) = get(c, s"$root/ui/operation/$opId")
       assert(oc == 200 && opHtml.contains("SELECT 1 AS one"), opHtml)
 
-      // await the PAGE itself: the batch API and the page render from
-      // the same live op, but the assertion must poll the surface it
-      // checks (a loaded box once caught the render mid-transition).
-      // Fresh deadline — the API poll above may have consumed most of
-      // its own under load, and this is a different surface.
-      val pageDeadline = System.nanoTime() + 120e9.toLong
+      // poll the PAGE itself: the assertion must poll the surface it
+      // checks, with a deadline of its own
+      val pageDeadline = System.nanoTime() + 30e9.toLong
       var (bc, batchHtml) = get(c, s"$root/ui/batch/$bid")
       while (!batchHtml.contains("FINISHED") && System.nanoTime() < pageDeadline) {
         Thread.sleep(100)
@@ -1983,6 +2025,38 @@ class RestFrontendSpec extends AnyFunSuite {
       // unknowns 404 as pages, not stack traces
       assert(get(c, s"$root/ui/session/nope")._1 == 404)
       assert(get(c, s"$root/ui/batch/nope")._1 == 404)
+    }
+  }
+
+  test("SQL batches close their engine sessions once they end and still read FINISHED") {
+    val storeDir = java.nio.file.Files.createTempDirectory("graft-batch-close").toString
+    Seq(None, Some(storeDir)).foreach { dir =>
+      val engine = new Engine(spark)
+      val front = new RestFrontend(engine, port = 0, batchStoreDir = dir)
+      val root = s"http://localhost:${front.start()}"
+      val base = s"$root/api/v1"
+      try {
+        val c = HttpClient.newHttpClient()
+        val baseline = engine.openSessionCount
+        val ids = onEvents { events =>
+          val ids = (1 to 5).map(i => extract(post(c, s"$base/batches",
+            s"""{"sql": "SELECT count(*) FROM range(${i * 1000})"}""")._2, "id"))
+          // 120 s: starved like the UI drill-down test's batch
+          events.awaitFinished(ids, seconds = 120)
+          events.awaitSessions(engine, baseline, seconds = 30)
+          ids
+        }
+        assert(engine.openSessionCount == baseline)
+        val listing = get(c, s"$base/batches")._2
+        ids.foreach { id =>
+          assert(extract(get(c, s"$base/batches/$id")._2, "state") == "FINISHED", s"store $dir")
+          val (lc, log) = get(c, s"$base/batches/$id/localLog")
+          assert(lc == 200 && log.contains("FINISHED"), log)
+          assert(listing.contains(s""""id": "$id", "user": "batch", "state": "FINISHED""""), listing)
+          val (pc, page) = get(c, s"$root/ui/batch/$id")
+          assert(pc == 200 && page.contains("state: FINISHED"), page)
+        }
+      } finally front.stop()
     }
   }
 
