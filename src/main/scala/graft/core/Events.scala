@@ -70,24 +70,6 @@ object Events {
         s""""resource":${Json.quote(resource)},"allowed":false,"ts":$ts}"""
   }
 
-  /** A recall audit of a maintained ANN index (the operational loop
-    * around IvfPqIndex.recallAudit): posted after an append wave with
-    * the measured recall@k against the build-time baseline; `alarm`
-    * fires when recall fell below the configured floor — the retrain
-    * signal, surfaced on the same bus operators already watch
-    * (reference pattern: event-driven ops over kyuubi-events).
-    */
-  final case class IndexAuditEvent(
-      indexPath: String, streamId: String, batchId: Long,
-      recall: Double, baseline: Double, k: Int, nProbe: Int,
-      alarm: Boolean, ts: Long) extends Event {
-    override def asJson: String =
-      s"""{"event":"index_audit","indexPath":${Json.quote(indexPath)},""" +
-        s""""streamId":${Json.quote(streamId)},"batchId":$batchId,""" +
-        s""""recall":$recall,"baseline":$baseline,"k":$k,"nProbe":$nProbe,""" +
-        s""""alarm":$alarm,"ts":$ts}"""
-  }
-
   trait Handler {
     def onEvent(e: Event): Unit
   }

@@ -5,10 +5,10 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 /** The one JSON string writer for graft's hand-built documents (event
-  * lines, REST replies, the oracle SQL map, the python worker protocol,
-  * graft-ctl requests, Bench's error list), and the one reader of the
-  * small JSON documents they receive (REST request bodies, stored batch
-  * descriptors, graft-ctl specs and replies).
+  * lines, REST replies, the oracle SQL map, graft-ctl requests,
+  * Bench's error list), and the one reader of the small JSON documents
+  * they receive (REST request bodies, stored batch descriptors,
+  * graft-ctl specs and replies).
   */
 object Json {
 

@@ -38,10 +38,6 @@ object BinaryFunctions {
   def frameOffsets(bin: Column, frameBytes: Int): Column =
     sequence(lit(1), greatest(length(bin), lit(1)), lit(frameBytes))
 
-  /** Number of `frameBytes`-sized frames (last may be partial). */
-  def frameCount(bin: Column, frameBytes: Int): Column =
-    ceil(length(bin).cast("double") / frameBytes).cast("int")
-
   /** Hex fingerprint of the first `n` bytes (portable frame probe). */
   def headHex(bin: Column, n: Int): Column = hex(substring(bin, 1, n))
 }

@@ -46,13 +46,6 @@ object TextFunctions {
   def distinctShingles(text: Column, n: Int): Column =
     org.apache.spark.sql.graft.TextKernelExprs.shingles(tokens(text), n, distinct = true)
 
-  /** 64-bit hash of one shingle under hash-function index `seed`.
-    * xxhash64 over (seed, value) gives k independent-enough functions
-    * without materializing permutations.
-    */
-  def seededHash(value: Column, seed: Int): Column =
-    xxhash64(lit(seed), value)
-
   /** MinHash signature: array of `k` minimums of derived hashes over the
     * shingle set. Each shingle string is xxhash64'd ONCE (native
     * [[org.apache.spark.sql.graft.ArrayXxh64Expr]] kernel — the old
@@ -186,13 +179,6 @@ object TextFunctions {
     */
   def contentFingerprint(text: Column): Column =
     md5(normalizeWs(lower(text)).cast("binary"))
-
-  /** Stopword-marker hit count: occurrences of a literal word in the
-    * text, counted by length difference (exact, locale-free, and
-    * identical in any SQL engine — used by the lang-id oracle).
-    */
-  def literalHits(text: Column, word: String): Column =
-    ((length(text) - length(regexp_replace(text, java.util.regex.Pattern.quote(word), ""))) / word.length).cast("int")
 
   /** Tiny n-gram/stopword language guesser. Scores each language by
     * marker-token hits over the tokenized text and returns the argmax

@@ -169,17 +169,6 @@ object CorpusLm {
         .select(col(sourceCol).as("source"), explode(toks(col(textCol))).as("__tok"))
         .groupBy(col("source"), col("__tok")).agg(count(lit(1)).as("__c"))
         .persist())
-    sourceDriftKlFromCounts(st)
-  }
-
-  /** The KL fold over a PREBUILT `(source, __tok, __c)` token-count
-    * table — the piece the streaming twin reuses per trigger: a
-    * Structured Streaming stateful count aggregation maintains exactly
-    * this table (state is vocab × sources, not data-sized), and folding
-    * it here yields the same integer micro-nat statistic the batch path
-    * computes ([[graft.streaming.Streams.sourceDriftStream]]).
-    */
-  def sourceDriftKlFromCounts(st: DataFrame): DataFrame = {
     val perSource = st.groupBy(col("source")).agg(sum(col("__c")).as("__ns"))
     val perToken = st.groupBy(col("__tok")).agg(sum(col("__c")).as("__cw"))
     val total = perSource.agg(sum(col("__ns")).as("__n"))
@@ -201,28 +190,20 @@ object CorpusLm {
     * sources bend the curve (flat head = keyword stuffing, cliff
     * tail = fixed-vocabulary boilerplate). The five regression sums
     * fold integer milli-log terms (the same quantize-once recipe as
-    * the KL drift), so the statistic is associative, engine-exact,
-    * and shared verbatim with the streaming twin via
-    * [[zipfSlopeFromCounts]]. One (source, token) shuffle; the
+    * the KL drift), so the statistic is associative and
+    * engine-exact: rank by (count desc, token asc),
+    * x = ⌊ln(rank)·1e3⌋, y = ⌊ln(count)·1e3⌋ as BIGINT, slope =
+    * (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²) computed once in double from
+    * the exact integer sums. One (source, token) shuffle; the
     * frequency table is vocabulary-sized, so the per-source rank
     * window is bounded regardless of corpus size.
     *
     * Returns one row per source: (source, n_terms, zipf_slope).
     */
-  def zipfSlope(df: DataFrame, sourceCol: String, textCol: String): DataFrame =
-    zipfSlopeFromCounts(
-      SkewTools.spreadIfNarrow(df, col(textCol))
-        .select(col(sourceCol).as("source"), explode(toks(col(textCol))).as("__tok"))
-        .groupBy(col("source"), col("__tok")).agg(count(lit(1)).as("__c")))
-
-  /** The Zipf fold over a PREBUILT `(source, __tok, __c)` count table
-    * — the piece the streaming twin reuses per trigger, exactly like
-    * [[sourceDriftKlFromCounts]]: rank by (count desc, token asc),
-    * x = ⌊ln(rank)·1e3⌋, y = ⌊ln(count)·1e3⌋ as BIGINT, slope =
-    * (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²) computed once in double from
-    * the exact integer sums.
-    */
-  def zipfSlopeFromCounts(st: DataFrame): DataFrame = {
+  def zipfSlope(df: DataFrame, sourceCol: String, textCol: String): DataFrame = {
+    val st = SkewTools.spreadIfNarrow(df, col(textCol))
+      .select(col(sourceCol).as("source"), explode(toks(col(textCol))).as("__tok"))
+      .groupBy(col("source"), col("__tok")).agg(count(lit(1)).as("__c"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("__c").desc, col("__tok").asc)
     st.withColumn("__rank", row_number().over(w))
@@ -309,74 +290,6 @@ object CorpusLm {
       .withColumn("keep",
         col("n_pairs") === 0L ||
           col("sum_lp_micro") > lit(meanLpMicroFloor) * col("n_pairs"))
-  }
-
-  /** The bigram model as a bounded driver-side artifact: micro-nat
-    * log-probs for the `maxVocab` most frequent adjacent-pair bigrams
-    * (ties to the lexicographically smaller pair), keyed "w1 w2",
-    * plus the out-of-vocabulary pair log-prob (one unseen pseudo-count
-    * over the corpus pair total). Same contract as [[unigramModel]]:
-    * the collect is index-artifact-sized — real LM vocabularies are
-    * bounded — and the artifact is the train-offline half of
-    * [[graft.streaming.Streams.bigramGateStream]].
-    */
-  def bigramModel(df: DataFrame, textCol: String,
-      maxVocab: Int = 65536): (Map[String, Long], Long) = {
-    val t = df.select(toks(col(textCol)).as("__t"))
-    val pairs = t
-      .filter(size(col("__t")) >= 2)
-      .select(explode(arrays_zip(
-        slice(col("__t"), lit(1), size(col("__t")) - 1),
-        slice(col("__t"), lit(2), size(col("__t")) - 1))).as("__p"))
-      .select(col("__p.0").as("__w1"), col("__p.1").as("__w2"))
-    val bigram = pairs.groupBy(col("__w1"), col("__w2"))
-      .agg(count(lit(1)).as("__c12"))
-    val cached = bigram.persist()
-    try {
-      val totalPairs = cached.agg(sum(col("__c12"))).head.getLong(0)
-      val context = cached.groupBy(col("__w1")).agg(sum(col("__c12")).as("__c1"))
-      val top = cached.join(context, "__w1")
-        .orderBy(col("__c12").desc, col("__w1").asc, col("__w2").asc)
-        .limit(maxVocab)
-        .collect()
-        .map { r =>
-          s"${r.getString(0)} ${r.getString(1)}" ->
-            math.floor(math.log(
-              r.getLong(2).toDouble / r.getLong(3).toDouble) * 1000000.0).toLong
-        }
-        .toMap
-      val oov = math.floor(
-        math.log(1.0 / (totalPairs.toDouble + 1.0)) * 1000000.0).toLong
-      (top, oov)
-    } finally cached.unpersist()
-  }
-
-  /** The unigram model as a bounded driver-side artifact: micro-nat
-    * log-probs for the `maxVocab` most frequent tokens (ties to the
-    * lexicographically smaller token), plus the out-of-vocabulary
-    * log-prob (one unseen pseudo-count). LM vocabularies are bounded
-    * by construction (tokenizers ship 32k-256k entries), so unlike
-    * result data this collect is index-artifact-sized — the
-    * train-offline half of the streaming quality gate
-    * ([[graft.streaming.Streams.lmGateStream]] is the score-online
-    * half).
-    */
-  def unigramModel(df: DataFrame, textCol: String,
-      maxVocab: Int = 65536): (Map[String, Long], Long) = {
-    val freq = df.select(explode(toks(col(textCol))).as("__tok"))
-      .groupBy(col("__tok")).agg(count(lit(1)).as("__cnt"))
-    val total = freq.agg(sum(col("__cnt"))).head.getLong(0)
-    val top = freq
-      .orderBy(col("__cnt").desc, col("__tok").asc)
-      .limit(maxVocab)
-      .collect()
-      .map { r =>
-        r.getString(0) ->
-          math.floor(math.log(r.getLong(1).toDouble / total.toDouble) * 1000000.0).toLong
-      }
-      .toMap
-    val oov = math.floor(math.log(1.0 / (total.toDouble + 1.0)) * 1000000.0).toLong
-    (top, oov)
   }
 
   /** CCNet-style perplexity BUCKETS (Wenzek et al., "CCNet: Extracting

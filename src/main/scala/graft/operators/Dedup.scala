@@ -202,8 +202,7 @@ object Dedup {
     * [[bandIndexOf]] index: every (doc, corpus doc) pair sharing at
     * least one band, with the number of distinct colliding bands as
     * the match strength. Map-side signature compute, one equi join on
-    * (band, key) — the batch twin of
-    * [[graft.streaming.Streams.nearDupGateStream]].
+    * (band, key).
     *
     * The bucket-capacity guard lives in [[bandIndexOf]] (build time),
     * which bounds this join's fanout to `bands × maxBandDf` rows per
@@ -226,232 +225,6 @@ object Dedup {
       .join(bandIndex, Seq("band", "key"))
       .groupBy(col("id"), col("corpus_id"))
       .agg(count(lit(1)).as("n_bands"))
-  }
-
-  // ---- persisted band-index lifecycle: build once, probe many ----
-  //
-  // The text-near-dup twin of IvfPqIndex's artifact contract
-  // (IvfPqIndex.buildIndex/openIndex): the corpus' band index is a
-  // plain parquet artifact any later job can open, the banding
-  // parameters ride along so a probe session cannot silently probe
-  // with mismatched banding, and the index stays a lazy DISTRIBUTED
-  // parquet scan — opening reads only the one-row meta to the driver.
-
-  /** Build the [[bandIndexOf]] index of `corpus` and persist it at
-    * `path`:
-    *   path/bands  (band, key, corpus_id)  — data-sized, distributed
-    *   path/meta   (shingle_size, bands, rows_per_band, max_band_df)
-    * The build-time `maxBandDf` cap bounds the artifact (overfull
-    * boilerplate buckets are dropped wholesale).
-    */
-  def buildBandIndex(
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      path: String,
-      shingleSize: Int = 3,
-      bands: Int = 16,
-      rowsPerBand: Int = 4,
-      maxBandDf: Int = 1000): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    bandIndexOf(corpus, idCol, textCol, shingleSize, bands, rowsPerBand, maxBandDf)
-      .write.mode("overwrite").parquet(s"$path/bands")
-    writeBandMeta(spark, path, shingleSize, bands, rowsPerBand, maxBandDf,
-      appends = 0, bandsDir = "bands")
-    // a rebuild over a previously-compacted artifact resets the
-    // pointer — drop the now-orphaned version dirs
-    pruneVersionedDirs(spark, path, "bands", keep = Set("bands"))
-  }
-
-  /** The one-row meta artifact; `appends` counts append batches since
-    * the last build/compaction — the staleness signal for the
-    * per-batch df cap.
-    */
-  private def writeBandMeta(spark: org.apache.spark.sql.SparkSession, path: String,
-      shingleSize: Int, bands: Int, rowsPerBand: Int, maxBandDf: Int,
-      appends: Int, bandsDir: String): Unit = {
-    import spark.implicits._
-    Seq((shingleSize, bands, rowsPerBand, maxBandDf, appends, bandsDir))
-      .toDF("shingle_size", "bands", "rows_per_band", "max_band_df", "appends",
-        "bands_dir")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** A persisted band index opened for probing: [[collisions]] and
-    * the streaming twin read nothing but the artifact — the raw
-    * corpus is not needed (nor available) at probe time.
-    */
-  final class OpenedBandIndex(
-      val shingleSize: Int,
-      val bands: Int,
-      val rowsPerBand: Int,
-      val maxBandDf: Int,
-      val appends: Int,
-      val bandsDir: String,
-      val index: DataFrame) {
-
-    /** Batch probe — [[bandCollisions]] with the index's own banding
-      * parameters (mismatched probe banding is impossible by
-      * construction).
-      */
-    def collisions(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-      bandCollisions(docs, idCol, textCol, index, shingleSize, bands, rowsPerBand)
-  }
-
-  /** Incremental band-index maintenance: band NEW documents with the
-    * persisted index's own banding parameters and append — no rebuild,
-    * no touch of existing rows (the text twin of
-    * [[IvfPqIndex.appendToIndex]]). The df cap applies per append
-    * batch, so a band key's bucket is bounded by cap × (appends+1) in
-    * the worst case — [[compactBandIndex]] re-applies the cap globally
-    * and resets the meta's `appends` staleness counter. Caller appends
-    * each doc id at most once; banding is deterministic, so
-    * re-appending would only duplicate rows (compaction also drops
-    * those), never corrupt them.
-    */
-  def appendToBandIndex(newDocs: DataFrame, idCol: String, textCol: String,
-      path: String): Unit = {
-    val spark = newDocs.sparkSession
-    val opened = openBandIndex(spark, path)
-    bandIndexOf(newDocs, idCol, textCol, opened.shingleSize, opened.bands,
-        opened.rowsPerBand, opened.maxBandDf)
-      .write.mode("append").parquet(s"$path/${opened.bandsDir}")
-    writeBandMeta(spark, path, opened.shingleSize, opened.bands,
-      opened.rowsPerBand, opened.maxBandDf, opened.appends + 1, opened.bandsDir)
-  }
-
-  /** Re-apply the df cap GLOBALLY over the accumulated bands artifact
-    * and reset the staleness counter: append-only maintenance bounds a
-    * bucket only per batch (worst case cap × (appends+1) rows), so an
-    * operator watching [[OpenedBandIndex.appends]] runs this
-    * periodically to restore the build-time bound. Also deduplicates
-    * rows a replayed append may have double-written.
-    *
-    * The swap is VERSIONED, never in-place: the compacted artifact
-    * lands in a fresh `bands_vN` sibling, the meta's `bands_dir`
-    * pointer flips to it, and only versions OLDER than the previous
-    * one are pruned — so an open racing the compaction resolves the
-    * pointer to either the old or the new artifact, both of which
-    * exist (a delete-then-rename swap had an ENOENT window between
-    * the delete and the rename).
-    */
-  def compactBandIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val opened = openBandIndex(spark, path)
-    val idx = opened.index.distinct()
-    val keep = idx.groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= opened.maxBandDf)
-      .select(col("band"), col("key"))
-    val curDir = opened.bandsDir
-    val nextDir = nextVersionedDir("bands", curDir)
-    idx.join(keep, Seq("band", "key"), "left_semi")
-      .write.mode("overwrite").parquet(s"$path/$nextDir")
-    // flip the pointer; readers that already resolved curDir keep a
-    // live directory until the compaction AFTER this one
-    writeBandMeta(spark, path, opened.shingleSize, opened.bands,
-      opened.rowsPerBand, opened.maxBandDf, appends = 0, bandsDir = nextDir)
-    pruneVersionedDirs(spark, path, "bands", keep = Set(curDir, nextDir))
-  }
-
-  /** bands → bands_v1 → bands_v2 → … (shared by the codes artifacts). */
-  private[operators] def nextVersionedDir(base: String, current: String): String = {
-    val n =
-      if (current == base) 0
-      else current.stripPrefix(s"${base}_v").toInt
-    s"${base}_v${n + 1}"
-  }
-
-  /** Delete every `base`/`base_vN` sibling not in `keep` — the
-    * previous version survives one compaction cycle for readers that
-    * resolved the pointer just before the flip.
-    */
-  private[operators] def pruneVersionedDirs(spark: org.apache.spark.sql.SparkSession,
-      path: String, base: String, keep: Set[String]): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(hconf)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      val versioned = name == base || (name.startsWith(s"${base}_v") &&
-        name.stripPrefix(s"${base}_v").forall(_.isDigit))
-      if (st.isDirectory && versioned && !keep.contains(name)) {
-        try fs.delete(st.getPath, true) catch { case _: Throwable => }
-      }
-    }
-  }
-
-  /** Open a persisted band index: the one-row meta is read to the
-    * driver; the bands table stays a lazy distributed parquet scan.
-    * [[OpenedBandIndex.appends]] reports batches appended since the
-    * last build/compaction — the per-batch-cap staleness signal.
-    */
-  def openBandIndex(spark: org.apache.spark.sql.SparkSession, path: String): OpenedBandIndex = {
-    // head() of the ONE-row meta artifact — a bounded scalar read like
-    // the IVF-PQ centroid loads, never result rows (PlanQualitySpec's
-    // collect sweep stays in force for everything else in this file)
-    val metaDf = spark.read.parquet(s"$path/meta")
-    val meta = metaDf.head()
-    // follow the bands_dir pointer (pre-r13 artifacts carry none: the
-    // unversioned "bands" dir). If the pointed dir vanished under us —
-    // a compaction pruned it between our meta read and this open —
-    // one meta re-read lands on the current version.
-    def dirOf(m: org.apache.spark.sql.Row, df: DataFrame): String =
-      if (df.schema.fieldNames.contains("bands_dir")) m.getAs[String]("bands_dir")
-      else "bands"
-    val bandsDir = dirOf(meta, metaDf)
-    val bandsDf =
-      try spark.read.parquet(s"$path/$bandsDir")
-      catch {
-        case _: Throwable =>
-          val refreshed = spark.read.parquet(s"$path/meta")
-          spark.read.parquet(s"$path/${dirOf(refreshed.head(), refreshed)}")
-      }
-    new OpenedBandIndex(
-      meta.getAs[Int]("shingle_size"),
-      meta.getAs[Int]("bands"),
-      meta.getAs[Int]("rows_per_band"),
-      meta.getAs[Int]("max_band_df"),
-      // pre-r12 artifacts carry no appends column — read as fresh
-      if (metaDf.schema.fieldNames.contains("appends")) meta.getAs[Int]("appends") else 0,
-      bandsDir,
-      bandsDf)
-  }
-
-  /** Collision-recall audit of a persisted band index — the near-dup
-    * twin of IvfPqIndex.recallAudit: for each sample document, how many
-    * of its GROUND-TRUTH band collisions the serving index recovers.
-    * Ground truth is an uncapped fresh banding of the CURRENT corpus
-    * (the same shingle/band/row parameters, maxBandDf = ∞), so the
-    * audit surfaces exactly what maintenance lost: per-batch cap
-    * starvation (a boilerplate cluster bigger than the cap arriving in
-    * ONE append batch loses its buckets wholesale), build-time capped
-    * buckets, and compaction drops. Self-collisions (a probe doc
-    * matching its own corpus row) are excluded from both sides.
-    *
-    * Returns (id, n_truth, n_hit) per sample document with at least one
-    * ground-truth collision. Scale shape: the fresh banding is one
-    * map-side corpus pass + the bucket count aggregation; both probe
-    * joins carry only the bounded sample's exploded band keys — run it
-    * on a schedule (or per append wave), not per record.
-    */
-  def collisionRecallAudit(opened: OpenedBandIndex, corpus: DataFrame,
-      sampleDocs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val truthIndex = bandIndexOf(corpus, idCol, textCol, opened.shingleSize,
-      opened.bands, opened.rowsPerBand, maxBandDf = Int.MaxValue)
-    val truth = bandCollisions(sampleDocs, idCol, textCol, truthIndex,
-        opened.shingleSize, opened.bands, opened.rowsPerBand)
-      .filter(col("id") =!= col("corpus_id"))
-      .select(col("id"), col("corpus_id"))
-    val got = opened.collisions(sampleDocs, idCol, textCol)
-      .filter(col("id") =!= col("corpus_id"))
-      .select(col("id"), col("corpus_id"))
-    val hits = truth.join(got, Seq("id", "corpus_id"), "left_semi")
-      .groupBy(col("id")).agg(count(lit(1)).as("n_hit"))
-    truth.groupBy(col("id")).agg(count(lit(1)).as("n_truth"))
-      .join(hits, Seq("id"), "left")
-      .select(col("id"), col("n_truth"), coalesce(col("n_hit"), lit(0L)).as("n_hit"))
   }
 
   /** Full near-dup pipeline: MinHash-LSH candidate generation verified
@@ -1182,82 +955,5 @@ object Dedup {
       .select(col("__gid").as(idCol), col("n_grams"), col("n_novel"),
         (col("n_novel").cast("double") / col("n_grams").cast("double"))
           .as("novel_frac"))
-  }
-
-  // ---------------------------------------------------------------
-  // Seen-gram index: the EXACT incremental complement of gramNovelty —
-  // a persisted append-only set of every shingle the pipeline has
-  // ingested, probed at ingest time to score each arriving document's
-  // novelty against everything before it (d25's Bloom gate is the
-  // approximate version; this one is exact and supports first-owner
-  // credit). Append-only means no tombstones and no rewrites, so the
-  // artifact needs NO versioned-swap machinery: new distinct grams
-  // land as additional parquet files and racing readers simply see a
-  // slightly older set. Grams are stored as raw strings (collision-
-  // free); at extreme scale store xxhash64(g) instead and accept the
-  // 2^-64 collision deflation.
-  // ---------------------------------------------------------------
-
-  /** Create the seen-gram set from an initial corpus (possibly empty). */
-  def buildGramIndex(docs: DataFrame, idCol: String, textCol: String,
-      path: String, shingleSize: Int = 3): Unit =
-    docs.select(explode(distinctShingles(col(textCol), shingleSize))
-        .as("g"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$path/grams")
-
-  /** The seen set as a lazy distributed scan. */
-  def openGramIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(s"$path/grams")
-
-  /** Score one batch of documents against the CURRENT seen set and
-    * ingest their grams: per doc, distinct-gram count, novel count
-    * (gram absent from the index AND this doc is the batch's first
-    * owner by min id — the same credit rule as [[gramNovelty]]), and
-    * the fraction. The probe broadcasts the BATCH's gram set over the
-    * index scan (map-side; the index is the big side), and only
-    * genuinely new distinct grams are appended. Returns the per-doc
-    * novelty frame; idempotency markers are the streaming caller's
-    * contract.
-    */
-  def scoreAndIngestGrams(batch: DataFrame, idCol: String, textCol: String,
-      path: String, shingleSize: Int = 3): DataFrame = {
-    val spark = batch.sparkSession
-    val grams = SketchRegistry.track(
-      batch.select(col(idCol).as("__gid"),
-        explode(distinctShingles(col(textCol), shingleSize)).as("g"))
-        .persist())
-    grams.count() // materialize BEFORE the index grows below
-    val batchGramSet = grams.select(col("g")).distinct()
-    val seen = openGramIndex(spark, path)
-    // map-side over the index: the batch side broadcasts. distinct()
-    // (batch-gram-bounded) guards the left join below against duplicate
-    // gram rows in the parquet — e.g. two streams racing to append the
-    // same gram to one shared path — which would otherwise fan the join
-    // out and permanently inflate n_grams for every later batch.
-    val seenHits = seen.join(broadcast(batchGramSet), Seq("g"), "left_semi")
-      .distinct()
-    val firstOwner = grams.groupBy(col("g")).agg(min(col("__gid")).as("__first"))
-    val scored = grams
-      .join(firstOwner, "g")
-      .join(seenHits.withColumn("__seen", lit(1)), Seq("g"), "left")
-      .groupBy(col("__gid"))
-      .agg(count(lit(1)).as("n_grams"),
-        sum(when(col("__seen").isNull && col("__first") === col("__gid"),
-          lit(1L)).otherwise(lit(0L))).as("n_novel"))
-      .select(col("__gid").as(idCol), col("n_grams"), col("n_novel"),
-        (col("n_novel").cast("double") / col("n_grams").cast("double"))
-          .as("novel_frac"))
-      .localCheckpoint() // score against the PRE-append set, then grow it
-    // cut the new-gram lineage from the index scan BEFORE appending to
-    // the same directory (a write that scans its own target double-reads)
-    val newGrams = batchGramSet.join(seenHits, Seq("g"), "left_anti")
-      .localCheckpoint()
-    newGrams.write.mode("append").parquet(s"$path/grams")
-    SketchRegistry.freeLocalCheckpoint(newGrams)
-    grams.unpersist()
-    // the checkpointed result is tracked for release at statement close
-    SketchRegistry.track(scored)
   }
 }

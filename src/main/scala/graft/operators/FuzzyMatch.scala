@@ -11,11 +11,10 @@ import org.apache.spark.sql.functions._
   * explicit: near names sharing no token are out by design (raise
   * recall with more aggressive normalization, not a wider join).
   *
-  * Both [[pairs]] (within-corpus, d70) and [[matchesAgainst]] (probe
-  * vs corpus — the ingest-time serving half) keep the same block:
-  * tokens explode map-side, the only pair stage is the equi join on
-  * the token, and `distinct` collapses multi-token agreements before
-  * the distance is computed.
+  * [[pairs]] (within-corpus, d70) keeps the block: tokens explode
+  * map-side, the only pair stage is the equi join on the token, and
+  * `distinct` collapses multi-token agreements before the distance is
+  * computed.
   */
 object FuzzyMatch {
 
@@ -39,32 +38,5 @@ object FuzzyMatch {
         levenshtein(col("name_a"), col("name_b")).cast("long"))
       .filter(col("dist") <= maxDist)
       .select(col("key_a"), col("key_b"), col("dist"))
-  }
-
-  /** Probe names vs a static corpus — the serving half: the corpus'
-    * rare-token block index is computed once (df stats over the
-    * CORPUS, so gate decisions don't drift with probe traffic); each
-    * probe explodes into its tokens and equi-joins the index. Returns
-    * (probe_key, corpus_key, dist) per matched pair.
-    */
-  def matchesAgainst(probe: DataFrame, corpus: DataFrame,
-      idCol: String, nameCol: String,
-      dfCap: Int = 25, maxDist: Int = 2): DataFrame = {
-    val ctoks = corpus.select(col(idCol).as("corpus_key"),
-      col(nameCol).as("corpus_name"),
-      explode(split(col(nameCol), " ")).as("tok"))
-    val rare = ctoks.groupBy(col("tok")).agg(count(lit(1)).as("dfc"))
-      .filter(col("dfc") <= dfCap).select(col("tok"))
-    val blocked = ctoks.join(rare, Seq("tok"))
-    probe.select(col(idCol).as("probe_key"), col(nameCol).as("probe_name"),
-        explode(split(col(nameCol), " ")).as("tok"))
-      .join(blocked, Seq("tok"))
-      .select(col("probe_key"), col("probe_name"),
-        col("corpus_key"), col("corpus_name"))
-      .distinct()
-      .withColumn("dist",
-        levenshtein(col("probe_name"), col("corpus_name")).cast("long"))
-      .filter(col("dist") <= maxDist)
-      .select(col("probe_key"), col("corpus_key"), col("dist"))
   }
 }

@@ -8,15 +8,14 @@ import org.apache.spark.sql.functions._
   * from. Components are floor-quantized to micro units FIRST (the
   * SQ-error audit's trick), so each pairwise product is an exact
   * integer and the corpus sum is associative — order-independent at
-  * any partitioning AND at any batch split, which is what lets the
-  * streaming maintenance loop (Streams.gramianAppendStream) merge
-  * per-batch increments into a persisted artifact without ever
-  * re-scanning the corpus. Shape: each row map-side explodes to its
-  * DIM·(DIM+1)/2 products, hash-aggregated with map-side combine onto
-  * DIM² keys — the shuffle moves O(partitions · DIM²) partial sums,
-  * never row data. At ~1e9 rows the Long partial sums would near
-  * overflow (1e12 per product): switch the sum column to
-  * DECIMAL(38,0) there; the quantization contract is unchanged.
+  * any partitioning AND at any batch split: the increments of two
+  * batches sum to the increments of their union. Shape: each row
+  * map-side explodes to its DIM·(DIM+1)/2 products, hash-aggregated
+  * with map-side combine onto DIM² keys — the shuffle moves
+  * O(partitions · DIM²) partial sums, never row data. At ~1e9 rows
+  * the Long partial sums would near overflow (1e12 per product):
+  * switch the sum column to DECIMAL(38,0) there; the quantization
+  * contract is unchanged.
   */
 object Gramian {
 
@@ -30,7 +29,7 @@ object Gramian {
           (element_at(col("q"), i + 1) * element_at(col("q"), j + 1)).as("p")))))
     // spread a narrow scan before the DIM²/2-way explode (guide §2.5):
     // the per-row fanout is ~2080× and a single-row-group input would
-    // otherwise run it on one core (r17; no-op on streaming/wide inputs)
+    // otherwise run it on one core (r17; no-op on wide inputs)
     SkewTools.spreadIfNarrow(vectors, col(vecCol)).select(q.as("q"))
       .select(explode(pairs).as("t"))
       .groupBy(col("t.i").as("i"), col("t.j").as("j"))

@@ -189,33 +189,6 @@ object IvfIndex {
     * bounded-heap aggregate as [[ivfTopK]] (map-side combine), not a
     * window over the scored set.
     */
-  /** Corpus side of the SemDeDup serving path: every vector with its
-    * nearest-centroid list id, the partition key the probe join meets.
-    */
-  def assignLists(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]]): DataFrame =
-    corpus.select(col(idCol).as("vec_id"), col(vecCol).as("cv"),
-      nearestList(col(vecCol), centroids).as("list_id"))
-
-  /** Semantic near-dup matches of `probes` against an
-    * [[assignLists]]-shaped corpus: probes take one map-side
-    * nearest-centroid assignment, meet the corpus in the list-keyed
-    * equi-join with the micro-batch-sized probe side BROADCAST, and
-    * pairs whose micro-floored cosine reaches `tauMicro` are flagged —
-    * the serving half of v44's SemDeDup, reused by the streaming
-    * ingest gate. Candidate count is |probes|·(n/L), never |probes|·n.
-    */
-  def semdedupMatches(probes: DataFrame, idCol: String, vecCol: String,
-      corpusAssigned: DataFrame, centroids: Array[Array[Double]],
-      tauMicro: Long): DataFrame = {
-    val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("pv"),
-      nearestList(col(vecCol), centroids).as("list_id"))
-    corpusAssigned.join(broadcast(p), Seq("list_id"))
-      .withColumn("cos_micro", floor(cosine(col("pv"), col("cv")) * lit(1000000.0)))
-      .filter(col("cos_micro") >= lit(tauMicro))
-      .select(col("probe_id"), col("vec_id").as("corpus_id"), col("cos_micro"))
-  }
-
   def knnGraph(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], k: Int, nProbe: Int): DataFrame = {
     // Spread a narrow scan BEFORE the per-row centroid scoring: the

@@ -210,8 +210,8 @@ object IvfPqIndex {
     // pointer — drop the now-orphaned version dirs and every
     // tombstone set (the fresh encode contains exactly the corpus
     // passed in; stale deletes must not mask the new rows)
-    Dedup.pruneVersionedDirs(spark, path, "codes", keep = Set("codes"))
-    Dedup.pruneVersionedDirs(spark, s"$path/tombstones", "codes", keep = Set.empty)
+    pruneVersionedDirs(spark, path, "codes", keep = Set("codes"))
+    pruneVersionedDirs(spark, s"$path/tombstones", "codes", keep = Set.empty)
   }
 
   /** Run independent driver actions on a small thread pool and wait
@@ -399,11 +399,11 @@ object IvfPqIndex {
 
   /** Compact the codes artifact — the maintenance companion of
     * [[appendToIndex]]: append-only ingest accumulates one small file
-    * set per batch (and a replay that slipped past a sink guard can
-    * double-write rows). Compaction rewrites `path/codes` as
-    * `targetFiles` files with exact-duplicate rows dropped, through a
-    * versioned sibling directory + meta-pointer flip so a concurrent
-    * open sees either the old or the new artifact, never ENOENT.
+    * set per batch (and a replayed append can double-write rows).
+    * Compaction rewrites `path/codes` as `targetFiles` files with
+    * exact-duplicate rows dropped, through a versioned sibling
+    * directory + meta-pointer flip so a concurrent open sees either the
+    * old or the new artifact, never ENOENT.
     * Quantizers are untouched and the PROBE-VISIBLE codes set is
     * unchanged (tombstoned rows — already invisible to probes — are
     * dropped physically and the new version starts tombstone-free),
@@ -413,7 +413,7 @@ object IvfPqIndex {
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFiles: Int = 32): Unit = {
     val curDir = currentCodesDir(spark, path)
-    val nextDir = Dedup.nextVersionedDir("codes", curDir)
+    val nextDir = nextVersionedDir("codes", curDir)
     val base = spark.read.parquet(s"$path/$curDir").distinct()
     // apply the logical deletes physically: the new version starts
     // tombstone-free (the LSM merge step of deleteFromIndex)
@@ -428,9 +428,37 @@ object IvfPqIndex {
     // reader on the old pointer keeps a consistent (codes, deletes)
     // pair); older ones are unreachable and dropped.
     writeCodesMeta(spark, path, nextDir)
-    Dedup.pruneVersionedDirs(spark, path, "codes", keep = Set(curDir, nextDir))
-    Dedup.pruneVersionedDirs(spark, s"$path/tombstones", "codes",
+    pruneVersionedDirs(spark, path, "codes", keep = Set(curDir, nextDir))
+    pruneVersionedDirs(spark, s"$path/tombstones", "codes",
       keep = Set(curDir))
+  }
+
+  /** codes → codes_v1 → codes_v2 → … */
+  private[operators] def nextVersionedDir(base: String, current: String): String = {
+    val n =
+      if (current == base) 0
+      else current.stripPrefix(s"${base}_v").toInt
+    s"${base}_v${n + 1}"
+  }
+
+  /** Delete every `base`/`base_vN` sibling not in `keep` — the
+    * previous version survives one compaction cycle for readers that
+    * resolved the pointer just before the flip.
+    */
+  private[operators] def pruneVersionedDirs(spark: org.apache.spark.sql.SparkSession,
+      path: String, base: String, keep: Set[String]): Unit = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(hconf)
+    if (!fs.exists(root)) return
+    fs.listStatus(root).foreach { st =>
+      val name = st.getPath.getName
+      val versioned = name == base || (name.startsWith(s"${base}_v") &&
+        name.stripPrefix(s"${base}_v").forall(_.isDigit))
+      if (st.isDirectory && versioned && !keep.contains(name)) {
+        try fs.delete(st.getPath, true) catch { case _: Throwable => }
+      }
+    }
   }
 
   /** Retrain — the REPAIR half of [[appendToIndex]]'s drift contract:

@@ -725,35 +725,6 @@ object Multimodal {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** Probe-vs-corpus variant of [[phashNearDupPairs]]: each probe
-    * fingerprint is checked against a (typically much larger) corpus
-    * fingerprint table — the ingest-time "have I seen this image?"
-    * gate. Same banding recall guarantee; the probe side of the band
-    * join is micro-batch-sized, so Catalyst broadcasts it and the
-    * corpus band index is scanned map-side, never shuffled.
-    */
-  def phashMatches(probe: DataFrame, corpus: DataFrame,
-      maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3,
-      "4×16 banding only guarantees recall for Hamming distance <= 3")
-    def clean(df: DataFrame) =
-      df.select(col("id"), col("b0"), col("b1"), col("b2"), col("b3"))
-        .filter(col("b0").isNotNull)
-    val p = clean(probe)
-    val c = clean(corpus)
-    val cand = bandExplode(p).toDF("probe_id", "j", "bv")
-      .join(bandExplode(c).toDF("corpus_id", "j", "bv"), Seq("j", "bv"))
-      .select(col("probe_id"), col("corpus_id"))
-      .distinct()
-    cand
-      .join(p.toDF("probe_id", "a0", "a1", "a2", "a3"), Seq("probe_id"))
-      .join(c.toDF("corpus_id", "c0", "c1", "c2", "c3"), Seq("corpus_id"))
-      .withColumn("hamming", hammingOf(
-        Seq("a0", "a1", "a2", "a3"), Seq("c0", "c1", "c2", "c3")))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("probe_id"), col("corpus_id"), col("hamming"))
-  }
-
   /** ======== BATCHED DECODE ========
     * One decoder init per PARTITION (not per row), rows streamed
     * through — exactly how a real codec/model binding runs on

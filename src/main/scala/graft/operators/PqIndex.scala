@@ -20,15 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object PqIndex {
 
-  /** Nearest code id in one subspace: argmin squared-L2 against the
-    * codebook, ties to the larger code id (mirrored by the oracle's
-    * ORDER BY). A single-subspace call into the native PQ encode kernel
-    * ([[org.apache.spark.sql.graft.PqEncodeExpr]]) — the composed
-    * array_max-of-structs form costs k janino-compiled l2Sq folds.
-    */
-  def nearestCode(sub: Column, codebook: Array[Array[Double]]): Column =
-    element_at(org.apache.spark.sql.graft.PqExpr.encode(sub, Array(codebook)), 1)
-
   /** Train `m` codebooks of `k` centroids each: seed each subspace with
     * the `k` lowest-id subvectors, then `iterations` Lloyd steps
     * (argmin-L2 assign → per-code mean).

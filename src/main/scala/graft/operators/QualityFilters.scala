@@ -78,20 +78,6 @@ object QualityFilters {
         col("n_tokens") >= minTokens && col("ttr") >= minTtr &&
           col("max_token_frac") <= maxTokenFrac)
 
-  /** The gate decision as ONE reusable predicate over the raw text —
-    * same metrics and thresholds as [[qualityGate]], for callers that
-    * need a map-side filter instead of the per-doc audit frame (the
-    * streaming pipeline: an audit-frame + semi-join shape would be a
-    * stream-stream join). Catalyst CSE collapses the repeated tokens()
-    * subtree inside the single projection.
-    */
-  def gatePredicate(text: Column, minTokens: Int, minTtr: Double, maxTokenFrac: Double): Column = {
-    val t = tokens(text)
-    size(t) >= minTokens &&
-      (size(array_distinct(t)).cast("double") / size(t)) >= minTtr &&
-      topElementFrac(t) <= maxTokenFrac
-  }
-
   // Canned PII patterns (RE2-compatible so external engines can mirror
   // them; Java regex accepts the same syntax).
   val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
@@ -132,34 +118,18 @@ object QualityFilters {
   def lengthQuantileKeep(
       docs: DataFrame, idCol: String, textCol: String,
       permille: Int = 900): DataFrame = {
-    val lens = docs.select(col(idCol), length(col(textCol)).cast("long").as("len"))
-    lens.crossJoin(broadcast(lengthThresholdFrame(lens, permille)))
-      .filter(col("len") >= col("thr"))
-      .select(col(idCol), col("len"))
-  }
-
-  private def lengthThresholdFrame(lens: DataFrame, permille: Int): DataFrame = {
     require(permille >= 1 && permille <= 1000, "permille in [1, 1000]")
+    val lens = docs.select(col(idCol), length(col(textCol)).cast("long").as("len"))
     val hist = lens.groupBy(col("len")).agg(count(lit(1)).as("cnt"))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("len")).rowsBetween(Long.MinValue, 0)
     val cum = hist.withColumn("cum", sum(col("cnt")).over(w))
     val tot = lens.agg(count(lit(1)).as("n"))
-    cum.crossJoin(broadcast(tot))
+    val thr = cum.crossJoin(broadcast(tot))
       .filter(col("cum") >= expr(s"($permille * n + 999) div 1000"))
       .agg(min(col("len")).as("thr"))
-  }
-
-  /** The gate's threshold as a SCALAR artifact — compute offline on
-    * the corpus, then gate a stream map-side with it
-    * (graft.streaming.Streams.lengthGateStream), the same
-    * train-offline/score-online split as the LM gates. head() of a
-    * one-row aggregate — a bounded artifact read, never result rows.
-    */
-  def lengthQuantileThreshold(
-      docs: DataFrame, idCol: String, textCol: String,
-      permille: Int = 900): Long = {
-    val lens = docs.select(col(idCol), length(col(textCol)).cast("long").as("len"))
-    lengthThresholdFrame(lens, permille).head().getLong(0)
+    lens.crossJoin(broadcast(thr))
+      .filter(col("len") >= col("thr"))
+      .select(col(idCol), col("len"))
   }
 }

@@ -49,7 +49,6 @@ object SkewTools {
     * repartition never fires and no extra full-text shuffle is paid.
     */
   def spreadIfNarrow(df: DataFrame, key: Column): DataFrame = {
-    if (df.isStreaming) return df // micro-batch planner owns partitioning
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, key)
@@ -71,12 +70,9 @@ object SkewTools {
     * spark.sql.shuffle.partitions: the session's scale-set knob (cores
     * locally, cluster-sized in production), never a local constant —
     * exactly the pre-AQE operating point for these bounded shuffles.
-    * No-ops on streaming frames (micro-batch planner owns
-    * partitioning).
     */
   def pinFanout(df: DataFrame, keys: Column*): DataFrame =
-    if (df.isStreaming) df
-    else df.repartition(
+    df.repartition(
       df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
 
   /** Per-key frequency report for deciding WHETHER to salt: top-k keys

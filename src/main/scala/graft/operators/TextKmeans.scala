@@ -131,7 +131,7 @@ object TextKmeans {
       // both branches untouched. Pure partitioning — the training
       // doubles fold in the same per-row order, so the model is
       // bit-identical either way.
-      val narrow = !docs.isStreaming &&
+      val narrow =
         docs.rdd.getNumPartitions < docs.sparkSession.sparkContext.defaultParallelism
       val d = SkewTools.spreadIfNarrow(docs, col(idCol))
       val idf = trainIdf(d, idCol, textCol, dim)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.graft.ZorderBytes
 
 /** `OPTIMIZE ... ZORDER BY`-style table clustering (reference command:
@@ -27,22 +27,5 @@ object ZorderOptimize {
   def cluster(df: DataFrame, cols: Seq[Column], numPartitions: Int): DataFrame = {
     val key = ZorderBytes.zorder(cols: _*)
     df.repartitionByRange(numPartitions, key).sortWithinPartitions(key)
-  }
-
-  /** Local variant: rebalance to `numPartitions`, sort inside each —
-    * cheaper than the global range exchange when files just need
-    * intra-file clustering (reference conf zorderGlobalSort=false).
-    */
-  def clusterLocal(df: DataFrame, cols: Seq[Column], numPartitions: Int): DataFrame = {
-    val key = ZorderBytes.zorder(cols: _*)
-    df.repartition(numPartitions).sortWithinPartitions(key)
-  }
-
-  /** Rewrite a parquet path in z-order (the command form's effect). */
-  def optimizePath(
-      spark: SparkSession, path: String, outPath: String, cols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.col
-    cluster(spark.read.parquet(path), cols.map(col))
-      .write.mode("overwrite").parquet(outPath)
   }
 }

@@ -258,7 +258,7 @@ object RelationalQueries {
         .agg(sum(col("k")).as("sum_k"), count(lit(1)).as("n"))
     },
 
-    // --- Time-bucketed aggregation (batch twin of streaming window) ---
+    // --- Time-bucketed aggregation ---
     "q20_events_hourly" -> { (s, dir) =>
       val t = Tables(s, dir)
       t.events
@@ -594,12 +594,11 @@ object RelationalQueries {
 
     // --- PREQUENTIAL anomaly flags: each hour judged against the
     //     hours strictly BEFORE it (expanding frame) — what a live
-    //     monitor that cannot see the future actually computes, and
-    //     the batch twin of Streams.anomalyStream (StreamsSpec pins
-    //     stream == batch on the closed prefix). Same integer z²
-    //     inequality as q40 with cumulative N/S/Q; hours with fewer
-    //     than two predecessors never flag (no variance estimate
-    //     yet — `false && null` collapses to false in both engines). ---
+    //     monitor that cannot see the future actually computes. Same
+    //     integer z² inequality as q40 with cumulative N/S/Q; hours
+    //     with fewer than two predecessors never flag (no variance
+    //     estimate yet — `false && null` collapses to false in both
+    //     engines). ---
     "q41_running_anomaly" -> { (s, dir) =>
       val w = Window.partitionBy(col("event_type")).orderBy(col("hour"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -952,9 +951,7 @@ object RelationalQueries {
     //     engines compute bit-identically) — the latency/size monitor
     //     read. Identical scale shape to q54: a (type, cents)
     //     histogram bounded by types × the value span, a per-type
-    //     cumulative walk over it, rank-based thresholds with ties.
-    //     Also the BATCH TWIN of the streaming rollup monitor
-    //     (Streams.percentilesFromRollup). ---
+    //     cumulative walk over it, rank-based thresholds with ties. ---
     "q55_value_percentiles" -> { (s, dir) =>
       val vals = Tables(s, dir).events
         .select(col("event_type"),

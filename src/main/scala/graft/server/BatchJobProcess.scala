@@ -19,8 +19,9 @@ import java.util.concurrent.ConcurrentLinkedDeque
   *
   * Every command carries `graft.batch.tag=<id>` on its command line —
   * the reference's KYUUBI_BATCH_ID_KEY tag that lets a restarted
-  * server FIND a still-running batch (via the ApplicationOperation
-  * seam) instead of double-submitting it.
+  * server FIND a still-running batch
+  * (`RestFrontend.findBatchProcessByTag`) instead of double-submitting
+  * it.
   */
 final class BatchJobBuilder(
     sparkHome: Option[String] = sys.env.get("SPARK_HOME"),

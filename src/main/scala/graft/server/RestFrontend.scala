@@ -974,8 +974,8 @@ class RestFrontend(engine: Engine, port: Int = 0, batchStoreDir: Option[String] 
 
       case ("GET", "batches" :: id :: Nil) =>
         // Batch status speaks both vocabularies: the operation state and
-        // the cluster-application state the ApplicationOperation seam
-        // derives from it (PENDING/RUNNING/FINISHED/KILLED/FAILED —
+        // the cluster-application state [[ApplicationState]] derives
+        // from it (PENDING/RUNNING/FINISHED/KILLED/FAILED —
         // identical wording to a YARN report / K8s pod-phase mapping).
         Option(batches.get(id)) match {
           case Some(b) =>
@@ -2074,8 +2074,8 @@ object RestFrontend {
   }
 
   /** Live batch-child lookup by the `graft.batch.tag=<id>` its command
-    * line carries (the LocalApplicationOperation pattern; recovery's
-    * find-before-resubmit). Excludes this process itself.
+    * line carries (the reference's JpsApplicationOperation pattern;
+    * recovery's find-before-resubmit). Excludes this process itself.
     */
   private[server] def findBatchProcessByTag(id: String): Option[ProcessHandle] = {
     import scala.jdk.CollectionConverters._

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   * reference object (broadcast with the plan, never shuffled).
   *
   * Bit-compatibility contract: every double operation reproduces the
-  * fold order of the HOF forms they replace (PqIndex.nearestCode /
+  * fold order of the HOF forms they replace (PqIndex.encode /
   * lookupTable / adcDot) — left-to-right accumulation from 0.0, float
   * operands widened to double per element — so the DuckDB oracle that
   * mirrors that fold order stays bit-identical, and argmin tie-breaks

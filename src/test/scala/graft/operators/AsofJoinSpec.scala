@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
@@ -39,28 +38,6 @@ class AsofJoinSpec extends AnyFunSuite {
         ((Option(r.get(2)), Option(r.get(3))))).toMap
     assert(got("a") == ((Some(100L), Some("x"))))
     assert(got("b") == ((None, None)))
-  }
-
-  test("batch as-of join and streaming as-of enrichment agree on real events") {
-    // The two operators implement the same point-in-time semantics with
-    // different plans (union+window vs broadcast timeline scan); they
-    // must produce identical picks on the same data.
-    val ev = graft.Tables(spark, graft.SparkFixture.sfDir).events
-    val views = ev.filter(col("event_type") === "view")
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max(col("event_id")).as("view_id"))
-      .withColumn("view_ts", col("ts"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getAs[Long]("event_id") ->
-        Option(r.getAs[java.lang.Long]("asof_view_id"))).toMap
-    val viaJoin = pairs(AsofJoin.asof(clicks, views, Seq("user_id"), "ts", "ts",
-      Seq("view_id")))
-    val viaEnrich = pairs(graft.streaming.Streams.asofEnrich(clicks, views,
-      Seq("user_id"), streamTime = "ts", dimTime = "view_ts",
-      dimCols = Seq("view_id")))
-    assert(viaJoin.nonEmpty && viaJoin == viaEnrich)
   }
 
   test("NULL right-column values come from the matched row, not an older one") {

@@ -612,163 +612,4 @@ class SimilaritySearchSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert((1L to 8L).forall(c => dfltHits.contains((100L, c))))
   }
-
-  test("band index round-trips through parquet; a fresh session probes the artifact only") {
-    val spark = graft.SparkFixture.spark
-    import spark.implicits._
-    val corpus = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "one two three four five six seven eight nine"),
-      (3L, "totally different content about glacier melt rates")
-    ).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("bandidx").toString
-    try {
-      Dedup.buildBandIndex(corpus, "doc_id", "text", path,
-        shingleSize = 3, bands = 16, rowsPerBand = 4, maxBandDf = 50)
-      val probes = Seq(
-        (100L, "alpha beta gamma delta epsilon zeta eta theta"),
-        (101L, "nothing like anything in the corpus at all whatsoever")
-      ).toDF("doc_id", "text")
-      val inMem = Dedup.bandCollisions(probes, "doc_id", "text",
-          Dedup.bandIndexOf(corpus, "doc_id", "text", maxBandDf = 50))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-
-      // a FRESH session (no registered corpus, no cached frames) opens
-      // the artifact and must reproduce the in-memory collisions
-      val s2 = spark.newSession()
-      val opened = Dedup.openBandIndex(s2, path)
-      assert(opened.shingleSize == 3 && opened.bands == 16 &&
-        opened.rowsPerBand == 4 && opened.maxBandDf == 50,
-        "banding parameters must ride the artifact")
-      import s2.implicits._
-      val probes2 = Seq(
-        (100L, "alpha beta gamma delta epsilon zeta eta theta"),
-        (101L, "nothing like anything in the corpus at all whatsoever")
-      ).toDF("doc_id", "text")
-      val viaArtifact = opened.collisions(probes2, "doc_id", "text")
-      val got = viaArtifact.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got == inMem, s"artifact probe must equal in-memory probe: $got vs $inMem")
-      assert(got.exists(_._1 == 100L) && !got.exists(_._1 == 101L))
-      // the probe plan reads the persisted index, never the corpus
-      val plan = viaArtifact.queryExecution.executedPlan.toString
-      assert(plan.contains(new java.io.File(path).getName),
-        s"probe must scan the index artifact:\n${plan.take(800)}")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-    }
-  }
-
-  test("appendToBandIndex: incremental ingest equals one-shot build when the cap is slack") {
-    val spark = graft.SparkFixture.spark
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "one two three four five six seven eight nine"),
-      (3L, "totally different content about glacier melt rates"),
-      (4L, "yet another unrelated musing on deep sea vents")
-    ).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("bandidx2").toString
-    try {
-      Dedup.buildBandIndex(docs.filter($"doc_id" <= 2), "doc_id", "text", path)
-      Dedup.appendToBandIndex(docs.filter($"doc_id" > 2), "doc_id", "text", path)
-      val opened = Dedup.openBandIndex(spark.newSession(), path)
-      val got = opened.index.collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-      val oneShot = Dedup.bandIndexOf(docs, "doc_id", "text").collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got == oneShot, "append must equal the one-shot build on a cap-slack corpus")
-      // probes see the appended docs
-      val probes = Seq((100L, "yet another unrelated musing on deep sea vents"))
-        .toDF("doc_id", "text")
-      val hits = opened.collisions(probes, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(hits.contains((100L, 4L)), s"appended doc must be probeable: $hits")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-    }
-  }
-
-  test("compactBandIndex re-applies the cap globally and resets the staleness counter") {
-    val spark = graft.SparkFixture.spark
-    import spark.implicits._
-    val clone = "the same boilerplate text repeated verbatim in every shard"
-    val base = Seq((1L, clone), (2L, clone),
-      (10L, "totally different content about glacier melt rates")).toDF("doc_id", "text")
-    val more = Seq((3L, clone), (4L, clone)).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("bandidx3").toString
-    try {
-      Dedup.buildBandIndex(base, "doc_id", "text", path, maxBandDf = 2)
-      Dedup.appendToBandIndex(more, "doc_id", "text", path)
-      val stale = Dedup.openBandIndex(spark.newSession(), path)
-      assert(stale.appends == 1, "append must bump the meta staleness counter")
-      // the per-batch cap let the clone buckets grow past the global cap
-      assert(stale.index.groupBy("band", "key").count().filter($"count" > 2).count() > 0,
-        "setup must actually push a bucket past the cap")
-      Dedup.compactBandIndex(spark, path)
-      val compacted = Dedup.openBandIndex(spark.newSession(), path)
-      assert(compacted.appends == 0, "compaction must reset the staleness counter")
-      assert(compacted.index.groupBy("band", "key").count().filter($"count" > 2).count() == 0,
-        "no bucket may exceed the cap after compaction")
-      // the compacted artifact equals a fresh one-shot build at the same cap
-      val got = compacted.index.collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-      val want = Dedup.bandIndexOf(base.union(more), "doc_id", "text", maxBandDf = 2)
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got == want, "compacted artifact must equal a fresh build")
-      // probe behavior: the over-cap clone bucket is pruned wholesale,
-      // under-cap buckets stay probeable
-      val probes = Seq((100L, clone),
-        (101L, "totally different content about glacier melt rates")).toDF("doc_id", "text")
-      val hits = compacted.collisions(probes, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(!hits.exists(_._1 == 100L), s"over-cap bucket must be pruned: $hits")
-      assert(hits.exists(_._1 == 101L), s"under-cap buckets stay probeable: $hits")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-    }
-  }
-
-  test("compaction swap is visible-atomic: versioned dirs + meta pointer, no ENOENT window") {
-    val spark = graft.SparkFixture.spark
-    import spark.implicits._
-    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "epsilon zeta eta theta"))
-      .toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("bandidx-swap").toString
-    try {
-      Dedup.buildBandIndex(docs, "doc_id", "text", path, maxBandDf = 2)
-      // a reader that resolved the pointer BEFORE the compaction…
-      val before = Dedup.openBandIndex(spark, path)
-      assert(before.bandsDir == "bands")
-      Dedup.compactBandIndex(spark, path)
-      // …keeps a live directory: the previous version survives one cycle
-      assert(before.index.count() > 0,
-        "pre-compaction reader must stay readable after the swap")
-      assert(new java.io.File(s"$path/bands").isDirectory)
-      val after = Dedup.openBandIndex(spark, path)
-      assert(after.bandsDir == "bands_v1", after.bandsDir)
-      // an open issued between flip and prune (emulated: both dirs on
-      // disk right now) succeeds and probes identically
-      assert(after.index.collect().toSet == before.index.collect().toSet)
-      // second cycle prunes only the OLDEST version
-      Dedup.compactBandIndex(spark, path)
-      val after2 = Dedup.openBandIndex(spark, path)
-      assert(after2.bandsDir == "bands_v2", after2.bandsDir)
-      assert(!new java.io.File(s"$path/bands").exists(),
-        "versions older than the previous one are pruned")
-      assert(new java.io.File(s"$path/bands_v1").isDirectory,
-        "the previous version must be retained")
-      // appends land in the POINTED dir and stay probeable
-      Dedup.appendToBandIndex(
-        Seq((7L, "iota kappa lambda mu")).toDF("doc_id", "text"),
-        "doc_id", "text", path)
-      val withAppend = Dedup.openBandIndex(spark.newSession(), path)
-      assert(withAppend.appends == 1 && withAppend.bandsDir == "bands_v2")
-      val hits = withAppend.collisions(
-          Seq((100L, "iota kappa lambda mu")).toDF("doc_id", "text"), "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(hits.contains((100L, 7L)), s"append into the pointed dir must be probeable: $hits")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-    }
-  }
 }

@@ -1081,7 +1081,7 @@ class RestFrontendSpec extends AnyFunSuite {
         Thread.sleep(100)
       }
       assert(state == "FINISHED")
-      // the ApplicationOperation vocabulary rides along: a finished
+      // the ApplicationState vocabulary rides along: a finished
       // batch reports appState FINISHED (what a YARN report / K8s pod
       // mapping would say for the same outcome)
       val (_, stFull) = get(c, s"$base/batches/$id")

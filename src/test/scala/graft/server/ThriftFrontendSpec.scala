@@ -314,8 +314,10 @@ class ThriftFrontendSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val client = new TCLIService.Client(new TBinaryProtocol(sock))
       val sess = client.OpenSession(new TOpenSessionReq())
+      // the statement must outlast one long-polled status call
+      // (Operation.StatusWaitMs), or the first reply is already FINISHED
       val req = new TExecuteStatementReq(sess.getSessionHandle,
-        "SELECT count(*) FROM (SELECT xxhash64(cast(id AS string)) h FROM range(20000000)) WHERE h % 7 = 0")
+        "SELECT count(*) FROM (SELECT xxhash64(cast(id AS string)) h FROM range(200000000)) WHERE h % 7 = 0")
       req.setRunAsync(true)
       val exec = client.ExecuteStatement(req)
       var state = TOperationState.INITIALIZED_STATE
